@@ -10,17 +10,24 @@ import graft.schema.Schemas
 
 /** The detection pipeline: sysmon events in, MITRE-tagged alerts out.
   *
-  * Topology (one query, one source scan per micro-batch — the Spark
-  * equivalent of the reference's statement set / union view,
-  * /root/reference/rules/sigma/windows-process-access.sql:72-601 and
-  * …/windows-process-creation.sql:107-135):
+  * Deployed topology ([[start]]: one query, one source scan and one JSON
+  * parse per micro-batch — the Spark equivalent of the reference's
+  * statement set / union view, windows-process-access.sql:72-601 and
+  * windows-process-creation.sql:107-135):
   *
-  *   kafka/json → from_json(PERMISSIVE) → null-filter → N×(filter→project)
-  *     → unionAll → to_json → sink
+  *   kafka/json → from_json(PERMISSIVE) → null-filter
+  *     → rule_dispatch (all N predicates) → explode fired ids
+  *     → metadata-literal lookup → to_json → sink
+  *
+  * ([[alertsMerged]]). The reference statement set's own shape — N×
+  * (filter→project) → UNION ALL ([[alerts]]) — is kept as the
+  * bag-equal reference spelling for `sig_fanout_counts` and the
+  * equivalence specs; it is not deployed, because every union branch
+  * re-scans and re-parses the source.
   *
   * The middle section is a pure DataFrame => DataFrame, so the identical
   * logical plan runs in batch (tests, oracle harness) and streaming
-  * (production). All N rule predicates are Catalyst expressions inside one
+  * (production). All N rule predicates run inside one
   * whole-stage-codegen'd stage: no shuffle, no state, driver never sees a
   * row. Scale: the plan is embarrassingly parallel in source partitions;
   * 1000 executors each evaluate all rules on their slice, so rule fan-out
@@ -92,9 +99,14 @@ object AlertPipeline {
         rule.description, rule.references, rule.version, rule.source))
         .as("rule"))
 
-  /** The full fan-out: UNION ALL of every rule's filter→project. Bag
-    * semantics — an event matching k rules emits k alerts, exactly like
-    * the reference's k INSERTs / UNION ALL branches.
+  /** The reference statement-set shape: UNION ALL of every rule's
+    * filter→project. Bag semantics — an event matching k rules emits k
+    * alerts, exactly like the reference's k INSERTs / UNION ALL branches.
+    * Not the deployed path ([[start]] runs [[alertsMerged]], bag-equal by
+    * spec and sharing its DuckDB oracle): each branch carries its own
+    * copy of the source, so a streaming union scans and parses the input
+    * once per rule. Kept for `sig_fanout_counts` and the equivalence
+    * specs.
     *
     * The union is reduced as a BALANCED tree, not a left fold (round 19):
     * every `unionAll` call creates a Dataset and eagerly re-analyzes its
@@ -106,8 +118,10 @@ object AlertPipeline {
     * alone). Pairwise halving analyzes O(N log N) tree nodes instead; the
     * optimizer's CombineUnions flattens either shape to the identical
     * N-child Union, so the physical plan is byte-identical. */
-  def alerts(sysmon: DataFrame, rules: Seq[RuleDef]): DataFrame =
+  def alerts(sysmon: DataFrame, rules: Seq[RuleDef]): DataFrame = {
+    require(rules.nonEmpty, "alerts needs at least one rule")
     balancedUnion(rules.map(ruleAlerts(sysmon, _)))
+  }
 
   /** unionAll over a balanced pair tree — same bag semantics and final
     * physical plan as `reduce(_ unionAll _)`, O(N log N) analyzer work
@@ -167,7 +181,8 @@ object AlertPipeline {
     * vs 1.5s merged for the same 25-rule fan-out counts. */
   def alertsMerged(sysmon: DataFrame, rules: Seq[RuleDef],
       literalMaxBytes: Long = MetaLiteralMaxBytes,
-      dispatchExpr: Boolean = DefaultDispatchExpr): DataFrame = {
+      dispatchExpr: Boolean = true): DataFrame = {
+    require(rules.nonEmpty, "alertsMerged needs at least one rule")
     val withFired =
       if (dispatchExpr)
         // ONE expression node holding the whole battery
@@ -179,8 +194,9 @@ object AlertPipeline {
           sysmon.sparkSession, rules.map(_.where),
           col("event_data"), col("event_id"))))
       else {
-        // legacy expression-tree spelling, kept for A/B measurement and as
-        // an escape hatch (GRAFT_DISPATCH_TREE=1): array_remove(-1) drops
+        // legacy expression-tree spelling, reachable only by an explicit
+        // dispatchExpr = false (PlanAuditSpec's JIT positive control and
+        // RuleDispatchExprSpec's equivalence check): array_remove(-1) drops
         // the non-fired sentinels exactly like filter(x -> x >= 0) but is
         // a codegen'd collection function — the lambda spelling evaluated
         // an interpreted N-element filter PER EVENT (PlanAudit HOF detector)
@@ -224,20 +240,14 @@ object AlertPipeline {
         r.module, r.version, r.source)
     })
 
-  /** Default dispatch spelling: the O(1)-plan [[graft.functions.RuleDispatchExpr]]
-    * unless GRAFT_DISPATCH_TREE is set (the measurement escape hatch back
-    * to the r12 when/otherwise expression tree). */
-  private[graft] val DefaultDispatchExpr: Boolean =
-    !sys.env.contains("GRAFT_DISPATCH_TREE")
-
   /** One-shot WARN for the legacy tree spelling in a session whose
     * hugeMethodLimit would put the fused N-rule dispatch in the silent
     * 8-64 KB HotSpot dead zone (r12 verdict #6: a consumer session built
     * without SessionDefaults re-entered it at ~25 corpus-sized rules —
     * the fused method runs INTERPRETED with no log line otherwise). The
     * default rule_dispatch path is immune (per-rule methods); this fires
-    * only for the escape hatch. ~15 corpus rules ≈ 8 KB of fused dispatch
-    * bytecode (the r12 TriggerProbe measurement). */
+    * only for an explicit dispatchExpr = false. ~15 corpus rules ≈ 8 KB of
+    * fused dispatch bytecode (the r12 TriggerProbe measurement). */
   @volatile private[engine] var warnedDeadZone = false
   private def warnIfJitDeadZone(df: DataFrame, nRules: Int): Unit = {
     val limit = df.sparkSession.conf.get("spark.sql.codegen.hugeMethodLimit", "65535").toInt
@@ -500,11 +510,13 @@ object AlertPipeline {
 
   /** S7 statement-set alternative: the reference's 17-INSERT statement set
     * shares one source and one job (windows-process-access.sql:72-601).
-    * Our primary mapping is the UNION ALL plan ([[alerts]]); when rules
-    * must reach DIFFERENT sinks, this fans one streaming query out to N
-    * writers per micro-batch — the batch is computed once (persisted),
-    * still one source scan, one checkpoint, exactly like the statement
-    * set's shared-scan semantics (SURVEY §2.1 S7). */
+    * [[start]] maps it to ONE sink fed by the merged dispatch
+    * ([[alertsMerged]]); the UNION ALL plan ([[alerts]]) is its reference
+    * shape, kept for `sig_fanout_counts` and the equivalence specs. When
+    * rules must reach DIFFERENT sinks, this fans one streaming query out
+    * to N writers per micro-batch — the batch is computed once
+    * (persisted), still one source scan, one checkpoint, exactly like the
+    * statement set's shared-scan semantics (SURVEY §2.1 S7). */
   def foreachBatchFanOut(alertsDf: DataFrame,
       sinks: Seq[DataFrame => Unit]): DataStreamWriter[Row] =
     alertsDf.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -514,21 +526,28 @@ object AlertPipeline {
       ()
     }
 
-  /** End-to-end streaming job from resolved config (S5 templating): any
-    * [[Sources]] source → watermark → rule fan-out → any [[Sources]] sink,
-    * as ONE streaming query. `trigger=availableNow` selects the bounded
-    * replay mode (process every record already in the source, commit, then
-    * stop — the batch-replay shape for file-source reprocessing); any
-    * other value is a ProcessingTime interval, default continuous. */
-  def start(spark: SparkSession, rules: Seq[RuleDef], conf: Map[String, String]): StreamingQuery = {
-    val src = Sources.source(spark, conf)
-    val watermarked = src.withWatermark("timestamp", conf.getOrElse("watermark", "5 seconds"))
-    val trigger = conf.getOrElse("trigger", "0 seconds") match {
+  /** The `trigger` conf: `availableNow` selects the bounded replay mode
+    * (process every record already in the source, commit, then stop — the
+    * batch-replay shape for file-source reprocessing); any other value is
+    * a ProcessingTime interval, default continuous. */
+  private def trigger(conf: Map[String, String]): Trigger =
+    conf.getOrElse("trigger", "0 seconds") match {
       case "availableNow" => Trigger.AvailableNow()
       case interval => Trigger.ProcessingTime(interval)
     }
-    Sources.sink(alerts(watermarked, rules), conf)
-      .trigger(trigger)
+
+  /** End-to-end streaming job from resolved config (S5 templating): any
+    * [[Sources]] source → watermark → merged rule dispatch
+    * ([[alertsMerged]]) → any [[Sources]] sink, as ONE streaming query with
+    * one source scan and one JSON parse per trigger. The sink row is the
+    * reference's 5-column alert schema, the same as [[alerts]] writes
+    * (AlertPipelineSpec pins the parity). Trigger per [[trigger]]. */
+  def start(spark: SparkSession, rules: Seq[RuleDef], conf: Map[String, String]): StreamingQuery = {
+    require(rules.nonEmpty, "start needs at least one rule")
+    val src = Sources.source(spark, conf)
+    val watermarked = src.withWatermark("timestamp", conf.getOrElse("watermark", "5 seconds"))
+    Sources.sink(alertsMerged(watermarked, rules), conf)
+      .trigger(trigger(conf))
       .start()
   }
 
@@ -558,13 +577,9 @@ object AlertPipeline {
     val watermarked = src.withWatermark("timestamp", conf.getOrElse("watermark", "5 seconds"))
     val combined = alertsCombined(watermarked, stateless, timeframed)
       .drop("rule_name")
-    val trigger = conf.getOrElse("trigger", "0 seconds") match {
-      case "availableNow" => Trigger.AvailableNow()
-      case interval => Trigger.ProcessingTime(interval)
-    }
     Sources.sink(combined, conf)
       .outputMode(conf.getOrElse("outputMode", "update"))
-      .trigger(trigger)
+      .trigger(trigger(conf))
       .start()
   }
 
@@ -597,13 +612,9 @@ object AlertPipeline {
       .withWatermark("timestamp", c2.getOrElse("watermark", "5 seconds"))
     val alerts = graft.streaming.SequenceRules.alertsFor(src, rule)
       .drop("rule_name")
-    val trigger = c2.getOrElse("trigger", "0 seconds") match {
-      case "availableNow" => Trigger.AvailableNow()
-      case interval => Trigger.ProcessingTime(interval)
-    }
     Sources.sink(alerts, c2)
       .outputMode("append")
-      .trigger(trigger)
+      .trigger(trigger(c2))
       .start()
   }
 }

@@ -162,6 +162,32 @@ class AlertPipelineSpec extends SparkSpec {
     assert(union.nonEmpty && union == merged)
   }
 
+  test("merged dispatch writes the union fan-out's 5-column sink schema") {
+    // start() deploys alertsMerged; an existing files/parquet sink path or
+    // Kafka consumer must keep seeing the row alerts() used to write
+    import org.apache.spark.sql.types.DataType
+    val df = AlertPipeline.sysmonFrame(spark, Seq(ev()))
+    val union = AlertPipeline.alerts(df, ReferenceCorpus.active).schema
+    val merged = AlertPipeline.alertsMerged(df, ReferenceCorpus.active).schema
+    assert(merged.fieldNames.toSeq == Seq("computer_name", "host", "event", "threat", "rule"))
+    assert(merged.fieldNames.toSeq == union.fieldNames.toSeq)
+    for ((m, u) <- merged.fields.zip(union.fields))
+      assert(DataType.equalsIgnoreNullability(m.dataType, u.dataType),
+        s"${m.name}: ${m.dataType.simpleString} vs ${u.dataType.simpleString}")
+  }
+
+  test("an empty rule list fails at construction, not inside Spark") {
+    val df = AlertPipeline.sysmonFrame(spark, Seq(ev()))
+    val union = intercept[IllegalArgumentException](AlertPipeline.alerts(df, Nil))
+    assert(union.getMessage.contains("alerts needs at least one rule"))
+    val merged = intercept[IllegalArgumentException](AlertPipeline.alertsMerged(df, Nil))
+    assert(merged.getMessage.contains("alertsMerged needs at least one rule"))
+    val started = intercept[IllegalArgumentException](AlertPipeline.start(spark, Nil,
+      Map("source.type" -> "files", "source.path" -> "unused",
+        "sink.type" -> "files", "sink.path" -> "unused")))
+    assert(started.getMessage.contains("start needs at least one rule"))
+  }
+
   test("merged dispatch scales to a 500-rule fan-out (SURVEY §4 plan size)") {
     import graft.compile.dsl._
     // 500 synthetic rules: distinct TargetImage suffixes; rule i matches

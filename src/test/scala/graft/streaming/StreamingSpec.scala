@@ -431,6 +431,60 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() == 1)
   }
 
+  test("start deploys the merged dispatch: one source scan, no Union, the union fan-out's alert bag") {
+    // jobs.Main's default deployment over a files source, with the 25
+    // active rules. Planted: an event firing >= 2 rules, its duplicate
+    // (start has no dedup, so it must alert twice), an event firing
+    // nothing and a malformed line.
+    val rules = ReferenceCorpus.active
+    val inDir = java.nio.file.Files.createTempDirectory("graft-dep-in")
+    val outDir = java.nio.file.Files.createTempDirectory("graft-dep-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-dep-ckpt").toString
+    val multi = """{"computer_name":"pc1","event_id":10,"host":"h1","uuid":"m-1",""" +
+      """"event_data":{"TargetImage":"C:\\Windows\\System32\\lsass.exe","GrantedAccess":"0x1410",""" +
+      """"SourceImage":"C:\\evil\\dump.exe","CallTrace":"UNKNOWN(1)|UNKNOWN(2)"}}"""
+    val none = """{"computer_name":"pc2","event_id":10,"host":"h2","uuid":"n-1",""" +
+      """"event_data":{"TargetImage":"C:\\x\\calc.exe","CallTrace":"C:\\x.dll+1"}}"""
+    java.nio.file.Files.writeString(inDir.resolve("events.json"),
+      Seq(multi, none, "{not json", multi).mkString("", "\n", "\n"))
+    val conf = Map(
+      "source.type" -> "files", "source.path" -> inDir.toString,
+      "sink.type" -> "files", "sink.path" -> outDir, "checkpoint" -> ckpt,
+      "trigger" -> "availableNow")
+    val q = AlertPipeline.start(spark, rules, conf)
+    try assert(q.awaitTermination(120000), "availableNow query did not self-terminate")
+    finally if (q.isActive) q.stop()
+
+    // the deployed shape: one streaming source relation and no Union, so
+    // each trigger scans and parses the input once, not once per rule
+    val plan = q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.logicalPlan
+    assert(plan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.isEmpty,
+      plan.treeString)
+    assert(plan.collectLeaves().count(_.isStreaming) == 1, plan.treeString)
+
+    // the same lines through the reference union shape, in batch. Event
+    // times on the files source are processing time, so they are checked
+    // for shape (start = end = time, non-null), not value.
+    def canon(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.select(to_json(struct(col("computer_name"), col("host"),
+        col("event").dropFields("start", "end", "time"), col("threat"), col("rule"))))
+        .collect().map(_.getString(0)).sorted.toSeq
+    val sink = spark.read.parquet(outDir)
+    val batch = AlertPipeline.alerts(AlertPipeline.parseJson(
+      spark.read.text(inDir.toString).withColumn("timestamp", current_timestamp())), rules)
+    val deployed = canon(sink)
+    assert(deployed == canon(batch), s"deployed=$deployed")
+    val multiAlerts = deployed.count(_.contains("\"m-1\""))
+    assert(multiAlerts >= 4 && multiAlerts % 2 == 0, s"m-1 alerted $multiAlerts times")
+    assert(!deployed.exists(_.contains("\"n-1\"")))
+    assert(sink.filter(col("event.start").isNull ||
+      col("event.start") =!= col("event.end") ||
+      col("event.end") =!= col("event.time")).isEmpty)
+  }
+
   test("mixed Sigma repo deploys as ONE combined query: compileDirAll -> startCombined (r15)") {
     // the full user story the r14 verdict asked for: a rule repo with a
     // real correlation rule deploys without hand-building TimeframeRules
