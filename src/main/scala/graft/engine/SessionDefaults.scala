@@ -5,6 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Library-recommended SparkSession configuration, applied by every
   * graft-owned entry point (benches, Verify, jobs, probes) and documented
   * as the deployment baseline for users who build their own sessions.
+  * Every setting stays overridable: `jobs.Main` folds its `--conf spark.*`
+  * pairs onto the builder AFTER this baseline, and a user-built session
+  * may call `.config(...)` after [[apply]].
   *
   * `spark.sql.codegen.hugeMethodLimit=8000` — Spark's default (65535)
   * keeps whole-stage fusion for any generated method Janino can compile,
@@ -19,13 +22,30 @@ import org.apache.spark.sql.SparkSession
   * aligns Spark's fallback threshold with the JVM's compile ceiling, so
   * "fused" always implies "JIT-able". PlanAudit's dead-zone report lists
   * the stages that take the per-operator path under this setting.
+  *
+  * `spark.sql.artifact.isolation.enabled=false` — Spark 4.1's
+  * `CodeGenerator` caches compiled classes keyed on (thread context
+  * classloader, generated source). With artifact isolation on (Spark's
+  * default) each session gets its own artifact classloader, and every
+  * streaming query runs in a session CLONED at `start()` — so every
+  * query start, every `availableNow` replay, every restart in the same
+  * driver and every sibling query misses the cache and re-compiles
+  * byte-identical generated source with Janino, and HotSpot then JITs
+  * the freshly loaded classes from scratch. On the deployed replay path
+  * (`start`, 25 rules, 4-core host) every `availableNow` drain re-ran 6
+  * Janino compiles, 190-530 ms of compile time, the dispatch-and-shape
+  * stage alone 105-215 ms; with isolation off a drain compiles once
+  * (the files source's per-trigger `current_timestamp()` projection).
+  * graft adds no session artifacts (no `addArtifact`), so the
+  * per-session classloader isolates nothing; with isolation off every
+  * query shares the driver's classloader and a JVM compiles and JITs
+  * each distinct generated class once. Spark reads this setting only
+  * when a session is created, so it belongs on the builder.
   */
 object SessionDefaults {
-  /** Env-overridable (GRAFT_HUGE_METHOD_LIMIT) so a measurement A/B can
-    * revert to Spark's default (65535) without a rebuild. */
-  val HugeMethodLimit: String =
-    sys.env.getOrElse("GRAFT_HUGE_METHOD_LIMIT", "8000")
+  val HugeMethodLimit: String = "8000"
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.hugeMethodLimit", HugeMethodLimit)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 }

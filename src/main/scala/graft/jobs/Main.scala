@@ -38,8 +38,12 @@ import graft.rules.ReferenceCorpus
   * outside a cluster). `--conf trigger=availableNow` replays everything
   * currently in the source and exits — the bounded file-replay mode.
   *
-  * Topology: ONE streaming query — shared Kafka scan, N×(filter→project),
-  * UNION ALL, one sink (never one query per rule; SURVEY §4).
+  * Topology: ONE streaming query for the stateless rules — one source
+  * scan and one JSON parse per trigger feeding the merged `rule_dispatch`
+  * ([[AlertPipeline.start]]), one sink (never one query per rule;
+  * SURVEY §4). With `--extended` the stateless and windowed classes share
+  * one combined query and each temporal correlation runs as its own
+  * query, all writing the same sink schema.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -64,8 +68,9 @@ object Main {
         .appName("graft-alerts")
         // SessionDefaults carries the REQUIRED detection-job config
         // (hugeMethodLimit=8000 — the merged dispatch's whole-stage method
-        // otherwise runs interpreted; rationale at SessionDefaults),
-        // still overridable via --conf
+        // otherwise runs interpreted) and artifact isolation off (every
+        // query start reuses the JVM's compiled generated classes);
+        // rationale at SessionDefaults. Folded first, so --conf overrides
         .config("spark.sql.session.timeZone", "UTC")) {
         case (b, (k, v)) => b.config(k, v)
       }
