@@ -27,20 +27,27 @@ import org.apache.spark.sql.SparkSession
   * `CodeGenerator` caches compiled classes keyed on (thread context
   * classloader, generated source). With artifact isolation on (Spark's
   * default) each session gets its own artifact classloader, and every
-  * streaming query runs in a session CLONED at `start()` — so every
-  * query start, every `availableNow` replay, every restart in the same
-  * driver and every sibling query misses the cache and re-compiles
-  * byte-identical generated source with Janino, and HotSpot then JITs
-  * the freshly loaded classes from scratch. On the deployed replay path
-  * (`start`, 25 rules, 4-core host) every `availableNow` drain re-ran 6
-  * Janino compiles, 190-530 ms of compile time, the dispatch-and-shape
-  * stage alone 105-215 ms; with isolation off a drain compiles once
-  * (the files source's per-trigger `current_timestamp()` projection).
+  * streaming query runs in a session CLONED at `start()`, so a second
+  * start of the same plan in the same JVM misses the cache: it
+  * re-compiles byte-identical generated source with Janino, and HotSpot
+  * JITs the freshly loaded classes again. The gain therefore needs more
+  * than one start of the same plan in one driver — repeated
+  * `availableNow` drains or an in-process restart. Measured on the
+  * deployed replay path (`start`, 25 rules, 4-core host, repeated drains
+  * in one JVM): each drain re-ran 6 Janino compiles, 190-530 ms of
+  * compile time; with isolation off a drain compiles once (the files
+  * source's per-trigger `current_timestamp()` projection). `jobs.Main`
+  * starts each query once per JVM, so a `jobs.Main` replay or
+  * long-running query compiles each class once either way (triggers of
+  * one query already share its cloned session); its `--extended` sibling
+  * queries build different plans and are not known to share classes.
   * graft adds no session artifacts (no `addArtifact`), so the
-  * per-session classloader isolates nothing; with isolation off every
-  * query shares the driver's classloader and a JVM compiles and JITs
-  * each distinct generated class once. Spark reads this setting only
-  * when a session is created, so it belongs on the builder.
+  * per-session classloader isolates nothing here. A session built on
+  * this baseline that adds its own artifacts (`addArtifact`,
+  * session-scoped jars or UDF classes through Spark Connect) should set
+  * `spark.sql.artifact.isolation.enabled=true` after [[apply]]. Spark
+  * reads this setting only when a session is created, so it belongs on
+  * the builder.
   */
 object SessionDefaults {
   val HugeMethodLimit: String = "8000"

@@ -68,8 +68,8 @@ object Main {
         .appName("graft-alerts")
         // SessionDefaults carries the REQUIRED detection-job config
         // (hugeMethodLimit=8000 — the merged dispatch's whole-stage method
-        // otherwise runs interpreted) and artifact isolation off (every
-        // query start reuses the JVM's compiled generated classes);
+        // otherwise runs interpreted) and artifact isolation off (a repeat
+        // start of the same plan in this JVM reuses its compiled classes);
         // rationale at SessionDefaults. Folded first, so --conf overrides
         .config("spark.sql.session.timeZone", "UTC")) {
         case (b, (k, v)) => b.config(k, v)
