@@ -48,6 +48,27 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.artifact.isolation.enabled=true` after [[apply]]. Spark
   * reads this setting only when a session is created, so it belongs on
   * the builder.
+  *
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl=graft.engine.LocalFs` —
+  * Spark commits every streaming trigger through `FileContext`: offset
+  * and commit logs, file source and file sink logs, state-store delta,
+  * snapshot and checksum files. On a local checkpoint without the native
+  * Hadoop library (Spark's distribution ships none) Hadoop forks `chmod`
+  * for each file it creates and `readlink` for each rename. A JFR
+  * `jdk.ProcessStart` recording of one whole benchmark run of the
+  * 250-rule dedup chain (graftbench `live-sigma`, 4-core host) counted
+  * 2,277 process starts: 1,680 `readlink` from the checkpoint manager's
+  * rename, 467 `chmod` from its temp-file create and mkdirs, 118 `chmod`
+  * from the Parquet sink's data files. One forked `readlink` costs a
+  * median 3.1-3.6 ms, and a FileContext create + rename of one file a
+  * median 38 ms, against 1.0-1.7 ms without the forks. [[LocalFs]] is
+  * Hadoop's own checksummed local file system with those two calls done
+  * in java.nio, so the checkpoint manager starts no process (LocalFsSpec);
+  * the same run on it counted 186 process starts, 174 of them Parquet-sink
+  * `chmod` (that sink writes through `FileSystem`, not `FileContext`, and
+  * still forks). Only `file:` paths load it; HDFS, S3 and other schemes
+  * are untouched, and a checkpoint moves between it and Hadoop's
+  * `LocalFs` in both directions.
   */
 object SessionDefaults {
   val HugeMethodLimit: String = "8000"
@@ -55,4 +76,5 @@ object SessionDefaults {
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.hugeMethodLimit", HugeMethodLimit)
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs].getName)
 }
