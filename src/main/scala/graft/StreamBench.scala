@@ -690,13 +690,9 @@ object StreamBench {
       .option("rowsPerSecond", rps)
       .option("numPartitions", 8).load()
       .select(col("value").as("event_id"), col("timestamp").as("ts"))
-    // the uncapped A/B (r13-shape unbounded collect_list) is a BENCH-side
-    // decision passed as an explicit parameter — the library path has no
-    // ambient escape hatch (advisor r14)
-    val uncapped = sys.env.contains("GRAFT_TF_UNCAPPED_AB")
-    val q = TimeframeRules.alertsBatteryAB(
+    val q = TimeframeRules.alertsBattery(
       Detection.nestedFrom(Detection.synthFrom(stream))
-        .withWatermark("timestamp", "5 seconds"), rules, uncapped = uncapped)
+        .withWatermark("timestamp", "5 seconds"), rules)
       .writeStream.format("noop").outputMode("update").start()
     try {
       val deadline = System.nanoTime() + deadlineSec * 1000 * 1000 * 1000
@@ -708,7 +704,7 @@ object StreamBench {
     // (batches compounding, steady_batches < 10) is a host-health failure
     // — re-run on an idle window, don't adjudicate in prose.
     println(s"""{"metric":"tf_battery_eps","rules":${rules.size},""" +
-      s""""protocol":"paced_fixed_rps_steady_eps","uncapped_ab":$uncapped,""" +
+      s""""protocol":"paced_fixed_rps_steady_eps",""" +
       statsJson("tfb", samples.toArray(Array.empty[(Long, Long)]).toSeq) + "," +
       s""""state_operators":${stateOps.get},"rps":$rps,""" +
       s""""origin_ids_cap":${TimeframeRules.DefaultOriginIdsCap},""" +
@@ -907,26 +903,6 @@ object StreamBench {
       }
     }
     spark.streams.addListener(listener)
-    // diagnostic: time BATCH dispatch per shard for both sharding modes
-    // over the same rows — isolates plan/codegen cost differences from
-    // streaming dynamics
-    if (mode == "batchcmp") {
-      val costs = calibrate(rules, flatLoad)
-      val byCost = packByCost(rules, costs, shards)
-      val byCount = rules.grouped(
-        math.ceil(rules.size.toDouble / shards).toInt).toSeq
-      val batch = load.limit(2000000).localCheckpoint()
-      val order = if (sys.env.contains("SPARK_GRAFT_CMP_REVERSED"))
-        Seq("cost" -> byCost, "rr" -> byCount)
-      else Seq("rr" -> byCount, "cost" -> byCost)
-      for ((nm, sh) <- order; (g, i) <- sh.zipWithIndex) {
-        AlertPipeline.alertsMerged(batch.limit(1000), g).count() // codegen warm
-        val (rows, sec) = time(AlertPipeline.alertsMerged(batch, g).count())
-        println(f"$nm shard $i: ${g.size} rules, $rows alerts, $sec%.2f s")
-      }
-      spark.stop()
-      return
-    }
     // shard the rule set across `shards` concurrent queries: each query
     // reads its own rate source (K consumers of the same feed — the Kafka
     // consumer-group shape) and dispatches only its slice of the rules, so

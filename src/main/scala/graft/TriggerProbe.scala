@@ -15,12 +15,10 @@ import graft.rules.ReferenceCorpus
   * lacked, so per-trigger fixed costs get attributed to a phase instead
   * of guessed at from p50s.
   *
-  * Run: sbt "runMain graft.TriggerProbe [nRules] [rps] [triggers] [maxLitBytes] [shape]"
-  *   maxLitBytes: forwarded to alertsMerged's literal threshold — pass 0
-  *   to force the broadcast-join metadata path for an A/B.
-  *   shape: which slice of the merged pipeline to run —
-  *     full (default) = alertsMerged; rid = stop after the explode (no
-  *     alert shaping); src = source+synth only (no rules). Isolates which
+  * Run: sbt "runMain graft.TriggerProbe [nRules] [rps] [triggers] [shape]"
+  *   shape: which pipeline to run —
+  *     full (default) = alertsMerged; union = the reference UNION ALL
+  *     fan-out (alerts); src = source+synth only (no rules). Isolates which
   *     stage owns the per-row cost. Each shape also gets a 2M-row BATCH
   *     noop-write timing first (write, not count: count() lets the
   *     optimizer prune the alert projection, which is how the batch eps
@@ -31,9 +29,7 @@ object TriggerProbe {
     val nRules = args.headOption.map(_.toInt).getOrElse(25)
     val rps = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nTriggers = args.lift(2).map(_.toInt).getOrElse(12)
-    val maxLit = args.lift(3).map(_.toLong)
-      .getOrElse(AlertPipeline.MetaLiteralMaxBytes)
-    val shape = args.lift(4).getOrElse("full")
+    val shape = args.lift(3).getOrElse("full")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.engine.SessionDefaults(SparkSession.builder())
       .master(s"local[$cpus]")
@@ -42,95 +38,12 @@ object TriggerProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B knob for the huge-method JIT cliff: methods above HotSpot's
-    // 8000-bytecode DontCompileHugeMethods threshold never JIT and run
-    // interpreted; hugeMethodLimit=8000 makes Spark abandon whole-stage
-    // fusion for such stages and run per-operator codegen instead
-    sys.env.get("GRAFT_HML").foreach(v =>
-      spark.conf.set("spark.sql.codegen.hugeMethodLimit", v))
-
     val rules = StreamBench.cloneRules(ReferenceCorpus.active, nRules)
     def mk(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       shape match {
         case "src" => df
-        case "rid" =>
-          val fired = array(rules.zipWithIndex.map { case (r, i) =>
-            when(r.where.toColumn(AlertPipeline.nestedField), lit(i))
-              .otherwise(lit(-1))
-          }: _*)
-          df.withColumn("__fa", fired)
-            .withColumn("rid", explode(array_remove(col("__fa"), lit(-1))))
-            .select("rid")
-        case "v2" =>
-          // whole-struct constant lookups: one element_at per OUTPUT
-          // struct instead of one per metadata FIELD
-          val fired = array(rules.zipWithIndex.map { case (r, i) =>
-            when(r.where.toColumn(AlertPipeline.nestedField), lit(i))
-              .otherwise(lit(-1))
-          }: _*)
-          def strArr(vs: Seq[String]) =
-            if (vs.isEmpty) array().cast("array<string>") else array(vs.map(lit): _*)
-          val threatArr = array(rules.map(r => struct(
-            strArr(r.tactic).as("tactic"),
-            strArr(r.technique).as("technique"),
-            strArr(r.subtechnique).as("subtechnique"))): _*)
-          val ruleArr = array(rules.map(r => struct(
-            lit(r.name).as("name"), lit(r.author).as("author"),
-            lit(r.category).as("category"), lit(r.severity).as("severity"),
-            lit(r.description).as("description"),
-            strArr(r.references).as("reference"),
-            lit(r.version).as("version"), lit(r.source).as("source"))): _*)
-          val moduleArr = array(rules.map(r =>
-            r.module.map(m => lit(m)).getOrElse(lit(null).cast("string"))): _*)
-          df.withColumn("__fa", fired)
-            .withColumn("rid", explode(array_remove(col("__fa"), lit(-1))))
-            .select(
-              col("computer_name"), col("host"),
-              struct(
-                lit("signal").as("kind"),
-                element_at(moduleArr, col("rid") + 1).as("module"),
-                array(col("uuid")).as("origin_ids"),
-                lit(1L).as("count"),
-                col("timestamp").as("start"),
-                col("timestamp").as("end"),
-                col("timestamp").as("time")).as("event"),
-              element_at(threatArr, col("rid") + 1).as("threat"),
-              element_at(ruleArr, col("rid") + 1).as("rule"))
-        case "const" =>
-          // same explode + full-size output rows, but every metadata field
-          // from ONE constant struct (rule 0) — isolates the element_at
-          // lookup cost from the row-materialization cost
-          val fired = array(rules.zipWithIndex.map { case (r, i) =>
-            when(r.where.toColumn(AlertPipeline.nestedField), lit(i))
-              .otherwise(lit(-1))
-          }: _*)
-          def strArr(vs: Seq[String]) =
-            if (vs.isEmpty) array().cast("array<string>") else array(vs.map(lit): _*)
-          val r0 = rules.head
-          df.withColumn("__fa", fired)
-            .withColumn("rid", explode(array_remove(col("__fa"), lit(-1))))
-            .select(
-              col("computer_name"), col("host"),
-              struct(
-                lit("signal").as("kind"),
-                r0.module.map(m => lit(m)).getOrElse(lit(null).cast("string")).as("module"),
-                array(col("uuid")).as("origin_ids"),
-                lit(1L).as("count"),
-                col("timestamp").as("start"),
-                col("timestamp").as("end"),
-                col("timestamp").as("time")).as("event"),
-              struct(
-                strArr(r0.tactic).as("tactic"),
-                strArr(r0.technique).as("technique"),
-                strArr(r0.subtechnique).as("subtechnique")).as("threat"),
-              struct(
-                lit(r0.name).as("name"), lit(r0.author).as("author"),
-                lit(r0.category).as("category"), lit(r0.severity).as("severity"),
-                lit(r0.description).as("description"),
-                strArr(r0.references).as("reference"),
-                lit(r0.version).as("version"), lit(r0.source).as("source")).as("rule"))
         case "union" => AlertPipeline.alerts(df, rules)
-        case _ => AlertPipeline.alertsMerged(df, rules, maxLit)
+        case _ => AlertPipeline.alertsMerged(df, rules)
       }
 
     // batch noop-WRITE timing over the same transform (2M rows): unlike

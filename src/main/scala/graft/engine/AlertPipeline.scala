@@ -62,9 +62,6 @@ object AlertPipeline {
         col("r.uuid").as("uuid"), col("timestamp"))
   }
 
-  private def strArray(vs: Seq[String]): Column =
-    if (vs.isEmpty) array().cast("array<string>") else array(vs.map(lit): _*)
-
   /** Pre-folded constant shapes for [[ruleAlerts]]'s per-rule threat/rule
     * structs (field names = the reference sink schema). One Literal node
     * each instead of ~15 foldable children per struct per union branch —
@@ -133,92 +130,50 @@ object AlertPipeline {
       case Seq(a) => a
     }.toSeq)
 
-  /** Merged-dispatch fan-out — the 1000-rule scale path (SURVEY §4 "plan
-    * size"): instead of N union branches (N operators in the plan, N
-    * codegen'd filters), ONE projection evaluates every rule predicate into
-    * an int array, explodes the fired rule ids, and shapes alerts by
-    * indexing a LITERAL array-of-structs of rule metadata with the fired
-    * `rid` — `element_at(<one pre-folded Literal>, rid+1)` (see
-    * [[metaLiteral]]), so the lookup is pure codegen: no join, no
-    * broadcast, no exchange, and the planner sees a single constant node.
-    * Plan size is O(1) in rule count; the predicates still all run inside
-    * one codegen'd stage.
-    * Semantics identical to [[alerts]] (bag multiplicity included) —
-    * asserted by AlertPipelineSpec.
+  /** Merged-dispatch fan-out — the deployed path and the 1000-rule scale
+    * path (SURVEY §4 "plan size"): instead of N union branches (N
+    * operators in the plan, N codegen'd filters), ONE `rule_dispatch`
+    * expression (functions/RuleDispatchExpr.scala) evaluates every rule
+    * predicate into the fired rule ids, which explode into one row per
+    * alert, and alerts are shaped by indexing a LITERAL array-of-structs
+    * of rule metadata with the fired `rid` — `element_at(<one pre-folded
+    * Literal>, rid+1)` (see [[metaLiteral]]). Plan size is O(1) in rule
+    * count: the analyzer and optimizer walk the same nodes per micro-batch
+    * at 25 or 1000 rules. Semantics identical to [[alerts]] (bag
+    * multiplicity included) — asserted by AlertPipelineSpec.
     *
-    * Why not a broadcast join: rule metadata is static for the lifetime of
-    * a job, but Structured Streaming re-plans every micro-batch, and a
-    * broadcast join REBUILDS and re-ships the broadcast each trigger. A
-    * constant folded into the plan costs one fold per trigger instead of
-    * one broadcast job per trigger — measured per-trigger at 25 rules /
-    * 400k events (TriggerProbe, JIT-healthy config): literal ~540 ms vs
-    * broadcast ~710 ms, and planning 120 ms vs 270 ms. Metadata far too
-    * large to live as a plan literal (threshold [[MetaLiteralMaxBytes]])
-    * falls back to the broadcast join; the 31-rule corpus is ~20 KB and a
-    * 1000-rule clone fleet ~500 KB, both comfortably literal.
+    * Why a literal, not a broadcast join: rule metadata is static for the
+    * lifetime of a job, but Structured Streaming re-plans every
+    * micro-batch, and a broadcast join REBUILDS and re-ships the broadcast
+    * each trigger. A constant folded into the plan costs one fold per
+    * trigger instead of one broadcast job per trigger — measured
+    * per-trigger at 25 rules / 400k events (TriggerProbe): literal
+    * ~540 ms vs broadcast ~710 ms, and planning 120 ms vs 270 ms.
     *
-    * JIT dead zone — RESOLVED BY CONSTRUCTION on the default path (r12
-    * verdict #6): the r12 round found the when/otherwise spelling of this
-    * dispatch fused into ONE whole-stage-codegen method that, at ~25
-    * corpus-sized rules, landed in the 8-64 KB bytecode dead zone —
-    * bigger than HotSpot's DontCompileHugeMethods JIT ceiling (8000
-    * bytes), smaller than Spark's default fallback threshold (65535) —
-    * so every micro-batch ran INTERPRETED generated code (the real cause
-    * of the r11 streaming record's merged p95 of 14.9 s; 400k-event
-    * triggers went 2.1 s → 0.54 s under hugeMethodLimit=8000). The
-    * rule_dispatch expression generates ONE SMALL METHOD PER RULE plus
-    * 64-call block methods, so the fused stage method no longer grows
-    * with rule count AT ALL — a consumer's own SparkSession with Spark's
-    * default hugeMethodLimit cannot re-enter the zone through this path
-    * at any rule count. `SessionDefaults` (hugeMethodLimit=8000) remains
-    * the recommended baseline for OTHER large fused stages; the legacy
-    * tree spelling logs a one-shot WARN when it would sit in the zone.
+    * No JIT dead zone at any rule count: `rule_dispatch` generates ONE
+    * SMALL METHOD PER RULE plus 64-call block methods, so the fused stage
+    * method does not grow with the rule count and stays under HotSpot's
+    * 8000-byte JIT ceiling (PlanAuditSpec pins 25 and 1000 rules).
     *
     * Also the BATCH-mode winner at any rule count: a batch union fan-out
     * re-executes the source scan per branch (Spark reuses the scan across
     * union branches only in streaming MicroBatchScan), so at 25 rules the
     * union plan costs ~25 scans. Measured at sf0.1/local[32]: 7.9s union
     * vs 1.5s merged for the same 25-rule fan-out counts. */
-  def alertsMerged(sysmon: DataFrame, rules: Seq[RuleDef],
-      literalMaxBytes: Long = MetaLiteralMaxBytes,
-      dispatchExpr: Boolean = true): DataFrame = {
+  def alertsMerged(sysmon: DataFrame, rules: Seq[RuleDef]): DataFrame = {
     require(rules.nonEmpty, "alertsMerged needs at least one rule")
-    val withFired =
-      if (dispatchExpr)
-        // ONE expression node holding the whole battery
-        // (functions/RuleDispatchExpr.scala): the analyzer/optimizer walk
-        // O(1) nodes per micro-batch regardless of rule count, killing the
-        // ~1.1 s/trigger of queryPlanning the O(rules) when/otherwise tree
-        // cost at 1000 rules (r12 verdict #2; TriggerProbe A/B below)
-        sysmon.withColumn("rid", explode(graft.functions.RuleDispatch.column(
-          sysmon.sparkSession, rules.map(_.where),
-          col("event_data"), col("event_id"))))
-      else {
-        // legacy expression-tree spelling, reachable only by an explicit
-        // dispatchExpr = false (PlanAuditSpec's JIT positive control and
-        // RuleDispatchExprSpec's equivalence check): array_remove(-1) drops
-        // the non-fired sentinels exactly like filter(x -> x >= 0) but is
-        // a codegen'd collection function — the lambda spelling evaluated
-        // an interpreted N-element filter PER EVENT (PlanAudit HOF detector)
-        warnIfJitDeadZone(sysmon, rules.size)
-        val fired = array(rules.zipWithIndex.map { case (r, i) =>
-          when(r.where.toColumn(nestedField), lit(i)).otherwise(lit(-1))
-        }: _*)
-        sysmon.withColumn("__fa", fired)
-          .withColumn("rid", explode(array_remove(col("__fa"), lit(-1))))
-      }
-    if (metaBytes(rules) <= literalMaxBytes)
-      shapeMerged(withFired, element_at(metaLiteral(rules), col("rid") + 1))
-    else
-      shapeMerged(withFired.join(
-        broadcast(metaTable(sysmon.sparkSession, rules)), "rid"), col("__m"))
+    shapeMerged(
+      sysmon.withColumn("rid", explode(graft.functions.RuleDispatch.column(
+        sysmon.sparkSession, rules.map(_.where),
+        col("event_data"), col("event_id")))),
+      element_at(metaLiteral(rules), col("rid") + 1))
   }
 
-  /** Typed mirror of [[metaSchema]] so the metadata literal can be built
-    * with `typedlit` (the one public API that accepts a whole Scala value
-    * as a single Literal; the classic Column(Expression) constructors are
-    * private[sql] in Spark 4). Field names must match metaSchema —
-    * [[shapeMerged]] extracts by name on both paths. */
+  /** The rule-metadata struct as a Scala value, so the metadata array can
+    * be built with `typedlit` (the one public API that accepts a whole
+    * Scala value as a single Literal; the classic Column(Expression)
+    * constructors are private[sql] in Spark 4). [[shapeMerged]] and the
+    * timeframe battery extract its fields by name. */
   private case class RuleMeta(name: String, author: String, category: String,
       severity: Int, description: String, references: Seq[String],
       tactic: Seq[String], technique: Seq[String], subtechnique: Seq[String],
@@ -229,89 +184,14 @@ object AlertPipeline {
     * collapse it — correct, but the ANALYZER and OPTIMIZER walk the
     * unfolded tree first, and at 1000 rules those ~15k foldable nodes
     * cost 13.4 s of plan build (RuleFanoutProbe) — paid EVERY micro-batch
-    * in streaming, where the plan is rebuilt per trigger. Handing the
-    * planner a single pre-converted Literal node returns plan build to
-    * the join-era ~0.5 s at 1000 rules with none of the join's broadcast
-    * traffic. */
+    * in streaming, where the plan is rebuilt per trigger. A single
+    * pre-converted Literal node costs ~0.5 s of plan build at 1000 rules. */
   private[graft] def metaLiteral(rules: Seq[RuleDef]): Column =
     typedlit(rules.map { r =>
       RuleMeta(r.name, r.author, r.category, r.severity, r.description,
         r.references, r.tactic, r.technique, r.subtechnique,
         r.module, r.version, r.source)
     })
-
-  /** One-shot WARN for the legacy tree spelling in a session whose
-    * hugeMethodLimit would put the fused N-rule dispatch in the silent
-    * 8-64 KB HotSpot dead zone (r12 verdict #6: a consumer session built
-    * without SessionDefaults re-entered it at ~25 corpus-sized rules —
-    * the fused method runs INTERPRETED with no log line otherwise). The
-    * default rule_dispatch path is immune (per-rule methods); this fires
-    * only for an explicit dispatchExpr = false. ~15 corpus rules ≈ 8 KB of
-    * fused dispatch bytecode (the r12 TriggerProbe measurement). */
-  @volatile private[engine] var warnedDeadZone = false
-  private def warnIfJitDeadZone(df: DataFrame, nRules: Int): Unit = {
-    val limit = df.sparkSession.conf.get("spark.sql.codegen.hugeMethodLimit", "65535").toInt
-    if (!warnedDeadZone && nRules >= 15 && limit > 8000) {
-      warnedDeadZone = true
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"alertsMerged(tree) with $nRules rules under " +
-          s"spark.sql.codegen.hugeMethodLimit=$limit: the fused dispatch " +
-          "method likely exceeds HotSpot's 8000-byte JIT ceiling and will " +
-          "run as INTERPRETED generated code (4-5x slower per event). Set " +
-          "hugeMethodLimit=8000 (graft.engine.SessionDefaults) or use the " +
-          "default rule_dispatch path.")
-    }
-  }
-
-  /** Rule-metadata sets larger than this go through a broadcast join
-    * instead of a plan literal (a literal rides the serialized plan to
-    * every task; a broadcast ships once per executor — the right trade
-    * only when the metadata is genuinely big). 8 MB ≈ 16000 corpus-sized
-    * rules, far above any real deployment. */
-  private[graft] val MetaLiteralMaxBytes: Long = 8L * 1024 * 1024
-
-  /** Conservative metadata size estimate: UTF-16 chars of every string
-    * field plus per-rule struct overhead. */
-  private[engine] def metaBytes(rules: Seq[RuleDef]): Long =
-    rules.iterator.map { r =>
-      2L * (r.name.length + r.author.length + r.category.length +
-        r.description.length + r.version.length + r.source.length +
-        r.module.map(_.length).getOrElse(0) +
-        (r.references ++ r.tactic ++ r.technique ++ r.subtechnique)
-          .map(_.length).sum) + 64L
-    }.sum
-
-  /** The metadata struct shape shared by the literal and broadcast paths. */
-  private val metaSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("name", StringType), StructField("author", StringType),
-      StructField("category", StringType), StructField("severity", IntegerType),
-      StructField("description", StringType),
-      StructField("references", ArrayType(StringType)),
-      StructField("tactic", ArrayType(StringType)),
-      StructField("technique", ArrayType(StringType)),
-      StructField("subtechnique", ArrayType(StringType)),
-      StructField("module", StringType), StructField("version", StringType),
-      StructField("source", StringType)))
-  }
-
-  /** Fallback metadata source above [[MetaLiteralMaxBytes]]: a (rid, __m)
-    * table to broadcast-join, `__m` a struct with the same field names the
-    * literal path produces, so [[shapeMerged]] is shared verbatim. */
-  private def metaTable(spark: SparkSession, rules: Seq[RuleDef]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val rows = rules.zipWithIndex.map { case (r, i) =>
-      Row(i, Row(r.name, r.author, r.category, r.severity, r.description,
-        r.references, r.tactic, r.technique, r.subtechnique,
-        r.module.orNull, r.version, r.source))
-    }
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      StructType(Seq(StructField("rid", IntegerType),
-        StructField("__m", metaSchema))))
-  }
 
   /** The reference sink schema's `threat` struct from a rule-metadata
     * struct `m` (windows-process-access.sql:50-55) — shared between the
@@ -336,8 +216,8 @@ object AlertPipeline {
       m.getField("version").as("version"),
       m.getField("source").as("source")).as("rule")
 
-  /** Shared alert shaping over the merged dispatch: `m` is the fired
-    * rule's metadata struct (literal-array lookup or joined column). */
+  /** Alert shaping over the merged dispatch: `m` is the fired rule's
+    * metadata struct (the literal-array lookup). */
   private def shapeMerged(withFired: DataFrame, m: Column): DataFrame =
     withFired.select(
       col("computer_name"),
@@ -592,22 +472,17 @@ object AlertPipeline {
     * plan (Spark's multiple-stateful-operator support covers unions of
     * window aggregations, not arbitrary fMGWS siblings). The sink row is
     * the SAME invariant 5-column alert schema ([[startCombined]]) —
-    * `rule_name` dropped at the sink; `idx` suffixes the checkpoint (and a
-    * files sink's path) so co-deployed sequence queries never share state
-    * or metadata directories. The source is WATERMARKED (same `watermark`
-    * conf as [[start]]/[[startCombined]], default 5 seconds) so the
-    * correlator runs under event-time state expiry — keys whose slots
-    * fall `gap` behind the watermark are dropped from the state store
-    * instead of accumulating for the stream's lifetime (round 18, r17
-    * verdict #1). */
+    * `rule_name` dropped at the sink; `idx` gives the query its own
+    * checkpoint (and a files sink its own path), see [[sequenceConf]].
+    * The source is WATERMARKED (same `watermark` conf as
+    * [[start]]/[[startCombined]], default 5 seconds) so the correlator
+    * runs under event-time state expiry — keys whose slots fall `gap`
+    * behind the watermark are dropped from the state store instead of
+    * accumulating for the stream's lifetime (round 18, r17 verdict #1). */
   def startSequence(spark: SparkSession,
       rule: graft.streaming.SequenceRules.SequenceRule,
       conf: Map[String, String], idx: Int = 0): StreamingQuery = {
-    val c2 = conf ++
-      conf.get("checkpoint").map(c => "checkpoint" -> s"$c/seq-$idx") ++
-      (if (conf.get("sink.type").contains("files"))
-        conf.get("sink.path").map(p => "sink.path" -> s"$p/seq-$idx")
-      else None)
+    val c2 = sequenceConf(conf, idx)
     val src = Sources.source(spark, c2)
       .withWatermark("timestamp", c2.getOrElse("watermark", "5 seconds"))
     val alerts = graft.streaming.SequenceRules.alertsFor(src, rule)
@@ -617,6 +492,18 @@ object AlertPipeline {
       .trigger(trigger(c2))
       .start()
   }
+
+  /** The conf of the `idx`-th sequence query co-deployed with the main
+    * query of `conf`. Its checkpoint is `<main checkpoint>/seq-idx`, where
+    * the main checkpoint is the explicit `checkpoint` or, without one, the
+    * default [[Sources.checkpointDir]] derives from the sink, so no two
+    * queries share offsets or state whichever sink is configured. A files
+    * sink also writes under `<sink.path>/seq-idx`. */
+  private[graft] def sequenceConf(conf: Map[String, String], idx: Int): Map[String, String] =
+    conf + ("checkpoint" -> s"${Sources.checkpointDir(conf)}/seq-$idx") ++
+      (if (conf.get("sink.type").contains("files"))
+        conf.get("sink.path").map(p => "sink.path" -> s"$p/seq-$idx")
+      else None)
 }
 
 /** `${var}` substitution for deploy-time config, the Spark-side equivalent

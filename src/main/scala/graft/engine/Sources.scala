@@ -38,25 +38,32 @@ object Sources {
       case other => throw new IllegalArgumentException(s"unknown source.type: $other")
     }
 
+  /** The sink's identity: its topic, or its path. */
+  private def sinkId(conf: Map[String, String]): String =
+    conf.getOrElse("sink.type", "kafka") match {
+      case "kafka" => conf("kafka_brokers") + "/" + conf("kafka_sink_topic")
+      case "files" => conf("sink.path")
+      case other => throw new IllegalArgumentException(s"unknown sink.type: $other")
+    }
+
   /** Explicit `checkpoint` conf, else a default derived from the sink
     * identity (topic / path) — two jobs launched without an explicit
     * checkpoint must never silently share streaming state and offsets. */
-  private def checkpointDir(conf: Map[String, String], sinkId: String): String =
+  private[graft] def checkpointDir(conf: Map[String, String]): String =
     conf.getOrElse("checkpoint",
-      f"/tmp/graft-checkpoint-${sinkId.hashCode & 0x7fffffff}%08x")
+      f"/tmp/graft-checkpoint-${sinkId(conf).hashCode & 0x7fffffff}%08x")
 
   /** Alert sink writer from config. */
   def sink(alerts: DataFrame, conf: Map[String, String]): DataStreamWriter[Row] =
     conf.getOrElse("sink.type", "kafka") match {
       case "kafka" =>
         AlertPipeline.kafkaSink(alerts,
-          conf("kafka_brokers"), conf("kafka_sink_topic"),
-          checkpointDir(conf, conf("kafka_brokers") + "/" + conf("kafka_sink_topic")))
+          conf("kafka_brokers"), conf("kafka_sink_topic"), checkpointDir(conf))
       case "files" =>
         alerts.writeStream
           .format(conf.getOrElse("sink.format", "parquet"))
           .option("path", conf("sink.path"))
-          .option("checkpointLocation", checkpointDir(conf, conf("sink.path")))
+          .option("checkpointLocation", checkpointDir(conf))
       case other => throw new IllegalArgumentException(s"unknown sink.type: $other")
     }
 }

@@ -386,8 +386,8 @@ object GraftFunctions {
     // reranked exactly by sim_q8_rerank. Native TypedImperativeAggregate
     // (TopKIdsExpr) since r18 — the udaf Aggregator wrapper paid a
     // Catalyst→Scala conversion plus an immutable-Seq rebuild per
-    // candidate row (the MinKCollectExpr lesson); TopKAggSpec pins parity
-    // against the retained Aggregator reference implementation.
+    // candidate row (the MinKCollectExpr lesson); TopKIdsExprSpec pins the
+    // exact top-k under any split, serialise and merge.
     def topk(name: String, k: Int, withScores: Boolean): Unit =
       spark.sessionState.functionRegistry.registerFunction(
         FunctionIdentifier(name),

@@ -33,21 +33,23 @@ final class TopKBuffer(val k: Int) {
   }
 }
 
-/** Distributed bounded top-k as a NATIVE Catalyst aggregate — the typed
-  * `Aggregator` udaf (TopKAgg) with the same (score DESC, id ASC) ordering
-  * and k-item state, minus two per-input-row costs the udaf wrapper
-  * carries: the Catalyst→Scala encoder conversion of every candidate row
-  * (the MinKCollectExpr lesson — ~10% of a hot aggregation's throughput)
-  * and the immutable `(in +: items).sorted` Seq rebuild per accepted row.
+/** Distributed bounded top-k as a NATIVE Catalyst aggregate: (score
+  * DESC, id ASC) ordering and k-item state. It replaced (r18) a typed
+  * `Aggregator` udaf with the same ordering and state, dropping two
+  * per-input-row costs the udaf wrapper carried: the Catalyst→Scala
+  * encoder conversion of every candidate row (the MinKCollectExpr lesson
+  * — ~10% of a hot aggregation's throughput) and the immutable
+  * `(in +: items).sorted` Seq rebuild per accepted row.
   * The buffer is two primitive arrays maintained sorted best-first; a row
   * that cannot enter a full buffer is rejected with one comparison.
   *
-  * Output matches the udaf's shape exactly so consumers are unchanged:
+  * Output keeps the udaf's shape, so consumers did not change:
   * struct<ids: array<bigint>> (`withScores = false`, topkN_ids) or
   * struct<ids: array<bigint>, scores: array<double>> (`withScores = true`,
   * topk3_scored). Null score or id never occurs in the callers (scores are
   * rounded arithmetic over non-null columns); such rows are skipped.
-  * TopKAggSpec pins parity against the original Aggregator on real data.
+  * TopKIdsExprSpec pins the exact top-k under any split, serialise and
+  * merge, and the k-entry state bound.
   */
 case class TopKIdsExpr(score: Expression, id: Expression, k: Int,
     withScores: Boolean,

@@ -66,9 +66,10 @@ object Main {
     val spark = conf.filter { case (k, _) => k.startsWith("spark.") }
       .foldLeft(graft.engine.SessionDefaults(SparkSession.builder())
         .appName("graft-alerts")
-        // SessionDefaults carries the REQUIRED detection-job config
-        // (hugeMethodLimit=8000 — the merged dispatch's whole-stage method
-        // otherwise runs interpreted) and artifact isolation off (a repeat
+        // SessionDefaults carries the detection-job baseline
+        // (hugeMethodLimit=8000 — a guard for large fused stages, whose
+        // whole-stage method would otherwise run interpreted; rule_dispatch
+        // emits one method per rule and needs none) and artifact isolation off (a repeat
         // start of the same plan in this JVM reuses its compiled classes);
         // rationale at SessionDefaults. Folded first, so --conf overrides
         .config("spark.sql.session.timeZone", "UTC")) {

@@ -94,7 +94,7 @@ object Similarity {
       .select(col("m.label").as("label"), col("m.embedding").as("embedding")))
 
   /** Per-query top-3 over (qid, nid, cos_r) via the bounded-state
-    * `topk3_ids` aggregate (graft.functions.TopKAgg): map-side partials
+    * `topk3_ids` aggregate (graft.functions.TopKIdsExpr): map-side partials
     * keep ≤3 rows per qid, so the shuffle is O(tasks × queries × 3) — the
     * round-2 window (`row_number OVER (PARTITION BY qid ...)`) shuffled the
     * FULL scored pair set into 8 sort tasks, which both regressed the bench

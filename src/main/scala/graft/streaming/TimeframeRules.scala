@@ -56,17 +56,9 @@ object TimeframeRules {
   /** Bounded provenance collect as an agg Column: min-K uuids, sorted
     * ascending — identical to `array_sort(collect_list(uuid))` whenever
     * the group has ≤ cap events, O(cap) state per group always
-    * ([[graft.functions.MinKCollectExpr]], native aggregate).
-    *
-    * `uncapped` restores the r13 unbounded collect_list shape — reachable
-    * ONLY through [[alertsBatteryAB]], i.e. only when bench code asks for
-    * it explicitly. It must never ride ambient config in the library path:
-    * an env var set in a real deployment would silently drop the state
-    * bound, and restarting a checkpointed query with the flag toggled
-    * swaps the aggregate and corrupts the checkpoint (advisor r14). */
-  private def originIds(cap: Int, uncapped: Boolean): Column =
-    if (uncapped) array_sort(collect_list(col("uuid")))
-    else call_function("min_k_collect", col("uuid"), lit(cap))
+    * ([[graft.functions.MinKCollectExpr]], native aggregate). */
+  private def originIds(cap: Int): Column =
+    call_function("min_k_collect", col("uuid"), lit(cap))
 
   /** A BATTERY of timeframe rules in one stateful aggregation per
     * (windowLength, keyCol) group — the 1000-rule scale path for stateful
@@ -105,14 +97,7 @@ object TimeframeRules {
     * rule are identical to [[alerts]] — pinned by spec and by the
     * tf_battery_counts / sig_tf_combined_shape oracles. */
   def alertsBattery(sysmon: DataFrame, rules: Seq[TimeframeRule],
-      originIdsCap: Int = DefaultOriginIdsCap): DataFrame =
-    alertsBatteryAB(sysmon, rules, originIdsCap, uncapped = false)
-
-  /** [[alertsBattery]] with the r13 unbounded-collect_list escape hatch —
-    * BENCH-ONLY (same-session capped-vs-uncapped A/B); the flag is an
-    * explicit parameter precisely so no deployment config can reach it. */
-  private[graft] def alertsBatteryAB(sysmon: DataFrame, rules: Seq[TimeframeRule],
-      originIdsCap: Int = DefaultOriginIdsCap, uncapped: Boolean = false): DataFrame = {
+      originIdsCap: Int = DefaultOriginIdsCap): DataFrame = {
     require(rules.nonEmpty, "empty timeframe battery")
     graft.functions.GraftFunctions.register(sysmon.sparkSession)
     import graft.engine.AlertPipeline
@@ -150,7 +135,7 @@ object TimeframeRules {
             expr(key).as("__tf_key"))
           .agg(
             nCol.as("n"),
-            originIds(originIdsCap, uncapped).as("origin_ids"),
+            originIds(originIdsCap).as("origin_ids"),
             min(col("host")).as("host"))
           .filter(col("n") >= element_at(thresholds, col("rid") + 1))
           .select(
@@ -195,7 +180,7 @@ object TimeframeRules {
         expr(rule.keyCol).as("__tf_key"))
       .agg(
         nCol.as("n"),
-        originIds(originIdsCap, uncapped = false).as("origin_ids"),
+        originIds(originIdsCap).as("origin_ids"),
         min(col("host")).as("host"))
       .filter(col("n") >= rule.threshold)
       .select(

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * operators over the same event-time window, supported with watermarks):
   * (window, key) counts finalize in append mode once the watermark passes
   * window end, then flow into a per-window bounded-state `topk3_ids`
-  * aggregate (graft.functions.TopKAgg) re-keyed on the SAME window via
+  * aggregate (graft.functions.TopKIdsExpr) re-keyed on the SAME window via
   * `window_time`. State per window is O(distinct keys) in the first
   * operator (the count map Spark keeps anyway) and O(k) in the second —
   * never a per-window event buffer, and never a sort of the full count

@@ -14,16 +14,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("JIT dead-zone sweep sees the tree dispatch's huge method (positive control)") {
-    // the known inhabitant: the LEGACY when/otherwise spelling of the
-    // 25-rule merged dispatch fuses into one whole-stage method above
-    // HotSpot's 8000-byte JIT ceiling (the round-12 interpreted-execution
-    // finding). If the sweep can't see THIS stage, its empty report
-    // elsewhere proves nothing. The DEFAULT rule_dispatch spelling must
-    // stay OUT of the zone — per-rule methods, r13 — which the second
-    // assertion pins.
+    // the known inhabitant, built here: the when/otherwise spelling of
+    // the 25-rule dispatch (the shape rule_dispatch replaced) fuses into
+    // one whole-stage method above HotSpot's 8000-byte JIT ceiling (the
+    // round-12 interpreted-execution finding). If the sweep can't see
+    // THIS stage, its empty report elsewhere proves nothing. The
+    // rule_dispatch spelling must stay OUT of the zone — per-rule
+    // methods — which the assertions after it pin.
+    import org.apache.spark.sql.functions._
     val nested = ops.Detection.nested(spark, "/root/testdata/sf0.001")
-    val tree = engine.AlertPipeline
-      .alertsMerged(nested, rules.ReferenceCorpus.active, dispatchExpr = false)
+    val fired = array(rules.ReferenceCorpus.active.zipWithIndex.map { case (r, i) =>
+      when(r.where.toColumn(engine.AlertPipeline.nestedField), i).otherwise(-1)
+    }: _*)
+    val tree = nested.withColumn("rid", explode(array_remove(fired, -1)))
       .queryExecution.executedPlan
     val dz = PlanAudit.jitDeadZone(tree)
     assert(dz.nonEmpty && dz.max > 8000,

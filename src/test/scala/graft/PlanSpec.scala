@@ -73,19 +73,6 @@ class PlanSpec extends SparkSpec {
     assert(metaLits.nonEmpty, s"pre-folded metadata literal not found:\n$opt")
   }
 
-  test("merged dispatch above the literal threshold falls back to broadcast join") {
-    val nested = ops.Detection.nested(spark, dir).limit(500)
-    val corpus = rules.ReferenceCorpus.active
-    val viaLit = engine.AlertPipeline.alertsMerged(nested, corpus)
-    val viaJoin = engine.AlertPipeline.alertsMerged(nested, corpus, literalMaxBytes = 0L)
-    val p = viaJoin.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"), p)
-    def canon(d: org.apache.spark.sql.DataFrame): Seq[String] =
-      d.select(to_json(struct(col("computer_name"), col("host"), col("event"),
-        col("threat"), col("rule")))).collect().map(_.getString(0)).sorted.toSeq
-    assert(canon(viaLit) == canon(viaJoin))
-  }
-
   test("detection rules compile to codegen-able predicates (no UDFs)") {
     val df = ops.Detection.queries("sig_credential_dumping_by_lazagne")(spark, dir)
     val p = df.queryExecution.executedPlan.toString

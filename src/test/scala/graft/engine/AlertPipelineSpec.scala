@@ -211,29 +211,6 @@ class AlertPipelineSpec extends SparkSpec {
     assert(secs < 60, s"500-rule dispatch took ${secs}s") // plan stays O(1)
   }
 
-  test("legacy tree dispatch warns once when the session would hit the JIT dead zone") {
-    val df = AlertPipeline.sysmonFrame(spark, Seq(ev()))
-    val conf = spark.conf
-    val prior = conf.get("spark.sql.codegen.hugeMethodLimit")
-    try {
-      // sessions built via SessionDefaults (like this one) are safe: no warn
-      AlertPipeline.warnedDeadZone = false
-      AlertPipeline.alertsMerged(df, ReferenceCorpus.active, dispatchExpr = false)
-      assert(!AlertPipeline.warnedDeadZone)
-      // a consumer session left at Spark's default fallback threshold warns
-      conf.set("spark.sql.codegen.hugeMethodLimit", "65535")
-      AlertPipeline.alertsMerged(df, ReferenceCorpus.active, dispatchExpr = false)
-      assert(AlertPipeline.warnedDeadZone)
-      // the default rule_dispatch path never warns — it is immune by shape
-      AlertPipeline.warnedDeadZone = false
-      AlertPipeline.alertsMerged(df, ReferenceCorpus.active)
-      assert(!AlertPipeline.warnedDeadZone)
-    } finally {
-      conf.set("spark.sql.codegen.hugeMethodLimit", prior)
-      AlertPipeline.warnedDeadZone = false
-    }
-  }
-
   test("parseJson drops malformed records, keeps timestamp metadata (S2/S3)") {
     import spark.implicits._
     val raw = Seq(

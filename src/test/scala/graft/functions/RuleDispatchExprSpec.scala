@@ -12,8 +12,8 @@ import scala.util.Random
   * with (a) a direct three-valued-logic interpreter on random predicate
   * trees (the PredPropertySpec discipline, lifted to the fired-id set),
   * (b) its own interpreted eval path (codegen ≡ interpreted — the
-  * SimilarToExpr/ShingleIdsExpr contract), and (c) the per-rule
-  * when/otherwise expression tree it replaces, over the full corpus. */
+  * SimilarToExpr/ShingleIdsExpr contract), and (c) per-rule filters and
+  * the off-Spark `Pred.evaluator`, over the full corpus. */
 class RuleDispatchExprSpec extends SparkSpec {
 
   private val fields = Seq("A", "B", "C")
@@ -143,19 +143,26 @@ class RuleDispatchExprSpec extends SparkSpec {
     }
   }
 
-  test("alertsMerged: dispatch-expr path == expression-tree path at 1000 rules") {
+  test("alertsMerged at 1000 rules == the Pred.evaluator reference") {
+    // the bag of (rule name, origin uuid) pairs: a fired rid that indexed
+    // the wrong row of the 1000-rule metadata literal shows up as a
+    // wrong name
     val rules = graft.StreamBench.cloneRules(graft.rules.ReferenceCorpus.active, 1000)
     val df = graft.ops.Detection.nestedFrom(graft.ops.Detection.synthFrom(
       spark.range(200).select(col("id").as("event_id"),
         timestamp_micros(lit(1700000000000000L) + col("id") * 1000).as("ts"))))
-    def canon(d: DataFrame): Seq[String] =
-      d.select(to_json(struct(col("computer_name"), col("host"), col("event"),
-        col("threat"), col("rule")))).collect().map(_.getString(0)).sorted.toSeq
-    val viaExpr = canon(graft.engine.AlertPipeline.alertsMerged(df, rules,
-      dispatchExpr = true))
-    val viaTree = canon(graft.engine.AlertPipeline.alertsMerged(df, rules,
-      dispatchExpr = false))
-    assert(viaExpr.nonEmpty && viaExpr == viaTree)
+    val got = graft.engine.AlertPipeline.alertsMerged(df, rules)
+      .select(col("rule.name"), col("event.origin_ids")(0))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    val evs = rules.map(r => (r.name, r.where.evaluator))
+    val want = df.select("uuid", "event_id", "event_data").collect().toSeq.flatMap { row =>
+      val ed = row.getStruct(2)
+      val field: String => String = f => ed.getAs[String](f)
+      val top: String => Any = c => if (c == "event_id") row.get(1) else null
+      evs.collect { case (name, ev) if ev(field, top) == java.lang.Boolean.TRUE =>
+        (name, row.getString(0)) }
+    }.sorted
+    assert(got.nonEmpty && got == want)
   }
 
   test("plan is O(1) in rule count: node AND expression counts equal at 25 vs 1000 rules") {

@@ -2,7 +2,10 @@ package graft.jobs
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CLI argument parsing for the job entry point (pure, no session). */
+import graft.engine.{AlertPipeline, Sources}
+
+/** CLI argument parsing and per-query conf resolution for the job entry
+  * point (pure, no session). */
 class MainSpec extends AnyFunSuite {
   test("parses --rules and repeated --conf key=value pairs") {
     val a = Main.parseArgs(List(
@@ -29,5 +32,22 @@ class MainSpec extends AnyFunSuite {
   test("rejects malformed --conf and unknown flags") {
     intercept[IllegalArgumentException](Main.parseArgs(List("--conf", "novalue")))
     intercept[IllegalArgumentException](Main.parseArgs(List("--bogus")))
+  }
+
+  test("every query of a deployment checkpoints to its own directory") {
+    // Main starts the main query on `conf` and sequence query i on
+    // AlertPipeline.startSequence(conf, i), which resolves
+    // sequenceConf(conf, i); the checkpoint each writer gets is
+    // Sources.checkpointDir of that conf (no Kafka jar here, so the conf
+    // resolution is checked, not a started query)
+    val kafka = Map("kafka_brokers" -> "b:9092", "kafka_source_topic" -> "sysmon",
+      "kafka_sink_topic" -> "alerts", "kafka_group_id" -> "graft")
+    val files = Map("sink.type" -> "files", "sink.path" -> "/data/alerts")
+    for (conf <- Seq(kafka, kafka + ("checkpoint" -> "/ck"), files,
+        files + ("checkpoint" -> "/ck"))) {
+      val dirs = Sources.checkpointDir(conf) +:
+        (0 until 3).map(i => Sources.checkpointDir(AlertPipeline.sequenceConf(conf, i)))
+      assert(dirs.distinct.size == dirs.size, (conf, dirs))
+    }
   }
 }
