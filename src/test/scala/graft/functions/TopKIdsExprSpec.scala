@@ -55,6 +55,17 @@ class TopKIdsExprSpec extends AnyFunSuite {
     }
   }
 
+  test("every cut merges a raw and a deserialised half to the top-k") {
+    for (k <- ks; xs <- cases(4); cut <- 0 to xs.length) {
+      val e = agg(k)
+      val (a, b) = xs.splitAt(cut)
+      val want = expected(xs, k)
+      def revived(part: List[(Double, Long)]) = e.deserialize(e.serialize(fill(k, part)))
+      assert(contents(e.merge(fill(k, a), revived(b))) == want, (k, xs, cut))
+      assert(contents(e.merge(revived(a), fill(k, b))) == want, (k, xs, cut))
+    }
+  }
+
   test("the buffer never holds more than k entries") {
     for (k <- ks; xs <- cases(3)) {
       val buf = agg(k).createAggregationBuffer()
