@@ -1,8 +1,8 @@
 package graft
 
 /** One-shot host-health reading using the bench's OWN calibration loops —
-  * run this before starting any record (batch bench, StreamBench record,
-  * ScaleProbe, tf-battery point) to know whether the window is clean
+  * run this before starting any record (batch bench, ScaleProbe,
+  * StreamBench tfbattery/combined) to know whether the window is clean
   * WITHOUT paying a full measurement: prints the single-thread `calib`,
   * the all-core `calib_mt`, the 1-min load average, and a PASS/FAIL
   * verdict against the same gate `Bench.gatedPasses` enforces

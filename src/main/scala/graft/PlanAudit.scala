@@ -215,7 +215,7 @@ object PlanAudit {
     * hugeMethodLimit=65535 a stage in the (8000, 65535] window silently
     * runs INTERPRETED generated code — the 25-rule merged detection
     * dispatch lived exactly there, 4-5× slower per event until round 12
-    * measured it (TriggerProbe A/B: 2.1 s → 0.54 s per 400k-event
+    * measured it (2.1 s → 0.54 s per 400k-event rate-source
     * trigger). Under the library's SessionDefaults (hugeMethodLimit=8000)
     * such stages take the visible per-operator-codegen fallback instead,
     * so a listing here means "this stage does not fuse", not "this stage

@@ -39,11 +39,11 @@ sealed trait Pred {
     * so `evaluator(...) == TRUE` is exactly "row passes the filter".
     * Regexes/IN-sets build once here, not per row, and Like mirrors
     * toColumn's startsWith/endsWith/contains specializations so relative
-    * costs track the Spark plan. This is the off-Spark path StreamBench's
-    * cost calibration uses: compiling and timing 1000 per-rule Spark
-    * plans fills the JVM code cache and measurably degrades whatever
-    * codegen'd plan runs NEXT in the same JVM — the in-process evaluator
-    * leaves the measured streaming phase untouched. PredicatesSpec pins
+    * costs track the Spark plan. It is the off-Spark reference that
+    * graftbench and RuleDispatchExprSpec check alerts against, and it
+    * generates no code: timing 1000 per-rule Spark plans instead filled
+    * the JVM code cache and measurably slowed the codegen'd plan that ran
+    * NEXT in the same JVM (round 7 cost calibration). PredicatesSpec pins
     * evaluator ≡ toColumn over the full corpus on the synth load. */
   def evaluator: Pred.Ev = {
     import Pred._

@@ -147,7 +147,7 @@ object AlertPipeline {
     * micro-batch, and a broadcast join REBUILDS and re-ships the broadcast
     * each trigger. A constant folded into the plan costs one fold per
     * trigger instead of one broadcast job per trigger — measured
-    * per-trigger at 25 rules / 400k events (TriggerProbe): literal
+    * per-trigger at 25 rules / 400k rate-source events: literal
     * ~540 ms vs broadcast ~710 ms, and planning 120 ms vs 270 ms.
     *
     * No JIT dead zone at any rule count: `rule_dispatch` generates ONE
@@ -183,7 +183,7 @@ object AlertPipeline {
     * spelled it `array(struct(lit(...)...)...)` and let ConstantFolding
     * collapse it — correct, but the ANALYZER and OPTIMIZER walk the
     * unfolded tree first, and at 1000 rules those ~15k foldable nodes
-    * cost 13.4 s of plan build (RuleFanoutProbe) — paid EVERY micro-batch
+    * cost 13.4 s of plan build (measured round 12) — paid EVERY micro-batch
     * in streaming, where the plan is rebuilt per trigger. A single
     * pre-converted Literal node costs ~0.5 s of plan build at 1000 rules. */
   private[graft] def metaLiteral(rules: Seq[RuleDef]): Column =

@@ -227,7 +227,7 @@ case class RuleDispatchExpr(eventData: Expression, eventId: Expression,
     * elimination across the when/otherwise tree. Per-rule methods hide
     * the sharing from Janino, and the first draft of this expression lost
     * 2.6× per-row to the tree at 1000 cloned rules exactly there
-    * (batch noop-write 28.1 s vs 11.0 s, TriggerProbe). The fix is LAZY
+    * (batch noop-write 28.1 s vs 11.0 s, round 13). The fix is LAZY
     * per-row memoization, which the eager CSE can't do: every predicate
     * subtree occurring more than once gets a tri-state cache slot
     * (sentinel 3 = not yet computed this row), and every referenced

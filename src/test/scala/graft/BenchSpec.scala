@@ -366,53 +366,4 @@ class BenchSpec extends AnyFunSuite {
       ("\"m_" + k + "\":(-?\\d+)").r.findFirstMatchIn(j2).get.group(1).toLong
     assert(num2("eps") == num("steady_eps") / 10)
   }
-
-  test("stream gate: a clean row accepts on the first bracket (r17)") {
-    val calib = Iterator(0.12, 0.13)
-    var runs = 0
-    val (row, h, used) = StreamBench.gatedRow(gate = 0.165, retries = 3,
-      calibFn = () => calib.next(), run = () => { runs += 1; s""""m_eps":$runs""" },
-      settle = () => fail("clean row must not settle"))
-    assert(h.ok && used == 0 && runs == 1 && h.brackets == Seq((0.12, 0.13)))
-    assert(row == """"m_eps":1""")
-  }
-
-  test("stream gate: a contended row re-runs and keeps the CLEAN measurement (r17)") {
-    // bracket 1 contended (0.40 post), bracket 2 clean — the kept row must
-    // be the SECOND run's, exactly like gatedPasses discards rejected
-    // rotations
-    val calib = Iterator(0.12, 0.40, 0.13, 0.12)
-    var runs = 0
-    var settles = 0
-    val (row, h, used) = StreamBench.gatedRow(gate = 0.165, retries = 3,
-      calibFn = () => calib.next(), run = () => { runs += 1; s""""m_eps":$runs""" },
-      settle = () => settles += 1)
-    assert(h.ok && used == 1 && settles == 1 && runs == 2)
-    assert(row == """"m_eps":2""", "the contended measurement must be discarded")
-    assert(h.brackets == Seq((0.12, 0.40), (0.13, 0.12)))
-  }
-
-  test("stream gate: an exhausted retry budget keeps the row but marks it red (r17)") {
-    var calls = 0
-    val (row, h, used) = StreamBench.gatedRow(gate = 0.165, retries = 2,
-      calibFn = () => { calls += 1; 0.5 }, run = () => """"m_eps":1""",
-      settle = () => ())
-    assert(!h.ok && used == 2 && h.brackets.size == 3)
-    assert(calls == 6, "bounded: two calib readings per attempt")
-    assert(row == """"m_eps":1""", "a red record still emits, self-marked")
-    // a zero budget (shared budget spent by earlier rows) never retries
-    val (_, h2, u2) = StreamBench.gatedRow(gate = 0.165, retries = 0,
-      calibFn = () => 0.5, run = () => "x", settle = () => fail("no budget"))
-    assert(!h2.ok && u2 == 0 && h2.brackets.size == 1)
-  }
-
-  test("stream gate: stampRow stamps fragments and sharded objects (r17)") {
-    val h = StreamBench.RowHealth(ok = true, Seq((0.401, 0.22), (0.121, 0.134)))
-    // fragment rows (statsJson shape) get suffixed fields
-    assert(StreamBench.stampRow(""""m_eps":5,"m_p50_ms":80""", "m", h) ==
-      """"m_eps":5,"m_p50_ms":80,"m_bracket":[0.121,0.134],"m_hok":true""")
-    // full-object rows (sharded) get them injected before the brace
-    assert(StreamBench.stampRow("""{"k":4,"rules":250}""", "s", h) ==
-      """{"k":4,"rules":250,"s_bracket":[0.121,0.134],"s_hok":true}""")
-  }
 }

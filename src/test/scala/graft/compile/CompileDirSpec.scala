@@ -225,14 +225,35 @@ class CompileDirSpec extends AnyFunSuite {
     assert(msg.contains("a_bad.yml") && msg.contains("not deployed"), msg)
   }
 
-  test("fan-out probe's synthetic rule corpus compiles through the directory path") {
-    // the 1000-rule probe's YAML must exercise the REAL compileDir
-    // pipeline — pin here that the generated document compiles to the
-    // expected shape, at a small count (the probe itself runs 1000)
+  /** One synthetic Sigma YAML document: a `CommandLine|contains` pair of
+    * patterns unique to rule `i`; every 25th rule also carries a pool
+    * literal ("cmdkey /list"). Patterns are hyphen-separated — `_` is
+    * LIKE's single-char wildcard and would make each literal subtly
+    * broader than written. */
+  private def ruleYaml(i: Int): String = {
+    val fire = if (i % 25 == 0) "\n      - 'cmdkey /list'" else ""
+    s"""title: Synthetic fan-out probe rule $i
+       |author: probe
+       |level: medium
+       |description: synthetic probe rule $i
+       |tags:
+       |  - attack.execution
+       |  - attack.t1059
+       |logsource:
+       |  category: process_creation
+       |detection:
+       |  selection:
+       |    CommandLine|contains:
+       |      - '--fanout-probe-$i-a'
+       |      - '--fanout-probe-$i-b'$fire
+       |  condition: selection
+       |""".stripMargin
+  }
+
+  test("compileDir compiles a generated directory of contains rules") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-fanout-yaml")
     (0 until 30).foreach(i => java.nio.file.Files.write(
-      tmp.resolve(f"synthetic_$i%04d.yml"),
-      graft.RuleFanoutProbe.ruleYaml(i).getBytes("UTF-8")))
+      tmp.resolve(f"synthetic_$i%04d.yml"), ruleYaml(i).getBytes("UTF-8")))
     val rules = RuleCompiler.compileDir(tmp.toString)
     assert(rules.size == 30)
     val r1 = rules.find(_.name == "Synthetic fan-out probe rule 1").get
@@ -241,7 +262,7 @@ class CompileDirSpec extends AnyFunSuite {
     assert(sql.contains("event_id = 1"), sql)
     assert(sql.contains("-fanout-probe-1-a") && sql.contains("-fanout-probe-1-b"), sql)
     assert(r1.severity == 5 && r1.technique == Seq("attack.t1059"))
-    // every 25th rule carries the firing pool literal, others never fire
+    // every 25th rule carries the pool literal, the others do not
     val r0 = rules.find(_.name == "Synthetic fan-out probe rule 0").get
     assert(r0.where.toDuckDb(f => f).contains("cmdkey /list"))
     assert(!sql.contains("cmdkey /list"))

@@ -6,11 +6,12 @@ import graft.SparkSpec
 import graft.ops.Detection
 import graft.rules.ReferenceCorpus
 
-/** Pins Pred.evaluator (the off-Spark row interpreter behind StreamBench's
-  * cost calibration) against the Spark Column path: for every corpus rule,
-  * the set of matching events over the synth load must be IDENTICAL —
-  * including the Kleene-null edges (IS NULL probes, negated nulls, deep
-  * exclusion chains). A drift here would mis-rank rule costs silently. */
+/** Pins Pred.evaluator (the off-Spark row interpreter that graftbench and
+  * RuleDispatchExprSpec use as the alert reference) against the Spark
+  * Column path: for every corpus rule, the set of matching events over
+  * the synth load must be IDENTICAL — including the Kleene-null edges (IS NULL probes, negated nulls, deep
+  * exclusion chains). A drift here would silently corrupt the alert
+  * reference every dispatch check compares against. */
 class EvaluatorSpec extends SparkSpec {
   test("evaluator matches the Spark filter for every corpus rule on the synth load") {
     val flat = Detection.synth(spark, "/root/testdata/sf0.001")

@@ -6,13 +6,17 @@ mechanically instead of re-reading COVERAGE.md prose tables.
 Usage:
   python3 tools/build_probes.py PROBES.json round=11 \
       scale=/tmp/probes_scale.json plan_audit=/tmp/probes_audit.json \
-      rule_fanout=/tmp/probes_fanout.json stream_record=/tmp/sb.json \
+      tf_battery=/tmp/tfb.json combined=/tmp/comb.json \
       spill=/tmp/probes_spill.json
 
-Each value is a file holding one JSON object (the probe mains write these
-under GRAFT_SCALE_JSON / GRAFT_AUDIT_JSON / GRAFT_FANOUT_JSON, or a saved
-stdout line). Sections whose file is missing are skipped with a warning —
-the artifact records what was actually measured, never placeholders.
+Each value is a file holding one JSON object: ScaleProbe and PlanAudit
+write theirs under GRAFT_SCALE_JSON / GRAFT_AUDIT_JSON; for the others
+save the main's stdout JSON line (`StreamBench tfbattery|combined`).
+Sections whose file is missing are skipped with a warning — the artifact
+records what was actually measured, never placeholders. The committed
+`rule_fanout`, `stream_record` and `stream_e2e` sections are history:
+the mains that wrote them (RuleFanoutProbe, StreamBench record/e2e) are
+gone, and graftbench/run.py measures the deployed streaming topology.
 """
 import json
 import sys
