@@ -52,8 +52,8 @@ object StreamBench {
   /** One run's stats as JSON fields: the full post-warm-drop window
     * (eps/batches/p50/p95) PLUS a STEADY tail window (the last half of the
     * kept samples) and the warm-up bookkeeping, so the line stands alone:
-    * at large rule counts the first triggers are still JIT-compiling the
-    * generated methods, and the full-window p95 mixes that warm-up in.
+    * the first triggers are still JIT-compiling, and the full-window p95
+    * mixes that warm-up in.
     * `inputFactor` divides rows: numInputRows counts the shared source
     * once per union branch. */
   private[graft] def statsJson(name: String, all: Seq[(Long, Long)],

@@ -150,10 +150,10 @@ object AlertPipeline {
     * per-trigger at 25 rules / 400k rate-source events: literal
     * ~540 ms vs broadcast ~710 ms, and planning 120 ms vs 270 ms.
     *
-    * No JIT dead zone at any rule count: `rule_dispatch` generates ONE
-    * SMALL METHOD PER RULE plus 64-call block methods, so the fused stage
-    * method does not grow with the rule count and stays under HotSpot's
-    * 8000-byte JIT ceiling (PlanAuditSpec pins 25 and 1000 rules).
+    * No JIT dead zone at any rule count: `rule_dispatch`'s generated
+    * code is one call into its evaluator, so the fused stage method does
+    * not grow with the rule count and stays under HotSpot's 8000-byte
+    * JIT ceiling (PlanAuditSpec pins 25 and 1000 rules).
     *
     * Also the BATCH-mode winner at any rule count: a batch union fan-out
     * re-executes the source scan per branch (Spark reuses the scan across

@@ -16,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   * whose method lands in the 8-64 KB window runs INTERPRETED generated
   * code — silently, with no log line and no plan marker. Round 12
   * measured the 25-rule merged detection dispatch, then a fused
-  * when/otherwise tree, exactly there (`rule_dispatch` has since emitted
-  * one method per rule and stays out of the window at any rule count,
-  * so the limit now guards the other large fused stages): 400k
+  * when/otherwise tree, exactly there (`rule_dispatch`'s generated code
+  * is one call into its evaluator and stays out of the window at any
+  * rule count, so the limit now guards the other large fused stages): 400k
   * event micro-batches took 2.1 s interpreted vs 0.54 s once Spark was
   * told to abandon fusion at the JIT ceiling (per-operator codegen
   * compiles expression-level methods that split and JIT fine). 8000

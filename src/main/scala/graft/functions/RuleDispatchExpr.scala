@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.compile._
@@ -26,24 +28,17 @@ import graft.compile._
   * so plan-build cost is O(1) in rule count while the per-row work is
   * unchanged.
   *
-  * Codegen (the ShingleIdsExpr discipline, adapted): each rule compiles
-  * to its OWN private method — `byte rule_i(ed, edNull, eid, eidNull)`
-  * returning SQL tri-state (0=false, 1=true, 2=null) with Kleene
-  * AND/OR/NOT and the same short-circuit order as Spark's generated
-  * And/Or, so measured per-rule cost tracks the expression-tree plan's.
-  * Rules are grouped into batch-of-[[RuleDispatchExpr.BlockSize]] block
-  * methods; every generated method (rule, block, and the top-level stage
-  * fragment, which is just #blocks calls) stays far below HotSpot's
-  * 8000-byte DontCompileHugeMethods ceiling, so the JIT dead zone the
-  * r12 round diagnosed (SessionDefaults) cannot re-form here at ANY rule
-  * count: the fused stage method no longer grows with rules at all.
-  * String/pattern/set constants ride `ctx.addReferenceObj`, keeping the
-  * generated source free of escaping hazards (the corpus is full of
-  * Windows-path backslashes).
-  *
-  * Interpreted eval compiles each predicate once to a closure chain with
-  * identical tri-state semantics (RuleDispatchExprSpec pins codegen ≡
-  * interpreted over the corpus and random batteries).
+  * Evaluation: each predicate compiles once per instance to a closure
+  * chain returning SQL tri-state (0=false, 1=true, 2=null) with Kleene
+  * AND/OR/NOT and the same short-circuit order as Spark's And/Or, and
+  * subtrees shared across rules are memoised per row. `dispatch` is the
+  * one evaluator: `eval` calls it, and the generated code is the
+  * children's code plus one `dispatch` call, so whole-stage fusion stays
+  * while the generated source does not grow with the rule count.
+  * Generating Java per rule instead (one method per rule, 64-rule block
+  * methods, memo methods) regenerated about 786 KB of source per trigger
+  * at 250 rules, and JFR runs of the 250-rule streaming benchmark put
+  * about 10 s of JIT compile time on those methods.
   *
   * Fired-id semantics match the tree spelling exactly: rule i is emitted
   * iff its predicate is TRUE (NULL and FALSE both skip), ids ascending —
@@ -109,142 +104,22 @@ case class RuleDispatchExpr(eventData: Expression, eventId: Expression,
       s"rule_dispatch expects a STRUCT event_data, got ${other.catalogString}")
   }
 
-  // ---- interpreted path ---------------------------------------------------
+  // ---- the evaluator -----------------------------------------------------
 
-  /** (event_data row or null, event_id is null, event_id) → tri-state. */
-  private type Ev3 = (InternalRow, Boolean, Long) => Byte
-
-  @transient private lazy val compiled: Array[Ev3] = preds.map(compile).toArray
-
-  private def compile(p: Pred): Ev3 = p match {
-    case Eq(f, v) =>
-      val ord = ordinals(f); val lit = UTF8String.fromString(v)
-      (ed, _, _) => {
-        val s = strAt(ed, ord)
-        if (s == null) NULL3 else if (s.equals(lit)) TRUE3 else FALSE3
-      }
-    case In(f, vs) =>
-      val ord = ordinals(f)
-      val set = new java.util.HashSet[UTF8String](vs.size * 2)
-      vs.foreach(v => set.add(UTF8String.fromString(v)))
-      (ed, _, _) => {
-        val s = strAt(ed, ord)
-        if (s == null) NULL3 else if (set.contains(s)) TRUE3 else FALSE3
-      }
-    case IsNull(f) =>
-      val ord = ordinals(f)
-      (ed, _, _) => if (strAt(ed, ord) == null) TRUE3 else FALSE3
-    case Like(f, pattern) =>
-      val ord = ordinals(f)
-      import Pred._
-      def str(g: UTF8String => Boolean): Ev3 = (ed, _, _) => {
-        val s = strAt(ed, ord)
-        if (s == null) NULL3 else if (g(s)) TRUE3 else FALSE3
-      }
-      parseLike(pattern) match {
-        case List(Lit(s0)) => val l = UTF8String.fromString(s0); str(_.equals(l))
-        case List(AnyN) => str(_ => true)
-        case List(AnyN, Lit(s0)) => val l = UTF8String.fromString(s0); str(_.endsWith(l))
-        case List(Lit(s0), AnyN) => val l = UTF8String.fromString(s0); str(_.startsWith(l))
-        case List(AnyN, Lit(s0), AnyN) => val l = UTF8String.fromString(s0); str(_.contains(l))
-        case _ =>
-          val re = java.util.regex.Pattern.compile(likeToRegex(pattern))
-          str(s => re.matcher(s.toString).find())
-      }
-    case SimilarTo(f, pattern) =>
-      val ord = ordinals(f)
-      val re = java.util.regex.Pattern.compile(s"^(?:${Pred.fixRegex(pattern)})$$")
-      (ed, _, _) => {
-        val s = strAt(ed, ord)
-        if (s == null) NULL3 else if (re.matcher(s.toString).find()) TRUE3 else FALSE3
-      }
-    case TopEq(_, v) =>
-      (_, eidNull, eid) =>
-        if (eidNull) NULL3 else if (eid == v) TRUE3 else FALSE3
-    case And(l, r) =>
-      val le = compile(l); val re = compile(r)
-      (ed, en, e) => {
-        val a = le(ed, en, e)
-        if (a == FALSE3) FALSE3
-        else {
-          val b = re(ed, en, e)
-          if (b == FALSE3) FALSE3
-          else if (a == NULL3 || b == NULL3) NULL3
-          else TRUE3
-        }
-      }
-    case Or(l, r) =>
-      val le = compile(l); val re = compile(r)
-      (ed, en, e) => {
-        val a = le(ed, en, e)
-        if (a == TRUE3) TRUE3
-        else {
-          val b = re(ed, en, e)
-          if (b == TRUE3) TRUE3
-          else if (a == NULL3 || b == NULL3) NULL3
-          else FALSE3
-        }
-      }
-    case Not(q) =>
-      val qe = compile(q)
-      (ed, en, e) => {
-        val a = qe(ed, en, e)
-        if (a == NULL3) NULL3 else if (a == TRUE3) FALSE3 else TRUE3
-      }
-  }
-
-  private def strAt(ed: InternalRow, ord: Int): UTF8String =
-    if (ed == null || ed.isNullAt(ord)) null else ed.getUTF8String(ord)
-
-  // per-thread fired-id scratch (eval may run concurrently on one instance)
-  @transient private lazy val evalBuf = new ThreadLocal[Array[Int]] {
-    override def initialValue(): Array[Int] = new Array[Int](preds.size)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val ed = eventData.eval(input).asInstanceOf[InternalRow]
-    val eidAny = eventId.eval(input)
-    val eidNull = eidAny == null
-    val eid = if (eidNull) 0L else eidAny.asInstanceOf[Long]
-    val evs = compiled
-    val buf = evalBuf.get()
-    var n = 0
-    var i = 0
-    while (i < evs.length) {
-      if (evs(i)(ed, eidNull, eid) == TRUE3) { buf(n) = i; n += 1 }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(buf, n))
-  }
-
-  // ---- codegen path -------------------------------------------------------
-
-  /** Codegen-time cross-rule sharing state. Real rule fleets repeat
+  /** Memo slot of every predicate subtree that occurs more than once in
+    * the battery, assigned once per instance. Real rule fleets repeat
     * structure — a cloned fleet shares 25 base predicates 40× each, and
-    * even hand-written corpora repeat event-gate conjuncts — and Spark's
-    * whole-stage codegen exploits that with common-subexpression
-    * elimination across the when/otherwise tree. Per-rule methods hide
-    * the sharing from Janino, and the first draft of this expression lost
-    * 2.6× per-row to the tree at 1000 cloned rules exactly there
-    * (batch noop-write 28.1 s vs 11.0 s, round 13). The fix is LAZY
-    * per-row memoization, which the eager CSE can't do: every predicate
-    * subtree occurring more than once gets a tri-state cache slot
-    * (sentinel 3 = not yet computed this row), and every referenced
-    * event_data field gets a lazily-filled UTF8String slot — so repeated
-    * work is paid once per row like CSE, but work short-circuited away is
-    * never paid at all (corpus rules mostly die on their event_id gate). */
-  private final class GenState(ctx: CodegenContext) {
-    // per-INSTANCE function-name prefix: two dispatch expressions landing
-    // in one generated class (e.g. two batteries in one projection) would
-    // otherwise both emit graftRule0/graftSub0/... — duplicate methods,
-    // Janino compile failure, silent interpreted fallback. freshName is
-    // unique within the CodegenContext.
-    val pfx: String = ctx.freshName("graftDispatch")
-    // census: structural occurrence count of every subtree in the battery
-    private val occurs = new java.util.HashMap[Pred, Integer]()
-    private def census(p: Pred): Unit = {
-      occurs.merge(p, 1, (a, b) => a + b)
+    * even hand-written corpora repeat event-gate conjuncts — and the memo
+    * is LAZY: a shared subtree is evaluated at most once per row, but
+    * work that a short circuit skips is never paid at all (corpus rules
+    * mostly die on their event_id gate). Without it this evaluator ran a
+    * 1000-rule cloned fleet 3.7× slower (batch noop write of 400k rows,
+    * 4 cores: 14.6 s vs 3.9 s). TopEq and IsNull cost no more than a
+    * memo probe, so they are never memoised. */
+  @transient private lazy val memoSlots: Map[Pred, Int] = {
+    val occurs = scala.collection.mutable.HashMap.empty[Pred, Int]
+    def census(p: Pred): Unit = {
+      occurs(p) = occurs.getOrElse(p, 0) + 1
       p match {
         case And(l, r) => census(l); census(r)
         case Or(l, r) => census(l); census(r)
@@ -253,237 +128,153 @@ case class RuleDispatchExpr(eventData: Expression, eventId: Expression,
       }
     }
     preds.foreach(census)
-    private def memoizable(p: Pred): Boolean = p match {
-      // a cache probe costs as much as these leaves themselves
-      case TopEq(_, _) | IsNull(_) => false
-      case _ => occurs.get(p) != null && occurs.get(p) > 1
-    }
+    occurs.iterator.collect {
+      case (p, n) if n > 1 && !p.isInstanceOf[TopEq] && !p.isInstanceOf[IsNull] => p
+    }.zipWithIndex.toMap
+  }
 
-    // slots assigned up-front so the mutable-state arrays have final sizes
-    private val memoSlots: Map[Pred, Int] = {
-      val m = scala.collection.mutable.LinkedHashMap.empty[Pred, Int]
-      def walk(p: Pred): Unit = {
-        if (memoizable(p) && !m.contains(p)) m(p) = m.size
-        p match {
-          case And(l, r) => walk(l); walk(r)
-          case Or(l, r) => walk(l); walk(r)
-          case Not(q) => walk(q)
-          case _ => ()
+  /** One closure chain per rule; a memoised subtree compiles once and is
+    * shared by every rule that contains it. */
+  @transient private lazy val compiled: Array[Ev3] = {
+    val shared = scala.collection.mutable.HashMap.empty[Pred, Ev3]
+    def comp(p: Pred): Ev3 = memoSlots.get(p) match {
+      case None => compile(p, comp)
+      case Some(slot) => shared.get(p) match {
+        case Some(ev) => ev
+        case None =>
+          val inner = compile(p, comp)
+          val ev: Ev3 = (ed, en, e, memo) => {
+            val v = memo(slot)
+            if (v != UNSET3) v
+            else { val r = inner(ed, en, e, memo); memo(slot) = r; r }
+          }
+          shared(p) = ev
+          ev
+      }
+    }
+    preds.map(comp).toArray
+  }
+
+  /** Tri-state (0=false, 1=true, 2=null) closure for `p` with Kleene
+    * AND/OR/NOT and the same short-circuit order as Spark's And/Or;
+    * `sub` compiles the children (and applies the memo). */
+  private def compile(p: Pred, sub: Pred => Ev3): Ev3 = p match {
+    case Eq(f, v) =>
+      val lit = UTF8String.fromString(v)
+      strLeaf(f, _.equals(lit))
+    case In(f, vs) =>
+      val set = new java.util.HashSet[UTF8String](vs.size * 2)
+      vs.foreach(v => set.add(UTF8String.fromString(v)))
+      strLeaf(f, set.contains(_))
+    case IsNull(f) =>
+      val ord = ordinals(f)
+      (ed, _, _, _) => if (strAt(ed, ord) == null) TRUE3 else FALSE3
+    case Like(f, pattern) =>
+      import Pred._
+      parseLike(pattern) match {
+        case List(Lit(s0)) => val l = UTF8String.fromString(s0); strLeaf(f, _.equals(l))
+        case List(AnyN) => strLeaf(f, _ => true)
+        case List(AnyN, Lit(s0)) => val l = UTF8String.fromString(s0); strLeaf(f, _.endsWith(l))
+        case List(Lit(s0), AnyN) => val l = UTF8String.fromString(s0); strLeaf(f, _.startsWith(l))
+        case List(AnyN, Lit(s0), AnyN) => val l = UTF8String.fromString(s0); strLeaf(f, _.contains(l))
+        case _ =>
+          val re = java.util.regex.Pattern.compile(likeToRegex(pattern))
+          strLeaf(f, s => re.matcher(s.toString).find())
+      }
+    case SimilarTo(f, pattern) =>
+      val re = java.util.regex.Pattern.compile(s"^(?:${Pred.fixRegex(pattern)})$$")
+      strLeaf(f, s => re.matcher(s.toString).find())
+    case TopEq(_, v) =>
+      (_, eidNull, eid, _) =>
+        if (eidNull) NULL3 else if (eid == v) TRUE3 else FALSE3
+    case And(l, r) =>
+      val le = sub(l); val re = sub(r)
+      (ed, en, e, m) => {
+        val a = le(ed, en, e, m)
+        if (a == FALSE3) FALSE3
+        else {
+          val b = re(ed, en, e, m)
+          if (b == FALSE3) FALSE3
+          else if (a == NULL3 || b == NULL3) NULL3
+          else TRUE3
         }
       }
-      preds.foreach(walk)
-      m.toMap
-    }
-    private val fieldSlots: Map[String, Int] = {
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-      def walk(p: Pred): Unit = p match {
-        case Eq(f, _) => m.getOrElseUpdate(f, m.size); ()
-        case In(f, _) => m.getOrElseUpdate(f, m.size); ()
-        case IsNull(f) => m.getOrElseUpdate(f, m.size); ()
-        case Like(f, _) => m.getOrElseUpdate(f, m.size); ()
-        case SimilarTo(f, _) => m.getOrElseUpdate(f, m.size); ()
-        case TopEq(_, _) => ()
-        case And(l, r) => walk(l); walk(r)
-        case Or(l, r) => walk(l); walk(r)
-        case Not(q) => walk(q)
+    case Or(l, r) =>
+      val le = sub(l); val re = sub(r)
+      (ed, en, e, m) => {
+        val a = le(ed, en, e, m)
+        if (a == TRUE3) TRUE3
+        else {
+          val b = re(ed, en, e, m)
+          if (b == TRUE3) TRUE3
+          else if (a == NULL3 || b == NULL3) NULL3
+          else FALSE3
+        }
       }
-      preds.foreach(walk)
-      m.toMap
-    }
-
-    val mcache: String =
-      if (memoSlots.isEmpty) ""
-      else ctx.addMutableState("byte[]", "graftMemo",
-        v => s"$v = new byte[${memoSlots.size}];")
-    private val fcache = ctx.addMutableState(
-      "org.apache.spark.unsafe.types.UTF8String[]", "graftFields",
-      v => s"$v = new org.apache.spark.unsafe.types.UTF8String[${math.max(1, fieldSlots.size)}];")
-    val fdone: String = ctx.addMutableState("boolean[]", "graftFieldsDone",
-      v => s"$v = new boolean[${math.max(1, fieldSlots.size)}];")
-
-    /** Per-row cache reset, emitted once at the top of the dispatch. */
-    def resetCode: String = {
-      val m = if (memoSlots.isEmpty) ""
-        else s"java.util.Arrays.fill($mcache, (byte)3);"
-      s"""$m
-         |java.util.Arrays.fill($fdone, false);""".stripMargin
-    }
-
-    // one accessor method per referenced field: lazily extracts + caches
-    private val fieldFns: Map[String, String] = fieldSlots.map { case (f, slot) =>
-      val ord = ordinals(f)
-      f -> ctx.addNewFunction(s"${pfx}Fld$slot",
-        s"""private org.apache.spark.unsafe.types.UTF8String ${pfx}Fld$slot(
-           |    ${classOf[InternalRow].getName} ed, boolean edNull) {
-           |  if (!$fdone[$slot]) {
-           |    $fcache[$slot] = (edNull || ed.isNullAt($ord)) ? null : ed.getUTF8String($ord);
-           |    $fdone[$slot] = true;
-           |  }
-           |  return $fcache[$slot];
-           |}""".stripMargin)
-    }
-    def field(f: String): String = s"${fieldFns(f)}(ed, edNull)"
-
-    private val memoFns = scala.collection.mutable.HashMap.empty[Pred, String]
-
-    /** Tri-state code for `p`: memoized subtrees become a cached-method
-      * call; everything else inlines. Returns (statements, result var). */
-    def gen(p: Pred): (String, String) =
-      memoSlots.get(p) match {
-        case Some(slot) =>
-          val fn = memoFns.getOrElseUpdate(p, {
-            val (code, v) = genInner(p)
-            ctx.addNewFunction(s"${pfx}Sub$slot",
-              s"""private byte ${pfx}Sub$slot(${classOf[InternalRow].getName} ed,
-                 |    boolean edNull, long eid, boolean eidNull) {
-                 |  if ($mcache[$slot] == (byte)3) {
-                 |    $code
-                 |    $mcache[$slot] = $v;
-                 |  }
-                 |  return $mcache[$slot];
-                 |}""".stripMargin)
-          })
-          val r = ctx.freshName("p")
-          (s"byte $r = $fn(ed, edNull, eid, eidNull);", r)
-        case None => genInner(p)
+    case Not(q) =>
+      val qe = sub(q)
+      (ed, en, e, m) => {
+        val a = qe(ed, en, e, m)
+        if (a == NULL3) NULL3 else if (a == TRUE3) FALSE3 else TRUE3
       }
+  }
 
-    private def genInner(p: Pred): (String, String) = {
-      val r = ctx.freshName("p")
-      def strLeaf(f: String, test: String => String): (String, String) = {
-        val s = ctx.freshName("s")
-        val code =
-          s"""byte $r;
-             |{
-             |  org.apache.spark.unsafe.types.UTF8String $s = ${field(f)};
-             |  if ($s == null) { $r = (byte)2; }
-             |  else { $r = ${test(s)} ? (byte)1 : (byte)0; }
-             |}""".stripMargin
-        (code, r)
-      }
-      def utf8Ref(v: String): String = ctx.addReferenceObj("ruleLit",
-        UTF8String.fromString(v), "org.apache.spark.unsafe.types.UTF8String")
-      def patternRef(regex: String): String = ctx.addReferenceObj("rulePat",
-        java.util.regex.Pattern.compile(regex), "java.util.regex.Pattern")
-
-      p match {
-        case Eq(f, v) => strLeaf(f, s => s"$s.equals(${utf8Ref(v)})")
-        case In(f, vs) =>
-          val set = new java.util.HashSet[UTF8String](vs.size * 2)
-          vs.foreach(v => set.add(UTF8String.fromString(v)))
-          val ref = ctx.addReferenceObj("ruleSet", set, "java.util.HashSet")
-          strLeaf(f, s => s"$ref.contains($s)")
-        case IsNull(f) =>
-          (s"byte $r = (${field(f)} == null) ? (byte)1 : (byte)0;", r)
-        case Like(f, pattern) =>
-          import Pred._
-          parseLike(pattern) match {
-            case List(Lit(s0)) => strLeaf(f, s => s"$s.equals(${utf8Ref(s0)})")
-            case List(AnyN) => strLeaf(f, _ => "true")
-            case List(AnyN, Lit(s0)) => strLeaf(f, s => s"$s.endsWith(${utf8Ref(s0)})")
-            case List(Lit(s0), AnyN) => strLeaf(f, s => s"$s.startsWith(${utf8Ref(s0)})")
-            case List(AnyN, Lit(s0), AnyN) => strLeaf(f, s => s"$s.contains(${utf8Ref(s0)})")
-            case _ =>
-              val ref = patternRef(likeToRegex(pattern))
-              strLeaf(f, s => s"$ref.matcher($s.toString()).find()")
-          }
-        case SimilarTo(f, pattern) =>
-          val ref = patternRef(s"^(?:${Pred.fixRegex(pattern)})$$")
-          strLeaf(f, s => s"$ref.matcher($s.toString()).find()")
-        case TopEq(_, v) =>
-          (s"byte $r = eidNull ? (byte)2 : ((eid == ${v}L) ? (byte)1 : (byte)0);", r)
-        case And(l, r2) =>
-          val (lc, lv) = gen(l)
-          val (rc, rv) = gen(r2)
-          val code =
-            s"""byte $r;
-               |{
-               |  $lc
-               |  if ($lv == (byte)0) { $r = (byte)0; }
-               |  else {
-               |    $rc
-               |    if ($rv == (byte)0) { $r = (byte)0; }
-               |    else if ($lv == (byte)2 || $rv == (byte)2) { $r = (byte)2; }
-               |    else { $r = (byte)1; }
-               |  }
-               |}""".stripMargin
-          (code, r)
-        case Or(l, r2) =>
-          val (lc, lv) = gen(l)
-          val (rc, rv) = gen(r2)
-          val code =
-            s"""byte $r;
-               |{
-               |  $lc
-               |  if ($lv == (byte)1) { $r = (byte)1; }
-               |  else {
-               |    $rc
-               |    if ($rv == (byte)1) { $r = (byte)1; }
-               |    else if ($lv == (byte)2 || $rv == (byte)2) { $r = (byte)2; }
-               |    else { $r = (byte)0; }
-               |  }
-               |}""".stripMargin
-          (code, r)
-        case Not(q) =>
-          val (qc, qv) = gen(q)
-          val code =
-            s"""byte $r;
-               |{
-               |  $qc
-               |  $r = ($qv == (byte)2) ? (byte)2 : (($qv == (byte)1) ? (byte)0 : (byte)1);
-               |}""".stripMargin
-          (code, r)
-      }
+  /** A string leaf: NULL field → NULL, else the test's verdict. */
+  private def strLeaf(f: String, test: StrTest): Ev3 = {
+    val ord = ordinals(f)
+    (ed, _, _, _) => {
+      val s = strAt(ed, ord)
+      if (s == null) NULL3 else if (test(s)) TRUE3 else FALSE3
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val row = classOf[InternalRow].getName
-    val st = new GenState(ctx)
-    // one tiny method per rule: JIT-able at any battery size
-    val ruleFns = preds.zipWithIndex.map { case (p, i) =>
-      val (code, v) = st.gen(p)
-      ctx.addNewFunction(s"${st.pfx}Rule$i",
-        s"""private byte ${st.pfx}Rule$i($row ed, boolean edNull, long eid, boolean eidNull) {
-           |  $code
-           |  return $v;
-           |}""".stripMargin)
+  private def strAt(ed: InternalRow, ord: Int): UTF8String =
+    if (ed == null || ed.isNullAt(ord)) null else ed.getUTF8String(ord)
+
+  // per-thread fired-id buffer and memo (one instance may run concurrently)
+  @transient private lazy val scratch = new ThreadLocal[Scratch] {
+    override def initialValue(): Scratch =
+      new Scratch(new Array[Int](preds.size), new Array[Byte](memoSlots.size))
+  }
+
+  /** Fired rule ids, ascending, for one row (`ed` null = NULL struct) —
+    * the battery's only evaluator, called by `eval` and by the generated
+    * code alike. */
+  def dispatch(ed: InternalRow, eidNull: Boolean, eid: Long): ArrayData = {
+    val evs = compiled
+    val s = scratch.get()
+    val memo = s.memo
+    java.util.Arrays.fill(memo, UNSET3)
+    val ids = s.ids
+    var n = 0
+    var i = 0
+    while (i < evs.length) {
+      if (evs(i)(ed, eidNull, eid, memo) == TRUE3) { ids(n) = i; n += 1 }
+      i += 1
     }
-    // blocks of BlockSize call sites keep every enclosing method small
-    val blockFns = ruleFns.zipWithIndex.grouped(BlockSize).map { grp =>
-      val body = grp.map { case (fn, i) =>
-        s"if ($fn(ed, edNull, eid, eidNull) == (byte)1) { acc[n++] = $i; }"
-      }.mkString("\n  ")
-      ctx.addNewFunction(s"${st.pfx}Block${grp.head._2 / BlockSize}",
-        s"""private int ${st.pfx}Block${grp.head._2 / BlockSize}(
-           |    $row ed, boolean edNull, long eid, boolean eidNull, int[] acc, int n) {
-           |  $body
-           |  return n;
-           |}""".stripMargin)
-    }.toSeq
-    val buf = ctx.addMutableState("int[]", "graftRuleBuf",
-      v => s"$v = new int[${preds.size}];")
-    val edGen = eventData.genCode(ctx)
-    val eidGen = eventId.genCode(ctx)
-    val n = ctx.freshName("nFired")
-    val calls = blockFns.map(fn =>
-      s"$n = $fn(${edGen.value}, ${edGen.isNull}, ${eidGen.value}, ${eidGen.isNull}, $buf, $n);")
-      .mkString("\n")
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val reset = st.resetCode
-    ev.copy(
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral,
-      code =
-        code"""
-          ${edGen.code}
-          ${eidGen.code}
-          $reset
-          int $n = 0;
-          $calls
-          org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-            org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-              .fromPrimitiveArray(java.util.Arrays.copyOf($buf, $n));
-        """)
+    UnsafeArrayData.fromPrimitiveArray(ids, Platform.INT_ARRAY_OFFSET, n, 4)
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val eid = eventId.eval(input)
+    dispatch(eventData.eval(input).asInstanceOf[InternalRow], eid == null,
+      if (eid == null) 0L else eid.asInstanceOf[Long])
+  }
+
+  /** The children's code plus one `dispatch` call on this instance: the
+    * whole-stage fusion stays, and the generated source does not depend
+    * on the battery. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("ruleDispatch", this)
+    val ed = eventData.genCode(ctx)
+    val eid = eventId.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code =
+      code"""
+        ${ed.code}
+        ${eid.code}
+        ${classOf[ArrayData].getName} ${ev.value} =
+          $self.dispatch(${ed.isNull} ? null : ${ed.value}, ${eid.isNull}, ${eid.value});
+      """)
   }
 
   override protected def withNewChildrenInternal(
@@ -495,11 +286,19 @@ object RuleDispatchExpr {
   private[graft] val TRUE3: Byte = 1
   private[graft] val FALSE3: Byte = 0
   private[graft] val NULL3: Byte = 2
+  /** Memo value of a subtree not yet evaluated on this row. */
+  private val UNSET3: Byte = 3
 
-  /** Rules per generated block method. 64 call sites ≈ 2 KB of bytecode —
-    * comfortably under the 8000-byte JIT ceiling with margin for the
-    * per-call argument shuffling. */
-  private[graft] val BlockSize = 64
+  /** A compiled predicate: (event_data row or null, event_id is null,
+    * event_id, this row's memo) → tri-state. A trait rather than a
+    * Function4, so the primitives pass unboxed. */
+  private trait Ev3 {
+    def apply(ed: InternalRow, eidNull: Boolean, eid: Long, memo: Array[Byte]): Byte
+  }
+
+  private trait StrTest { def apply(s: UTF8String): Boolean }
+
+  private final class Scratch(val ids: Array[Int], val memo: Array[Byte])
 }
 
 /** Column-level entry point for [[RuleDispatchExpr]].

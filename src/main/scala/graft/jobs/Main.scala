@@ -69,8 +69,9 @@ object Main {
         // SessionDefaults carries the detection-job baseline
         // (hugeMethodLimit=8000 — a guard for large fused stages, whose
         // whole-stage method would otherwise run interpreted; rule_dispatch
-        // emits one method per rule and needs none) and artifact isolation off (a repeat
-        // start of the same plan in this JVM reuses its compiled classes);
+        // generates one call whatever the rule count and needs none) and
+        // artifact isolation off (a repeat start of the same plan in this
+        // JVM reuses its compiled classes);
         // rationale at SessionDefaults. Folded first, so --conf overrides
         .config("spark.sql.session.timeZone", "UTC")) {
         case (b, (k, v)) => b.config(k, v)

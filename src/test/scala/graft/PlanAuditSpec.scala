@@ -19,8 +19,8 @@ class PlanAuditSpec extends SparkSpec {
     // one whole-stage method above HotSpot's 8000-byte JIT ceiling (the
     // round-12 interpreted-execution finding). If the sweep can't see
     // THIS stage, its empty report elsewhere proves nothing. The
-    // rule_dispatch spelling must stay OUT of the zone — per-rule
-    // methods — which the assertions after it pin.
+    // rule_dispatch spelling must stay OUT of the zone — its generated
+    // code is one evaluator call — which the assertions after it pin.
     import org.apache.spark.sql.functions._
     val nested = ops.Detection.nested(spark, "/root/testdata/sf0.001")
     val fired = array(rules.ReferenceCorpus.active.zipWithIndex.map { case (r, i) =>
@@ -31,8 +31,8 @@ class PlanAuditSpec extends SparkSpec {
     val dz = PlanAudit.jitDeadZone(tree)
     assert(dz.nonEmpty && dz.max > 8000,
       s"tree-dispatch stage not seen in the dead zone: $dz")
-    // the rule_dispatch spelling generates per-rule methods: no stage of
-    // the SAME pipeline may sit in the zone, at 25 or at 1000 rules
+    // the rule_dispatch spelling generates one evaluator call: no stage
+    // of the SAME pipeline may sit in the zone, at 25 or at 1000 rules
     val rd25 = engine.AlertPipeline
       .alertsMerged(nested, rules.ReferenceCorpus.active)
       .queryExecution.executedPlan

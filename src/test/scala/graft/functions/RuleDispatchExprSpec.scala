@@ -93,39 +93,93 @@ class RuleDispatchExprSpec extends SparkSpec {
       (i.toLong, eid, m)
     }
 
-  test("random batteries: codegen'd dispatch == three-valued interpreter (seed 42)") {
-    val rnd = new Random(42)
-    val preds = Seq.fill(150)(genPred(rnd, 3))
-    val rows = mkRows(rnd, 60)
-    val fired = firedVia(structFrame(rows), preds)
-    for ((rid, eid, m) <- rows) {
-      // a NULL struct reads every field as NULL, exactly like getField
-      val rowMap = m.getOrElse(fields.map(_ -> (null: String)).toMap)
-      val expect = preds.zipWithIndex.collect {
-        case (p, i) if eval(p, rowMap, eid).contains(true) => i
-      }
-      assert(fired(rid) == expect,
-        s"rid=$rid eid=$eid row=$m fired=${fired(rid)} expected=$expect")
-    }
+  /** A battery whose rules reuse a pool of random subtrees: a reused
+    * subtree sits behind an event_id gate in some rules (skipped there by
+    * the short circuit) and bare in others, so the per-row memo holds
+    * NULL verdicts and verdicts first needed after a skip. */
+  private def sharedBattery(rnd: Random, n: Int): (Seq[Pred], Seq[Pred]) = {
+    val pool = Seq.fill(12)(genPred(rnd, 2))
+    def pick = pool(rnd.nextInt(pool.size))
+    val preds = Seq.fill(n)(rnd.nextInt(4) match {
+      case 0 => And(TopEq("event_id", 1L + rnd.nextInt(3)), pick)
+      case 1 => Or(pick, Not(pick))
+      case 2 => And(pick, genPred(rnd, 1))
+      case 3 => pick
+    })
+    (pool, preds)
   }
 
-  test("interpreted eval path == codegen path (factoryMode=NO_CODEGEN)") {
-    val rnd = new Random(7)
-    val preds = Seq.fill(80)(genPred(rnd, 3))
-    val rows = mkRows(rnd, 40)
-    val df = structFrame(rows)
-    val viaCodegen = firedVia(df, preds)
+  // a NULL struct reads every field as NULL, exactly like getField
+  private def rowMap(m: Option[Map[String, String]]): Map[String, String] =
+    m.getOrElse(fields.map(_ -> (null: String)).toMap)
+
+  private def expected(preds: Seq[Pred], eid: Option[Long],
+      m: Option[Map[String, String]]): Seq[Int] =
+    preds.zipWithIndex.collect {
+      case (p, i) if eval(p, rowMap(m), eid).contains(true) => i
+    }
+
+  /** Runs `body` with whole-stage codegen and expression codegen off. */
+  private def noCodegen[T](body: => T): T = {
     val conf = spark.conf
     val ws = conf.get("spark.sql.codegen.wholeStage")
     val fm = conf.get("spark.sql.codegen.factoryMode")
     try {
       conf.set("spark.sql.codegen.wholeStage", "false")
       conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      assert(firedVia(df, preds) == viaCodegen)
+      body
     } finally {
       conf.set("spark.sql.codegen.wholeStage", ws)
       conf.set("spark.sql.codegen.factoryMode", fm)
     }
+  }
+
+  test("random batteries: codegen'd dispatch == three-valued interpreter (seed 42)") {
+    val rnd = new Random(42)
+    val preds = Seq.fill(150)(genPred(rnd, 3))
+    val rows = mkRows(rnd, 60)
+    val fired = firedVia(structFrame(rows), preds)
+    for ((rid, eid, m) <- rows)
+      assert(fired(rid) == expected(preds, eid, m),
+        s"rid=$rid eid=$eid row=$m fired=${fired(rid)} expected=${expected(preds, eid, m)}")
+
+    // shared subtrees: a memo that leaks across rows or skips its reset
+    // answers one row with another's verdicts
+    val (pool, shared) = sharedBattery(rnd, 150)
+    val sharedRows = mkRows(rnd, 80)
+    def memoised(p: Pred) = !p.isInstanceOf[TopEq] && !p.isInstanceOf[IsNull]
+    def subtrees(p: Pred): Seq[Pred] = p +: (p match {
+      case And(l, r) => subtrees(l) ++ subtrees(r)
+      case Or(l, r) => subtrees(l) ++ subtrees(r)
+      case Not(q) => subtrees(q)
+      case _ => Nil
+    })
+    assert(pool.exists(p => memoised(p) &&
+      sharedRows.exists { case (_, eid, m) => eval(p, rowMap(m), eid).isEmpty }),
+      "no reused subtree yields NULL on these rows")
+    assert(shared.exists {
+      case And(TopEq(_, v), p) => memoised(p) && sharedRows.exists(_._2.exists(_ != v)) &&
+        shared.count(r => subtrees(r).contains(p)) > 1
+      case _ => false
+    }, "no reused subtree is skipped behind a gate")
+    val df = structFrame(sharedRows)
+    for ((label, got) <- Seq("codegen" -> firedVia(df, shared),
+        "NO_CODEGEN" -> noCodegen(firedVia(df, shared))))
+      for ((rid, eid, m) <- sharedRows)
+        assert(got(rid) == expected(shared, eid, m),
+          s"$label rid=$rid eid=$eid row=$m fired=${got(rid)} expected=${expected(shared, eid, m)}")
+  }
+
+  test("interpreted eval path == codegen path (factoryMode=NO_CODEGEN)") {
+    val rnd = new Random(7)
+    val preds = Seq.fill(80)(genPred(rnd, 3))
+    // plus a NULL struct and a NULL event_id for certain
+    val rows = mkRows(rnd, 40) ++ Seq(
+      (40L, Some(1L), None), (41L, None, Some(fields.map(_ -> "x").toMap)))
+    val df = structFrame(rows)
+    val viaCodegen = firedVia(df, preds)
+    assert(noCodegen(firedVia(df, preds)) == viaCodegen)
+    for ((rid, eid, m) <- rows) assert(viaCodegen(rid) == expected(preds, eid, m), s"rid=$rid")
   }
 
   test("corpus battery over synth events: dispatch fired set == per-rule filters") {
@@ -169,10 +223,10 @@ class RuleDispatchExprSpec extends SparkSpec {
     val df = graft.ops.Detection.nestedFrom(graft.ops.Detection.synthFrom(
       spark.range(50).select(col("id").as("event_id"),
         timestamp_micros(lit(1700000000000000L) + col("id") * 1000).as("ts"))))
-    def shape(n: Int): (Int, Int) = {
+    def shape(n: Int): (Int, Int, Int) = {
       val rules = graft.StreamBench.cloneRules(graft.rules.ReferenceCorpus.active, n)
-      val plan = graft.engine.AlertPipeline.alertsMerged(df, rules)
-        .queryExecution.optimizedPlan
+      val qe = graft.engine.AlertPipeline.alertsMerged(df, rules).queryExecution
+      val plan = qe.optimizedPlan
       val nodes = plan.collect { case p => p }.size
       // every expression node Catalyst re-walks per micro-batch — the
       // quantity the O(rules) when/otherwise tree grew and rule_dispatch
@@ -180,18 +234,24 @@ class RuleDispatchExprSpec extends SparkSpec {
       val exprs = plan.collect { case p =>
         p.expressions.map(e => e.collect { case x => x }.size).sum
       }.sum
-      (nodes, exprs)
+      // the whole-stage Java regenerated (and Janino/JIT-compiled) per
+      // micro-batch: the battery must not reach it either
+      val source = org.apache.spark.sql.execution.debug
+        .codegenStringSeq(qe.executedPlan).map(_._2.length).sum
+      (nodes, exprs, source)
     }
-    val (n25, e25) = shape(25)
-    val (n1000, e1000) = shape(1000)
+    val (n25, e25, s25) = shape(25)
+    val (n1000, e1000, s1000) = shape(1000)
     assert(n25 == n1000, s"plan nodes grew with rules: $n25 -> $n1000")
     assert(e25 == e1000, s"plan expressions grew with rules: $e25 -> $e1000")
+    // slack for name numbering only
+    assert(s25 > 0 && s1000 <= s25 + 64, s"generated source grew with rules: $s25 -> $s1000 chars")
   }
 
-  test("two batteries in ONE projection: distinct generated prefixes, codegen compiles") {
-    // regression: per-instance function names — two dispatch expressions
-    // in the same whole-stage class emitted colliding graftRule0/... and
-    // Janino failed, silently falling back to interpreted execution
+  test("two batteries in ONE projection: codegen compiles, each fires its own rules") {
+    // regression: two dispatch expressions in one whole-stage class once
+    // emitted colliding method names and Janino failed, silently falling
+    // back to interpreted execution
     val rnd = new Random(11)
     val a = Seq.fill(10)(genPred(rnd, 2))
     val b = Seq.fill(10)(genPred(rnd, 2))
@@ -206,11 +266,7 @@ class RuleDispatchExprSpec extends SparkSpec {
     val got = both.collect()
       .map(r => r.getLong(0) -> (r.getSeq[Int](1).toSeq, r.getSeq[Int](2).toSeq)).toMap
     for ((rid, eid, m) <- rows) {
-      val rowMap = m.getOrElse(fields.map(_ -> (null: String)).toMap)
-      def expect(ps: Seq[Pred]) = ps.zipWithIndex.collect {
-        case (p, i) if eval(p, rowMap, eid).contains(true) => i
-      }
-      assert(got(rid) == ((expect(a), expect(b))), s"rid=$rid")
+      assert(got(rid) == ((expected(a, eid, m), expected(b, eid, m))), s"rid=$rid")
     }
   }
 
