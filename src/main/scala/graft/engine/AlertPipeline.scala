@@ -164,16 +164,14 @@ object AlertPipeline {
     require(rules.nonEmpty, "alertsMerged needs at least one rule")
     shapeMerged(
       sysmon.withColumn("rid", explode(graft.functions.RuleDispatch.column(
-        sysmon.sparkSession, rules.map(_.where),
-        col("event_data"), col("event_id")))),
+        rules.map(_.where), col("event_data"), col("event_id")))),
       element_at(metaLiteral(rules), col("rid") + 1))
   }
 
   /** The rule-metadata struct as a Scala value, so the metadata array can
-    * be built with `typedlit` (the one public API that accepts a whole
-    * Scala value as a single Literal; the classic Column(Expression)
-    * constructors are private[sql] in Spark 4). [[shapeMerged]] and the
-    * timeframe battery extract its fields by name. */
+    * be built with `typedlit`, the public way to turn a whole Scala value
+    * into one pre-folded Literal. [[shapeMerged]] and the timeframe
+    * battery extract its fields by name. */
   private case class RuleMeta(name: String, author: String, category: String,
       severity: Int, description: String, references: Seq[String],
       tactic: Seq[String], technique: Seq[String], subtechnique: Seq[String],

@@ -301,175 +301,18 @@ object RuleDispatchExpr {
   private final class Scratch(val ids: Array[Int], val memo: Array[Byte])
 }
 
-/** Column-level entry point for [[RuleDispatchExpr]].
-  *
-  * Spark 4 keeps `Column(Expression)` private[sql], so the expression is
-  * reached the same way every other graft kernel is — through the
-  * function registry — but a rule battery cannot ride a SQL string (the
-  * predicates are an AST, and corpus literals are full of backslashes).
-  * The battery is therefore INTERNED under a content key: `column(...)`
-  * stores the Seq[Pred] in a process-local map, registers a resolver
-  * function once per session, and emits
-  * `graft_rule_dispatch('<key>', event_data, event_id)`; at analysis the
-  * resolver swaps the key literal for the real [[RuleDispatchExpr]] with
-  * the predicates inlined as a constructor field. The key only exists
-  * between Column construction and analysis ON THE DRIVER — executors
-  * receive the resolved expression with the predicates serialized inside
-  * it, so cluster execution never touches the map. The map is a
-  * size-bounded LRU ([[RuleDispatch.MaxBatteries]] entries): a rules-hot-
-  * reload service that re-interns on every update can no longer grow it
-  * without bound. Entries are PIN-REFCOUNTED — +1 per intern, -1 per
-  * resolution — and eviction prefers unpinned entries, so a caller that
-  * pre-builds Columns (even several sharing one interned key) and
-  * analyzes them later no longer races the LRU (advisors r14/r15). Two
-  * remaining edges, documented not defended: interning MaxBatteries MORE
-  * never-analyzed batteries on top of a pending one still evicts it (the
-  * bound must stay hard — abandoned Columns must not leak the map), and
-  * re-analyzing one Column releases a pin per analysis (the builder sees
-  * resolutions, not Column identities) — both end in the clear
-  * unknown-key error below, never silent wrong dispatch.
+/** Column-level entry point for [[RuleDispatchExpr]]: the battery goes
+  * into the plan as the expression itself, with the predicates in a
+  * constructor field. The Column is resolved like any other: it needs
+  * nothing registered in the session, and executors receive the
+  * predicates serialized inside the expression.
   */
 object RuleDispatch {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  import org.apache.spark.sql.functions.{call_function, lit}
-
-  val Name = "graft_rule_dispatch"
-
-  /** LRU bound on interned batteries — far above any real concurrent
-    * working set (a battery is a whole rule fleet; the library analyzes
-    * each Column immediately after building it). */
-  private[graft] val MaxBatteries = 1024
-
-  /** Access-ordered map + pin REFCOUNTS: every intern of a key increments
-    * its pin count and every first resolution of a Column decrements it,
-    * and eviction skips keys with a positive count — so a caller that
-    * builds a battery Column and only analyzes it after many further
-    * interns can no longer have its key evicted out from under the
-    * unanalyzed Column (advisor r14: the plain LRU made that a
-    * nondeterministic unknown-key failure under churn), and two pending
-    * Columns SHARING an interned key each hold their own pin — the first
-    * one resolving no longer exposes the second to eviction (advisor
-    * r15: the boolean pin unpinned on first resolution, weakening the
-    * guarantee for shared-key double-builds). Pinned entries that are
-    * NEVER analyzed are the one leak this could create, so the bound
-    * stays hard: when every entry is pinned, the eldest pinned one is
-    * evicted anyway (back to the loud unknown-key error — bounded memory
-    * beats an unbounded map held by abandoned Columns). */
-  private val batteries =
-    new java.util.LinkedHashMap[String, Seq[Pred]](64, 0.75f, true)
-  private val pinCounts = new java.util.HashMap[String, Integer]()
-
-  private[graft] def internedCount: Int =
-    batteries.synchronized(batteries.size())
-  private[graft] def pinnedCount: Int =
-    batteries.synchronized(pinCounts.size())
-  private[graft] def pinCount(key: String): Int =
-    batteries.synchronized(Option(pinCounts.get(key)).fold(0)(_.intValue))
-
-  /** Evict past-bound entries, least-recently-used first, unpinned first.
-    * Call only while holding the `batteries` lock. */
-  private def evictLocked(): Unit = {
-    while (batteries.size() > MaxBatteries) {
-      val it = batteries.keySet().iterator()
-      var victim: String = null
-      while (victim == null && it.hasNext) {
-        val k = it.next()
-        if (!pinCounts.containsKey(k)) victim = k
-      }
-      // all pinned: drop the eldest pinned entry to keep the bound hard
-      val k = if (victim != null) victim else batteries.keySet().iterator().next()
-      batteries.remove(k)
-      pinCounts.remove(k)
-    }
-  }
-
-  /** Content key: size + MD5 over a STRUCTURAL encoding of the predicate
-    * ASTs — one tag byte per node, every string field length-prefixed —
-    * so distinct trees cannot render to the same bytes the way
-    * delimiter-free toString could (Eq("A","x,y") vs Eq("A,x","y")).
-    * Defense-in-depth: if a key is already interned for a DIFFERENT
-    * battery (a genuine 128-bit collision), fail loudly instead of
-    * silently dispatching another battery's rules. */
-  private[graft] def intern(preds: Seq[Pred]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def str(s: String): Unit = {
-      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
-      md.update(b)
-    }
-    def enc(p: Pred): Unit = p match {
-      case graft.compile.Eq(f, v)        => md.update(1.toByte); str(f); str(v)
-      case graft.compile.In(f, vs)       => md.update(2.toByte); str(f)
-        md.update(java.nio.ByteBuffer.allocate(4).putInt(vs.size).array())
-        vs.foreach(str)
-      case graft.compile.IsNull(f)       => md.update(3.toByte); str(f)
-      case graft.compile.Like(f, pat)    => md.update(4.toByte); str(f); str(pat)
-      case graft.compile.SimilarTo(f, p2) => md.update(5.toByte); str(f); str(p2)
-      case graft.compile.TopEq(c, v)     => md.update(6.toByte); str(c); str(v.toString)
-      case graft.compile.And(l, r)       => md.update(7.toByte); enc(l); enc(r)
-      case graft.compile.Or(l, r)        => md.update(8.toByte); enc(l); enc(r)
-      case graft.compile.Not(q)          => md.update(9.toByte); enc(q)
-    }
-    preds.foreach(enc)
-    val key = s"${preds.size}-${md.digest().map("%02x".format(_)).mkString}"
-    batteries.synchronized {
-      val prev = batteries.put(key, preds) // put also refreshes LRU recency
-      if (prev != null && prev != preds)
-        throw new IllegalStateException(
-          s"rule_dispatch battery key '$key' already interned for a different battery")
-      // one pin PER intern: each pending Column holds its own (refcount)
-      pinCounts.merge(key, 1, (a, b) => a + b)
-      evictLocked()
-    }
-    key
-  }
-
-  private[graft] val builder: Seq[Expression] => Expression = {
-    case Seq(k, ed, eid) if k.foldable =>
-      val key = String.valueOf(k.eval())
-      val preds = batteries.synchronized {
-        val p = batteries.get(key) // access refreshes LRU recency
-        if (p != null)
-          // one resolution releases ONE pin; the key stays pinned while
-          // other not-yet-analyzed Columns still hold theirs
-          pinCounts.computeIfPresent(key, (_, c) => if (c > 1) c - 1 else null)
-        p
-      }
-      if (preds == null)
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "INVALID_PARAMETER_VALUE.NULL",
-          messageParameters = Map(
-            "parameter" -> s"`batteryKey` (unknown key '$key' — build the call via RuleDispatch.column)",
-            "functionName" -> s"`$Name`"))
-      RuleDispatchExpr(ed, eid, preds)
-    case children => throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      messageParameters = Map(
-        "functionName" -> Name,
-        "expectedNum" -> "3 (literal battery key, event_data, event_id)",
-        "actualNum" -> children.length.toString, "docroot" -> "-"))
-  }
-
-  // once-per-live-session registration (same WeakHashMap discipline as
-  // GraftFunctions.register — a stopped session's entry is collectable)
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered.add(spark)) return
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Name),
-      new ExpressionInfo(classOf[RuleDispatchExpr].getName, Name),
-      builder)
-  }
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.classic.ColumnConversions.expression
+  import org.apache.spark.sql.graftshim.Columns
 
   /** `rule_dispatch(event_data, event_id)` over `preds` as a Column. */
-  def column(spark: SparkSession, preds: Seq[Pred],
-      eventData: Column, eventId: Column): Column = {
-    register(spark)
-    call_function(Name, lit(intern(preds)), eventData, eventId)
-  }
+  def column(preds: Seq[Pred], eventData: Column, eventId: Column): Column =
+    Columns.column(RuleDispatchExpr(expression(eventData), expression(eventId), preds))
 }

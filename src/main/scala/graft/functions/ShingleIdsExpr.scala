@@ -5,10 +5,9 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused word-shingle → distinct → long-id kernel: one pass over the split
   * words producing the per-doc shingle-id array that feeds every MinHash /
@@ -30,9 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - md5 id = conv(substring(md5(sh), 1, 15), 16, 10) % P, computed as
   *    (big-endian u64 of the first 8 digest bytes >>> 4) % P — the first
   *    15 hex digits ARE the top 60 bits;
-  *  - xx id = abs(xxhash64(sh)) % P with Spark's seed 42 over the same
-  *    UTF-8 bytes (XxHash64Function), Math.abs wrapping at Long.MinValue
-  *    exactly like Spark's abs;
   *  - fnv id = FNV-1a 64 over the UTF-8 bytes, reduced UNSIGNED mod P
   *    (Long.remainderUnsigned — the running hash is a full 64-bit
   *    unsigned value). FNV-1a is the production hash that IS
@@ -53,7 +49,6 @@ case class ShingleIdsExpr(child: Expression, width: Int, mode: String)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = s"shingle_sids_$mode"
-  private def useXx = mode == "xx"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _ if !ShingleIdsExpr.Modes.contains(mode) =>
@@ -91,10 +86,7 @@ case class ShingleIdsExpr(child: Expression, width: Int, mode: String)
       val sh = sb.toString
       if (seen.add(sh)) {
         val id =
-          if (useXx)
-            math.abs(XxHash64Function.hash(
-              UTF8String.fromString(sh), StringType, 42L)) % P
-          else if (mode == "fnv") {
+          if (mode == "fnv") {
             var h = FnvOffset
             val bytes = sh.getBytes(StandardCharsets.UTF_8)
             var bi = 0
@@ -136,7 +128,7 @@ case class ShingleIdsExpr(child: Expression, width: Int, mode: String)
 
 object ShingleIdsExpr {
   val P = 2147483647L // 2^31 - 1, the shared shingle-id space
-  val Modes: Set[String] = Set("md5", "xx", "fnv")
+  val Modes: Set[String] = Set("md5", "fnv")
   val FnvOffset = 0xcbf29ce484222325L // FNV-1a 64 offset basis
   val FnvPrime = 0x100000001b3L // FNV-1a 64 prime (2^40 + 2^8 + 0xb3)
   private val md5 = new ThreadLocal[java.security.MessageDigest] {

@@ -175,11 +175,6 @@ object GraftFunctions {
     new ExpressionInfo(classOf[ShingleIdsExpr].getName, "shingle_sids_md5"),
     shingle("shingle_sids_md5", "md5"))
 
-  val shingleXx: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_sids_xx"),
-    new ExpressionInfo(classOf[ShingleIdsExpr].getName, "shingle_sids_xx"),
-    shingle("shingle_sids_xx", "xx"))
-
   val shingleFnv: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("shingle_sids_fnv"),
     new ExpressionInfo(classOf[ShingleIdsExpr].getName, "shingle_sids_fnv"),
@@ -360,8 +355,6 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.registerFunction(
       shingleMd5._1, shingleMd5._2, shingleMd5._3)
     spark.sessionState.functionRegistry.registerFunction(
-      shingleXx._1, shingleXx._2, shingleXx._3)
-    spark.sessionState.functionRegistry.registerFunction(
       shingleFnv._1, shingleFnv._2, shingleFnv._3)
     spark.sessionState.functionRegistry.registerFunction(
       ngramsWs._1, ngramsWs._2, ngramsWs._3)
@@ -433,7 +426,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftFunctions.intersectCount)
     ext.injectFunction(GraftFunctions.minHash16)
     ext.injectFunction(GraftFunctions.shingleMd5)
-    ext.injectFunction(GraftFunctions.shingleXx)
     ext.injectFunction(GraftFunctions.shingleFnv)
     ext.injectFunction(GraftFunctions.wordIds)
     ext.injectOptimizerRule(_ => IntersectCountRule)

@@ -20,9 +20,7 @@ import graft.engine.Tables
   *    DuckDB → full hash oracle) — a narrow per-row hash, no dictionary, no
   *    global sort. `dedup_minhash_fast` is the same topology with FNV-1a 64
   *    (a cheap non-cryptographic hash that is STILL replayable in DuckDB,
-  *    so it carries a full hash oracle too) — the production pick; xxhash64
-  *    remains available (`shingle_sids_xx`, spec-pinned) where cross-engine
-  *    replay is not needed.
+  *    so it carries a full hash oracle too) — the production pick.
   *  - candidate generation joins on (band, signature) so the self-join is
   *    band-partitioned — never O(n²); verification touches candidates only.
   *  - embedding near-dup blocks by label (the IVF-style coarse partition),
@@ -74,13 +72,13 @@ object Dedup {
         WHERE w3 IS NOT NULL"""
 
   /** Per-doc shingle-id ARRAYS, built entirely narrowly: slide over the
-    * split words, md5/xxhash64 each shingle to a long id in array-land —
+    * split words, md5/FNV-1a each shingle to a long id in array-land —
     * all in ONE fused kernel pass (`shingle_sids_*` —
     * graft.functions.ShingleIdsExpr, byte-identical to the previous
     * transform/array_distinct/concat_ws/md5 HOF chain, which ran
     * interpreted and was the dominant remaining job in the dedup
-    * pipelines). `sidsFn` selects the md5, FNV-1a 64 (production fast
-    * path — both oracle-replayable) or xxhash64 (Spark-only) id. */
+    * pipelines). `sidsFn` selects the md5 or FNV-1a 64 (production fast
+    * path) id; both are oracle-replayable. */
   private def sidArrays(corpus: DataFrame, sidsFn: String): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus
@@ -554,9 +552,7 @@ object Dedup {
     // scalable, AND cross-engine replayable (the FNV prime is < 2^41, so
     // DuckDB's HUGEINT holds every wrapping product exactly — see
     // ShingleIdsExpr), which upgrades this query from the long-standing
-    // rows-only check to a full hash oracle. xxhash64 (`shingle_sids_xx`)
-    // stays registered and spec-pinned for deployments that prefer it;
-    // its replay blocker is documented in COVERAGE.md.
+    // rows-only check to a full hash oracle.
     "dedup_minhash_fast" -> ((s, dir) => {
       candidatePairs(sidArrays(nearDupCorpus(s, dir), fnvSids)).orderBy("da", "db")
     }),

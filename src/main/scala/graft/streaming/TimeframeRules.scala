@@ -106,7 +106,7 @@ object TimeframeRules {
       .map { case ((len, key, distinctField), grpSeq) =>
         val g = grpSeq.toIndexedSeq
         val withRid = sysmon.withColumn("rid",
-          explode(graft.functions.RuleDispatch.column(sysmon.sparkSession,
+          explode(graft.functions.RuleDispatch.column(
             g.map(_.base.where), col("event_data"), col("event_id"))))
         val thresholds = typedlit(g.map(_.threshold))
         val m = element_at(AlertPipeline.metaLiteral(g.map(_.base)), col("rid") + 1)

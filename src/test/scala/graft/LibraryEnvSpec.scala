@@ -7,23 +7,25 @@ import scala.jdk.CollectionConverters._
 /** The library reads no environment: a deployment gets one behaviour
   * from its code and its conf, never a switch from an env var or JVM
   * property that a benchmark A/B left behind. Scans the library packages
-  * (the measurement mains and `jobs` sit outside them) for env and
-  * system-property reads and allows only the deployment lookups below.
+  * (the measurement mains and `jobs` sit outside them) and graft's shims
+  * under `org.apache.spark.sql` for env and system-property reads, and
+  * allows only the deployment lookups below.
   * StreamBench, the one streaming measurement main, is held to its
   * core-count read the same way, so a retired A/B switch cannot return. */
 class LibraryEnvSpec extends AnyFunSuite {
-  private val root = java.nio.file.Paths.get("src/main/scala/graft")
+  private val root = java.nio.file.Paths.get("src/main/scala")
   private val libraryDirs =
     Seq("engine", "compile", "streaming", "functions", "ops", "rules", "schema")
+      .map("graft/" + _) :+ "org/apache/spark/sql"
   private val read = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
 
   /** file → the one line allowed to read the environment there. */
   private val allowed = Map(
     // `${var}` deploy-conf templating falls back to the environment, the
     // reference's templated DDL options (windows-process-access.sql:28-30)
-    "engine/AlertPipeline.scala" -> "sys.env.getOrElse(m.group(1),",
+    "graft/engine/AlertPipeline.scala" -> "sys.env.getOrElse(m.group(1),",
     // the durable-index root is deployment config with no Spark conf home
-    "engine/Tables.scala" -> """indexDirOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))""")
+    "graft/engine/Tables.scala" -> """indexDirOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))""")
 
   /** (file relative to the source root, trimmed line) of every env read. */
   private def envReads(files: Seq[java.nio.file.Path]): Seq[(String, String)] =
@@ -45,8 +47,8 @@ class LibraryEnvSpec extends AnyFunSuite {
   }
 
   test("StreamBench reads no environment beyond SPARK_GRAFT_CPUS") {
-    val hits = envReads(Seq(root.resolve("StreamBench.scala")))
-    assert(hits == Seq("StreamBench.scala" ->
+    val hits = envReads(Seq(root.resolve("graft/StreamBench.scala")))
+    assert(hits == Seq("graft/StreamBench.scala" ->
       """.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")"""),
       hits.mkString("\n"))
   }

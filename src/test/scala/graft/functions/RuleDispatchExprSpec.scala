@@ -79,7 +79,7 @@ class RuleDispatchExprSpec extends SparkSpec {
 
   private def firedVia(df: DataFrame, preds: Seq[Pred]): Map[Long, Seq[Int]] =
     df.select(col("rid"),
-      RuleDispatch.column(spark, preds, col("event_data"), col("event_id")).as("fired"))
+      RuleDispatch.column(preds, col("event_data"), col("event_id")).as("fired"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
 
@@ -258,8 +258,8 @@ class RuleDispatchExprSpec extends SparkSpec {
     val rows = mkRows(rnd, 30)
     val df = structFrame(rows)
     val both = df.select(col("rid"),
-      RuleDispatch.column(spark, a, col("event_data"), col("event_id")).as("fa"),
-      RuleDispatch.column(spark, b, col("event_data"), col("event_id")).as("fb"))
+      RuleDispatch.column(a, col("event_data"), col("event_id")).as("fa"),
+      RuleDispatch.column(b, col("event_data"), col("event_id")).as("fb"))
     // jitDeadZone compiles every codegen stage — a duplicate-method
     // collision raises out of here instead of passing silently
     assert(graft.PlanAudit.jitDeadZone(both.queryExecution.executedPlan).isEmpty)
@@ -270,90 +270,28 @@ class RuleDispatchExprSpec extends SparkSpec {
     }
   }
 
-  test("intern keys are structural: delimiter-embedding ASTs get distinct keys") {
-    // delimiter-free toString hashing rendered these identically
-    assert(RuleDispatch.intern(Seq(Eq("A", "x,y"))) !=
-      RuleDispatch.intern(Seq(Eq("A,x", "y"))))
-    assert(RuleDispatch.intern(Seq(graft.compile.In("A", Seq("x", "y")))) !=
-      RuleDispatch.intern(Seq(graft.compile.In("A", Seq("x,y")))))
-    // same battery → same key (interning is content-addressed)
-    assert(RuleDispatch.intern(Seq(Eq("A", "x"), Eq("B", "y"))) ==
-      RuleDispatch.intern(Seq(Eq("A", "x"), Eq("B", "y"))))
+  test("a battery Column resolves in a session that registered nothing") {
+    // the Column carries the expression itself, so analysis looks nothing
+    // up by name: a fresh session with an empty function registry runs it
+    val other = spark.newSession()
+    val df = other.createDataFrame(
+      java.util.Arrays.asList(Row(1L, Row("x", null, "zz"))),
+      StructType(Seq(StructField("event_id", LongType),
+        StructField("event_data", StructType(fields.map(StructField(_, StringType)))))))
+    val battery = Seq(Eq("A", "x"), Eq("B", "x"), Like("C", "z%"), TopEq("event_id", 2L))
+    val fired = df.select(RuleDispatch.column(battery,
+      col("event_data"), col("event_id"))).collect()(0).getSeq[Int](0)
+    assert(fired == Seq(0, 2))
   }
 
-  test("intern map is a bounded LRU: evicts, re-interns, re-resolves") {
-    val probe = Seq(Eq("A", "__lru_probe__"))
-    RuleDispatch.intern(probe)
-    // flood with MaxBatteries+ distinct batteries: the map must stay
-    // bounded and the probe's entry must age out
-    (0 until RuleDispatch.MaxBatteries + 8).foreach { i =>
-      RuleDispatch.intern(Seq(Eq("A", s"__flood_$i")))
-    }
-    assert(RuleDispatch.internedCount <= RuleDispatch.MaxBatteries)
-    // a fresh column() call re-interns the evicted battery and the whole
-    // path — analysis-time resolution included — works again
-    val df = structFrame(Seq((0L, Some(1L),
-      Some(fields.map(f => f -> (if (f == "A") "__lru_probe__" else "x")).toMap))))
-    val fired = df.select(RuleDispatch.column(spark, probe,
-      col("event_data"), col("event_id")).as("f")).collect()(0).getSeq[Int](0)
-    assert(fired == Seq(0))
-  }
-
-  test("unanalyzed batteries are pinned: LRU churn cannot strand their Columns (r15)") {
-    // the r14 LRU made "build a Column, intern 1024 more, THEN analyze" a
-    // nondeterministic unknown-key failure (advisor): entries are now
-    // pinned from intern until first resolution, and eviction takes
-    // unpinned entries first
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    def resolve(k: String) =
-      RuleDispatch.builder(Seq(Literal(k), Literal("d"), Literal(1L)))
-    val key = RuleDispatch.intern(Seq(Eq("A", "__pin_probe__"))) // pinned
-    // churn far past the bound with batteries that resolve immediately
-    // (the library's own usage pattern) — each is unpinned on resolution
-    (0 until RuleDispatch.MaxBatteries + 8).foreach { i =>
-      resolve(RuleDispatch.intern(Seq(Eq("A", s"__pin_flood_$i"))))
-    }
-    assert(RuleDispatch.internedCount <= RuleDispatch.MaxBatteries)
-    // the probe out-survived >MaxBatteries resolved interns and its (late)
-    // first analysis still finds it
-    assert(resolve(key).isInstanceOf[RuleDispatchExpr])
-  }
-
-  test("pins are refcounted: shared-key double-builds survive the first resolution (r16)") {
-    // advisor r15: with a boolean pin, two pending Columns sharing one
-    // interned key lost their protection when the FIRST resolved; a pin
-    // per intern (+1) released per resolution (-1) keeps the second
-    // Column covered until its own analysis
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    def resolve(k: String) =
-      RuleDispatch.builder(Seq(Literal(k), Literal("d"), Literal(1L)))
-    val preds = Seq(Eq("A", "__refcount_probe__"))
-    val key = RuleDispatch.intern(preds)
-    assert(RuleDispatch.intern(preds) == key) // second pending Column, same key
-    assert(RuleDispatch.pinCount(key) == 2)
-    resolve(key) // first Column analyzes
-    assert(RuleDispatch.pinCount(key) == 1, "second Column's pin must survive")
-    // churn past the bound: the still-pinned key must not be evicted
-    (0 until RuleDispatch.MaxBatteries + 8).foreach { i =>
-      resolve(RuleDispatch.intern(Seq(Eq("A", s"__rc_flood_$i"))))
-    }
-    assert(resolve(key).isInstanceOf[RuleDispatchExpr]) // second analysis OK
-    assert(RuleDispatch.pinCount(key) == 0) // fully released, evictable
-  }
-
-  test("analysis errors: unknown battery key, missing field, non-long event_id") {
-    RuleDispatch.register(spark)
+  test("analysis errors: missing field, non-long event_id") {
     val df = structFrame(Seq((0L, Some(1L), Some(fields.map(_ -> "x").toMap))))
-    intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(call_function(RuleDispatch.Name, lit("no-such-key"),
-        col("event_data"), col("event_id"))).collect()
-    }
     intercept[org.apache.spark.sql.AnalysisException] { // field D not in struct
-      df.select(RuleDispatch.column(spark, Seq(Eq("D", "x")),
+      df.select(RuleDispatch.column(Seq(Eq("D", "x")),
         col("event_data"), col("event_id"))).collect()
     }
     intercept[org.apache.spark.sql.AnalysisException] { // rid is not the struct
-      df.select(RuleDispatch.column(spark, Seq(Eq("A", "x")),
+      df.select(RuleDispatch.column(Seq(Eq("A", "x")),
         col("rid"), col("event_id"))).collect()
     }
   }

@@ -6,29 +6,24 @@ import graft.SparkSpec
 class ShingleIdsExprSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  test("shingle_sids_md5/xx match the declarative HOF chain on real documents") {
+  test("shingle_sids_md5 matches the declarative HOF chain on real documents") {
     GraftFunctions.register(spark)
     val P = ShingleIdsExpr.P
     val w = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 8)
-    for {
-      (fn, hashExpr) <- Seq(
-        "shingle_sids_md5" ->
-          s"CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT) % $P",
-        "shingle_sids_xx" -> s"abs(xxhash64(sh)) % $P")
-      width <- Seq(3, 8)
-    } {
+    val hashExpr = s"CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT) % $P"
+    for (width <- Seq(3, 8)) {
       val joined = (0 until width).map(k => s"w[i + $k]").mkString(", ")
       val legacy = w.select(col("doc_id"), expr(
         s"""transform(array_distinct(transform(sequence(0, size(w) - $width),
               i -> concat_ws(' ', $joined))), sh -> $hashExpr)""").as("sids"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val fused = w.select(col("doc_id"), expr(s"$fn(w, $width)").as("sids"))
+      val fused = w.select(col("doc_id"), expr(s"shingle_sids_md5(w, $width)").as("sids"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      assert(fused.keySet == legacy.keySet, s"$fn width=$width keys")
+      assert(fused.keySet == legacy.keySet, s"width=$width keys")
       legacy.foreach { case (id, sids) =>
-        assert(fused(id) == sids, s"$fn width=$width doc $id")
+        assert(fused(id) == sids, s"width=$width doc $id")
       }
     }
   }
