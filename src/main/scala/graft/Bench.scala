@@ -3,7 +3,11 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Benchmark main — driver contract: print ONE JSON line
   * `{"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}`.
@@ -19,6 +23,14 @@ import org.apache.spark.sql.SparkSession
   * a FILE (`BENCH_DETAIL.json`, or `$GRAFT_BENCH_DETAIL`), where size is
   * free. The compact line is printed LAST so even a tail-truncated capture
   * keeps it.
+  *
+  * It is also the batch side's one measurement kernel: [[session]] builds
+  * every measurement main's session, [[run]] builds and forces one query
+  * and returns its [[Layers]] row from one task listener, and the modes
+  * `time`, `plans` and `host` (see [[main]]) triage one query, dump plans
+  * and read host health over them. Verify, ScaleProbe, PlanAudit and
+  * StreamBench use the same session builder; ScaleProbe times through
+  * [[run]].
   */
 object Bench {
   /** Representatives per SURVEY §2 family + every round-1 hot spot. */
@@ -287,12 +299,12 @@ object Bench {
     * normal while 32-thread queries inflate ~1.5–2×; calib_mt stretches
     * by exactly that oversubscription factor. Injectable calib/run/settle
     * so BenchSpec can drive the gate with synthetic readings. */
-  private[graft] def gatedPasses(reps: Int, gate: Double, maxExtra: Int,
-      calibFn: () => Double, runPass: () => Array[Double],
+  private[graft] def gatedPasses[S](reps: Int, gate: Double, maxExtra: Int,
+      calibFn: () => Double, runPass: () => S,
       settle: () => Unit = () => Thread.sleep(20000))
-      : (IndexedSeq[Array[Double]], Health) = {
-    val accepted = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], (Double, Double))]
-    val rejected = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], (Double, Double))]
+      : (IndexedSeq[S], Health) = {
+    val accepted = scala.collection.mutable.ArrayBuffer.empty[(S, (Double, Double))]
+    val rejected = scala.collection.mutable.ArrayBuffer.empty[(S, (Double, Double))]
     var attempts = 0
     while (accepted.size < reps && attempts < reps + maxExtra) {
       val pre = calibFn()
@@ -434,67 +446,264 @@ object Bench {
     f""""vs_prior":{"record":"$priorName","norm":"$how","session_ratio":$ratio%.3f,"calib_ratio":$calibRatio%.3f,"shared":${norm.size},"regressed":$rmap,"improved":$improved}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.engine.SessionDefaults(SparkSession.builder())
+  // ---- the measurement kernel ---------------------------------------------
+
+  /** Local cores of every measurement session: `$SPARK_GRAFT_CPUS`. */
+  private[graft] val Cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The one session builder of the measurement mains (Bench and its
+    * modes, Verify, ScaleProbe, PlanAudit, StreamBench): the library
+    * baseline [[engine.SessionDefaults]], `local[cpus]` with as many
+    * shuffle partitions, the UTC session zone that [[engine.Tables]]
+    * relies on, and no UI. `conf` is what one main adds; it goes last. */
+  def session(cpus: String = Cpus, conf: Map[String, String] = Map.empty): SparkSession =
+    conf.foldLeft(engine.SessionDefaults(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
+
+  /** One run of one query, the field names of graftbench's `ops.*` rows:
+    * `build` is the query function plus its `executedPlan` (analysis,
+    * optimisation, planning and any eager work the function does), `exec`
+    * is the `count()` that runs it. The rest adds up the tasks of every
+    * job the run submitted; `jobMs` is each job's wall time and
+    * description, `phases` the Catalyst phase times of the built plan. */
+  final case class Layers(buildS: Double, execS: Double, rows: Long,
+      cpuNs: Long, shuffleBytes: Long, spillMemBytes: Long, spillDiskBytes: Long,
+      jobs: Int, stages: Int, tasks: Int,
+      jobMs: Seq[(Int, Long, String)], phases: Seq[(String, Long)]) {
+    def totalS: Double = buildS + execS
+    def json: String =
+      f"""{"build_s":$buildS%.3f,"exec_s":$execS%.3f,"cpu_s":${cpuNs / 1e9}%.3f,""" +
+        f""""shuffle_mb":${shuffleBytes / 1048576.0}%.2f,""" +
+        f""""spill_mb":${(spillMemBytes + spillDiskBytes) / 1048576.0}%.2f,""" +
+        s""""jobs":$jobs,"stages":$stages,"tasks":$tasks}"""
+  }
+
+  /** Adds up task metrics per run. The run's tag is a local property of
+    * the thread that runs it; Spark copies local properties onto every job
+    * and stage, so each task counts for the run that submitted it. */
+  private final class Tasks extends SparkListener {
+    final class Acc {
+      var jobs, stages, tasks, open = 0
+      var cpuNs, shuffleBytes, spillMem, spillDisk = 0L
+      val jobMs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String)]
+    }
+    private val accs = scala.collection.mutable.Map.empty[String, Acc]
+    private val stageTag = scala.collection.mutable.Map.empty[Int, String]
+    private val jobOf = scala.collection.mutable.Map.empty[Int, (String, Long, String)]
+
+    private def acc(tag: String) = accs.getOrElseUpdate(tag, new Acc)
+    private def tagOf(p: java.util.Properties) =
+      Option(p).flatMap(p => Option(p.getProperty(TagKey))).getOrElse("")
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val tag = tagOf(e.properties)
+      val a = acc(tag)
+      a.jobs += 1; a.open += 1
+      jobOf(e.jobId) = (tag, e.time,
+        Option(e.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
+      e.stageInfos.foreach(s => stageTag(s.stageId) = tag)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobOf.remove(e.jobId).foreach { case (tag, t0, desc) =>
+        val a = acc(tag)
+        a.open -= 1
+        a.jobMs += ((e.jobId, e.time - t0, desc))
+      }
+      notifyAll()
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      val tag = tagOf(e.properties)
+      stageTag(e.stageInfo.stageId) = tag
+      acc(tag).stages += 1
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val a = acc(stageTag.getOrElse(e.stageId, ""))
+      a.tasks += 1
+      val m = e.taskMetrics
+      if (m != null) {
+        a.cpuNs += m.executorCpuTime
+        a.shuffleBytes += m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten
+        a.spillMem += m.memoryBytesSpilled
+        a.spillDisk += m.diskBytesSpilled
+      }
+    }
+
+    /** The totals of `tag`, once the bus has delivered the end of `mark`
+      * (a job submitted after the run, so every event of the run comes
+      * before it) and every job of `tag` has ended; waits at most a minute. */
+    def take(tag: String, mark: String): Acc = synchronized {
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!(accs.get(mark).exists(a => a.jobs > 0 && a.open == 0) &&
+          accs.get(tag).forall(_.open == 0)) && System.nanoTime() < deadline) wait(50)
+      accs.remove(mark)
+      stageTag.filterInPlace((_, t) => t != tag && t != mark)
+      accs.remove(tag).getOrElse(new Acc)
+    }
+  }
+
+  private val TagKey = "graft.bench.run"
+  private val runIds = new java.util.concurrent.atomic.AtomicLong
+  private var listening: Option[(org.apache.spark.SparkContext, Tasks)] = None
+
+  private def tasksOf(sc: org.apache.spark.SparkContext): Tasks = synchronized {
+    listening.filter(_._1 eq sc).map(_._2).getOrElse {
+      val t = new Tasks
+      sc.addSparkListener(t)
+      listening = Some(sc -> t)
+      t
+    }
+  }
+
+  /** Build the registry query `name` on `dir`, force it, and return its
+    * layer row, or what it threw: a query that throws has no time. */
+  def run(spark: SparkSession, name: String, dir: String): Either[Throwable, Layers] =
+    run(spark, name, dir, SparkEntry.queries(name))
+
+  private[graft] def run(spark: SparkSession, name: String, dir: String,
+      query: (SparkSession, String) => DataFrame): Either[Throwable, Layers] = {
+    val sc = spark.sparkContext
+    val tasks = tasksOf(sc)
+    val tag = s"$name#${runIds.incrementAndGet()}"
+    val prior = sc.getLocalProperty(TagKey)
+    sc.setLocalProperty(TagKey, tag)
+    val timed = try {
+      val t0 = System.nanoTime()
+      val df = query(spark, dir)
+      df.queryExecution.executedPlan
+      val t1 = System.nanoTime()
+      val rows = df.count()
+      val phases = df.queryExecution.tracker.phases.toSeq.sortBy(_._1)
+        .map { case (k, v) => k -> v.durationMs }
+      Right(((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9, rows, phases))
+    } catch { case e: Throwable => Left(e) }
+    finally {
+      // a job of no partitions: its start and end events are posted at once
+      sc.setLocalProperty(TagKey, tag + "/end")
+      try sc.emptyRDD[Int].count() finally sc.setLocalProperty(TagKey, prior)
+    }
+    val a = tasks.take(tag, tag + "/end")
+    timed.map { case (build, exec, rows, phases) =>
+      Layers(build, exec, rows, a.cpuNs, a.shuffleBytes, a.spillMem, a.spillDisk,
+        a.jobs, a.stages, a.tasks, a.jobMs.sortBy(_._1).toSeq, phases)
+    }
+  }
+
+  /** An untimed, build-inclusive warm-up run of one query, then `reps`
+    * runs; returns the reps' rows. `show` sees every row as it comes, with
+    * its label. A run that fails throws its failure. */
+  def repeat(spark: SparkSession, name: String, dir: String, reps: Int)(
+      show: (String, Layers) => Unit = (_, _) => ()): Seq[Layers] =
+    ("warmup (build-inclusive)" +: (1 to reps).map(i => s"rep $i")).map { label =>
+      val l = run(spark, name, dir).fold(e => throw e, identity)
+      show(label, l)
+      l
+    }.drop(1)
+
+  /** One iw1 pass (the schedule with reps=1): per query an untimed warm
+    * run, then the timed run whose result the pass keeps. */
+  private[graft] def runPass(n: Int, exec: Int => Either[Throwable, Layers])
+      : IndexedSeq[Either[Throwable, Layers]] =
+    schedule(n, 1).flatMap { case (qi, timed) =>
+      val r = exec(qi) // a warm run's result is dropped
+      if (timed) Some(r) else None
+    }.toIndexedSeq
+
+  /** The fleet's record from its accepted passes. A query that threw in
+    * any pass is left out of the timings and listed with its first
+    * failure; every other one gets its min/median/max and the layer row
+    * of the pass that gave its min. */
+  private[graft] def summarise(names: Seq[String],
+      passes: Seq[IndexedSeq[Either[Throwable, Layers]]])
+      : (Seq[Timing], Seq[Layers], Seq[(String, Throwable)]) = {
+    val perQuery = names.indices.map(qi => names(qi) -> passes.map(_(qi)))
+    val failed = perQuery.flatMap { case (n, rs) =>
+      rs.collectFirst { case Left(e) => n -> e } }
+    val ok = perQuery.collect { case (n, rs) if rs.forall(_.isRight) =>
+      val rows = rs.collect { case Right(l) => l }.sortBy(_.totalS)
+      ((n, rows.head.totalS, rows(rows.size / 2).totalS, rows.last.totalS), rows.head)
+    }
+    (ok.map(_._1), ok.map(_._2), failed)
+  }
+
+  /** `"layers"` and `"failed"` blocks of the detail file: each timed
+    * query's min-pass layer row plus its untimed warm-up, and each failed
+    * query's error. */
+  private[graft] def layersJson(results: Seq[Timing], rows: Seq[Layers],
+      warmupS: Map[String, Double], failed: Seq[(String, Throwable)]): String = {
+    val layers = results.map(_._1).zip(rows).map { case (n, l) =>
+      val w = warmupS.get(n).fold("")(s => f""","warmup_s":$s%.3f""")
+      s"${jsonString(n)}:${l.json.dropRight(1)}$w}"
+    }
+    val fails = failed.map { case (n, e) => s"${jsonString(n)}:${jsonString(e.toString.take(300))}" }
+    s""""layers":{${layers.mkString(",\n")}},
+"failed":{${fails.mkString(",")}}"""
+  }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** calib_mt ceiling of a healthy pass: `$GRAFT_BENCH_HEALTH_MAX`, default
+    * [[HealthGateDefault]]. */
+  private def healthGate: Double = sys.env.get("GRAFT_BENCH_HEALTH_MAX")
+    .flatMap(s => scala.util.Try(s.toDouble).toOption)
+    .getOrElse(HealthGateDefault)
+
+  private val Usage = "usage: Bench [time <query> [dir] [reps] | " +
+    "plans <outDir> <suffix> [q1,q2,...|all] [dir] | host [reps]]"
+
+  /** No argument: the fleet. `time`, `plans`, `host`: the modes below. */
+  def main(args: Array[String]): Unit = args.headOption match {
+    case None => fleet()
+    case Some("time") => time(args.drop(1))
+    case Some("plans") => plans(args.drop(1))
+    case Some("host") => host(args.drop(1))
+    case Some(other) => sys.error(s"unknown mode $other; $Usage")
+  }
+
+  /** The fleet: the headline list on `$SPARK_GRAFT_SF_DIR`, protocol iw1,
+    * health-gated; the compact line to stdout, the detail to a file. */
+  private def fleet(): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     // warm up codegen/parquet-footer/broadcast machinery so the first
     // measured query isn't charged the session's one-time costs
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val all = SparkEntry.queries
+    val resolved = headline.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
+    def exec(qi: Int) = run(spark, resolved(qi)._1, sfDir, resolved(qi)._2)
     // One untimed warm-up pass over the WHOLE fleet first: per-query JIT /
     // codegen compilation and any session-memoized statistics (Tables
     // caches) are paid here, not inside a timed rep — the round-5
     // regression hid for most of a round because first-rep session-load
-    // noise was indistinguishable from real cost.
-    headline.foreach { name =>
-      all.get(name).foreach(fn =>
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () })
-    }
-    // 3 timed passes after warm-up, protocol iw1 (r11 verdict task #1):
-    // the whole headline list runs in rotation — pass k of every query
-    // completes before pass k+1 of any query — so a transient host-load
-    // window (GC storm, co-tenant burst, page-cache eviction) lands on
-    // ONE pass of many queries rather than ALL reps of the few queries
-    // unlucky enough to be running, and the per-query min-across-passes
-    // discards it (with consecutive reps the same window poisoned every
-    // sample a query had — r10's four phantom 1.5-1.9× flags all sat in
-    // one stretch of the list). Each VISIT runs the query twice
-    // back-to-back and times only the SECOND execution: after 70 other
-    // queries churn the bounded codegen-class cache and page/shuffle
-    // warmth, a single timed execution measures recompile+rewarm cost,
-    // not steady state — that cold re-entry inflated the round-11
-    // official total 1.5-1.7× and was misdiagnosed as host drift. min is
-    // the steady-state number, max the spread (r3→r4 showed ±70%
-    // per-query swings with ZERO code change), median the load-robust
+    // noise was indistinguishable from real cost. Its build-inclusive
+    // time is each query's `warmup_s`.
+    val warmupS = resolved.indices.flatMap(qi =>
+      exec(qi).toOption.map(l => resolved(qi)._1 -> l.totalS)).toMap
+    // 3 timed passes after warm-up, protocol iw1 (see Protocol): a
+    // transient host-load window lands on ONE pass of many queries and
+    // the per-query min-across-passes discards it (with consecutive reps
+    // it poisoned every sample a query had — r10's four phantom 1.5-1.9×
+    // flags). min is the steady-state number, max the spread (r3→r4 showed
+    // ±70% per-query swings with ZERO code change), median the load-robust
     // middle.
     val reps = 3
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     calibSecs(); calibMtSecs() // JIT-warm both calibration loops
     val load0 = osBean.getSystemLoadAverage
-    val resolved = headline.flatMap(n => all.get(n).map(n -> _))
-    // One pass = one full iw1 rotation (the schedule with reps=1): per
-    // query, an untimed warm execution then the timed one. Passes are
-    // health-gated individually (gatedPasses above) — the per-query
-    // min-across-ACCEPTED-passes is the steady-state number.
-    def runPass(): Array[Double] = {
-      val out = Array.fill(resolved.size)(0.0)
-      for ((qi, timed) <- schedule(resolved.size, 1)) {
-        val fn = resolved(qi)._2
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        if (timed) out(qi) = (System.nanoTime() - t0) / 1e9
-      }
-      out
-    }
-    val gate = sys.env.get("GRAFT_BENCH_HEALTH_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(HealthGateDefault)
     // the retry budget is a WALL-CLOCK knob, not a standards knob: more
     // extra rotations only buy more chances to land `reps` clean-bracket
     // passes inside a bursty window — hok:true still requires every
@@ -504,20 +713,18 @@ object Bench {
     val maxExtra = sys.env.get("GRAFT_BENCH_MAX_EXTRA")
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .getOrElse(MaxExtraPasses)
-    val (passes, health) = gatedPasses(reps, gate, maxExtra,
-      () => calibMtSecs(), () => runPass())
+    val (passes, health) = gatedPasses(reps, healthGate, maxExtra,
+      () => calibMtSecs(), () => runPass(resolved.size, exec))
     if (!health.ok)
       System.err.println(
         s"bench: HEALTH GATE FAILED — ${health.rejected.size} contended passes, " +
           "record carries hok:false; re-run on a quiet host")
-    val results: Seq[Timing] = resolved.zipWithIndex.map { case ((name, _), qi) =>
-      val times = passes.map(_(qi)).sorted
-      (name, times.head, times(times.size / 2), times.last)
-    }
+    val (results, rows, failed) = summarise(resolved.map(_._1), passes)
+    failed.foreach { case (n, e) => System.err.println(s"bench: $n failed, not timed: $e") }
     val load1 = osBean.getSystemLoadAverage
     val calib = calibSecs()
     val calibMt = calibMtSecs()
-    val extra = comparability(cpus, calibMt) + healthCompact(health)
+    val extra = comparability(Cpus, calibMt) + healthCompact(health)
     val sf = sfOf(sfDir)
     // normalized cross-round comparison, same-sf prior records only (a
     // local sf0.001 smoke must not "compare" against the sf0.1 record)
@@ -529,8 +736,9 @@ object Bench {
     }.getOrElse("")
     val detailPath = sys.env.getOrElse("GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val detailExtra = Seq(
-      comparabilityFull(cpus, load0, load1, calib, calibMt),
-      vs, healthJson(health)).filter(_.nonEmpty).mkString(",\n")
+      comparabilityFull(Cpus, load0, load1, calib, calibMt),
+      vs, healthJson(health), layersJson(results, rows, warmupS, failed))
+      .filter(_.nonEmpty).mkString(",\n")
     try Files.write(Paths.get(detailPath),
       detailJson(results, reps, sf, detailExtra).getBytes(StandardCharsets.UTF_8))
     catch { case e: Throwable =>
@@ -540,6 +748,84 @@ object Bench {
     // LAST stdout line = the compact driver record
     println(compactLine(results, reps, sf, extra))
     spark.stop()
+  }
+
+  /** `time <query> [dir] [reps]`: one query in an idle session, to tell a
+    * real per-query regression from fleet-session load (the round-5
+    * sim_lsh_ann regression hid inside session noise for most of a round).
+    * Prints the build-inclusive warm-up — for an index-backed query that
+    * includes the index build a deployment's index job pays — then each
+    * rep with its layer row, its jobs' wall times, the Catalyst phases of
+    * its plan and the Catalyst rules that took longest over the rep. It
+    * forces with `count()`, like the fleet; `count()` prunes what a pure
+    * projection computes, so such a query times its scan. */
+  private def time(args: Array[String]): Unit = {
+    val name = args.headOption.getOrElse(sys.error(Usage))
+    val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val reps = args.lift(2).map(_.toInt).getOrElse(5)
+    val spark = session()
+    spark.sparkContext.setLogLevel("ERROR")
+    // Catalyst's rule timer is global: reset it before each run
+    RuleExecutor.resetMetrics()
+    val times = repeat(spark, name, dir, reps) { (label, l) =>
+      println(f"$label: ${l.totalS}%.3f s (${l.rows} rows) ${l.json}")
+      l.jobMs.foreach { case (id, ms, desc) =>
+        println(f"  job $id%3d ${ms / 1e3}%7.3f s  ${desc.take(80)}") }
+      println("  phases: " + l.phases.map { case (k, ms) => s"$k=${ms}ms" }.mkString(" "))
+      RuleExecutor.dumpTimeSpent().linesIterator
+        .filter(_.contains("org.apache.spark")).take(12)
+        .foreach(r => println("    " + r.trim.take(140)))
+      RuleExecutor.resetMetrics()
+    }.map(_.totalS).sorted
+    println(f"$name min=${times.head}%.3f med=${times(reps / 2)}%.3f max=${times.last}%.3f")
+    spark.stop()
+  }
+
+  /** `plans <outDir> <suffix> [q1,q2,...|all] [dir]`: writes each query's
+    * `explain("formatted")` to `<outDir>/<query>_<suffix>.txt`, the plan
+    * evidence committed under plans/ so a reader can check plan-shape
+    * claims (Exchange counts, join strategies, PushedFilters) without
+    * running Spark. */
+  private def plans(args: Array[String]): Unit = {
+    val outDir = args.headOption.getOrElse(sys.error(Usage))
+    val suffix = args.lift(1).getOrElse("before")
+    val names = args.lift(2).filterNot(_ == "all") match {
+      case Some(csv) => csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+      case None => SparkEntry.queries.keys.toSeq.sorted
+    }
+    val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
+    val spark = session()
+    spark.sparkContext.setLogLevel("ERROR")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      SparkEntry.queries.get(name) match {
+        case None => System.err.println(s"plans: unknown query $name — skipped")
+        case Some(fn) =>
+          val txt = fn(spark, dir).queryExecution.explainString(FormattedMode)
+          Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
+            txt.getBytes(StandardCharsets.UTF_8))
+          println(s"plans: wrote $outDir/${name}_$suffix.txt")
+      }
+    }
+    spark.stop()
+  }
+
+  /** `host [reps]`: a host-health reading with the fleet's own
+    * calibration loops and gate, to know whether the window is clean
+    * before paying for a record (batch fleet, ScaleProbe, StreamBench).
+    * Prints `calib`, `calib_mt` per reading, the 1-min load average and
+    * whether every `calib_mt` passes. Clean-host norm: both ~0.10–0.13 s.
+    * Takes ~3 s; no Spark session. */
+  private def host(args: Array[String]): Unit = {
+    val gate = healthGate
+    calibSecs(); calibMtSecs() // JIT warm
+    val reps = args.headOption.flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(3)
+    val load = java.lang.management.ManagementFactory
+      .getOperatingSystemMXBean.getSystemLoadAverage
+    val readings = (1 to reps).map(_ => (calibSecs(), calibMtSecs()))
+    val pass = readings.forall(_._2 <= gate)
+    val body = readings.map { case (c, m) => f"[$c%.3f,$m%.3f]" }.mkString("[", ",", "]")
+    println(f"""{"metric":"host_check","gate":$gate%.3f,"load":$load%.2f,"calib_pairs":$body,"pass":$pass}""")
   }
 
   /** sf number encoded in the dir, as a VALID JSON number. Anchored: a dir

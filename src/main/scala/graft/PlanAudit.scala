@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, SparkPl
   * PlanSpec pins the important plans individually; this is the fleet-wide
   * sweep that catches a regression in a query nobody pinned.
   *
-  * Usage: runMain graft.PlanAudit [sfDir]
+  * Usage: runMain graft.PlanAudit [sfDir]  (a [[Bench.session]] of 8 cores)
   */
 object PlanAudit {
   // BroadcastNestedLoopJoin is legitimate exactly where a tiny side is
@@ -287,11 +287,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.engine.SessionDefaults(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus = "8")
     spark.sparkContext.setLogLevel("ERROR")
     val (flagged, deadZone) = auditFull(spark, dir)
     flagged.foreach { case (n, f) => println(s"FLAG $n: $f") }

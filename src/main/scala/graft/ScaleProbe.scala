@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe for the 100 TB question: replicate the sf0.1
@@ -34,6 +33,10 @@ import org.apache.spark.sql.functions._
   *     bytes + slowdown vs the unconstrained run — the cheapest available
   *     evidence that the pipeline degrades to disk instead of OOMing when
   *     a 100 TB input blows past executor memory.
+  *
+  * Every point is a [[Bench.run]] in a [[Bench.session]]: its seconds are
+  * build plus `count()`, and its rows and spilled bytes come from that
+  * run's layer row.
   */
 object ScaleProbe {
   private val probed = Seq(
@@ -103,21 +106,16 @@ object ScaleProbe {
     // die in UNABLE_TO_ACQUIRE_MEMORY before any operator can spill) while
     // making per-task input 4× larger — more pressure per task, honestly
     // reached
-    val threads = if (spillMode) 8 else 32
-    val builder = graft.engine.SessionDefaults(SparkSession.builder())
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.ui.enabled", "false")
-    if (spillMode) {
-      // squeeze the unified memory region (execution + storage) to ~5% of
-      // the heap; the spill probe's aggregations/joins then exceed their
-      // share and must go through the ExternalSorter/ExternalAppendOnlyMap
-      // disk path — the memory-pressure behavior a 100 TB run lives in.
-      // Pair with a small driver heap (SPARK_DRIVER_MEM=1500m) for real
-      // pressure: 8g × 0.05 across 10× sf0.1 never fills.
-      builder.config("spark.memory.fraction", "0.05")
-    }
-    val spark = builder.getOrCreate()
+    val threads = if (spillMode) "8" else "32"
+    // spill mode squeezes the unified memory region (execution + storage)
+    // to ~5% of the heap; the spill probe's aggregations/joins then exceed
+    // their share and must go through the ExternalSorter/
+    // ExternalAppendOnlyMap disk path — the memory-pressure behavior a
+    // 100 TB run lives in. Pair with a small driver heap
+    // (SPARK_DRIVER_MEM=1500m) for real pressure: 8g × 0.05 across 10×
+    // sf0.1 never fills.
+    val spark = Bench.session(threads,
+      if (spillMode) Map("spark.memory.fraction" -> "0.05") else Map.empty)
     spark.sparkContext.setLogLevel("ERROR")
 
     def makeReplicas(m: Int, dest: String): Unit = {
@@ -172,41 +170,7 @@ object ScaleProbe {
     }
     (if (spillMode) Seq(mult) else mults).foreach(m => makeReplicas(m, outFor(m)))
 
-    // one untimed invocation first: JIT/codegen for a query's operators
-    // compiles on its first run, which would otherwise inflate t_1x (it
-    // always runs first) and understate the scaling ratio. Returns
-    // (seconds, output rows): the row count makes linear-output /
-    // super-linear-time cases (single-JVM memory pressure) machine-
-    // distinguishable from genuine pair-space blowups — the r11
-    // ngram-Jaccard adjudication rested on a pair count recorded only in
-    // prose (r11 verdict task #6).
-    def best(name: String, dir: String): (Double, Long) = {
-      var rows = 0L
-      val t = (0 to 2).map { rep =>
-        val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.drop(1).min
-      (t, rows)
-    }
-
     SparkEntry.entry(spark).count() // warm session machinery
-
-    // track spill across all tasks (local mode: the listener sees every
-    // task). Registered HERE — after replica generation and warm-up, whose
-    // writes also run under the squeezed memory fraction and would
-    // otherwise be charged to the probed pipeline's spill numbers.
-    val spilledMem = new java.util.concurrent.atomic.AtomicLong
-    val spilledDisk = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spilledMem.addAndGet(m.memoryBytesSpilled)
-          spilledDisk.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
 
     if (spillMode) {
       // completion under memory pressure is the assertion: a wrong-shaped
@@ -216,14 +180,14 @@ object ScaleProbe {
       // curate_pipeline_e2e).
       val pipeline = queryFilter.flatMap(_.headOption)
         .getOrElse("dedup_keep_canonical")
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(pipeline)(spark, out).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(rows > 0, s"$pipeline returned no rows under memory pressure")
+      // spill counts this run's tasks only, not the replica writes or
+      // the warm-up, which also run under the squeezed memory fraction
+      val r = Bench.run(spark, pipeline, out).fold(e => throw e, identity)
+      require(r.rows > 0, s"$pipeline returned no rows under memory pressure")
       println(f"""{"metric":"spill_probe","query":"$pipeline","mult":$mult,""" +
-        f""""sec":$sec%.2f,"rows":$rows,""" +
-        f""""spilled_mem_mb":${spilledMem.get / (1024 * 1024)},""" +
-        f""""spilled_disk_mb":${spilledDisk.get / (1024 * 1024)}}""")
+        f""""sec":${r.totalS}%.2f,"rows":${r.rows},""" +
+        f""""spilled_mem_mb":${r.spillMemBytes / (1024 * 1024)},""" +
+        f""""spilled_disk_mb":${r.spillDiskBytes / (1024 * 1024)}}""")
     } else {
       val multCols = mults.flatMap(m => Seq(f"t_${m}%dx", "ratio"))
         .map(h => f"$h%9s").mkString
@@ -231,9 +195,19 @@ object ScaleProbe {
         f"  marg_${mults.init.last}%d->${mults.last}%dx   out_growth" else ""
       println(f"${"query"}%-24s ${"t_1x"}%8s$multCols$marginalHdr")
       val jsonRows = Seq.newBuilder[String]
+      // the faster of two runs after an untimed one: JIT/codegen for a
+      // query's operators compiles on its first run, which would otherwise
+      // inflate t_1x (it always runs first) and understate the scaling
+      // ratio. Each point is (seconds, output rows): the row count makes
+      // linear-output / super-linear-time cases (single-JVM memory
+      // pressure) machine-distinguishable from genuine pair-space blowups
+      // — the r11 ngram-Jaccard adjudication rested on a pair count
+      // recorded only in prose (r11 verdict task #6).
       queries.foreach { name =>
-        val (t1, rows1) = best(name, base)
-        val points = mults.map(m => best(name, outFor(m)))
+        val (t1, rows1) +: points = (base +: mults.map(outFor)).map { d =>
+          val r = Bench.repeat(spark, name, d, 2)().minBy(_.totalS)
+          (r.totalS, r.rows)
+        }
         val ts = points.map(_._1)
         val cols = ts.map(tn => f"$tn%9.2f${tn / t1}%9.2f").mkString
         // the marginal between the last two points is the linearity

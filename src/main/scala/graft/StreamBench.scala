@@ -29,6 +29,7 @@ import graft.streaming.TimeframeRules
   *     (AlertPipeline.alertsCombined), the `--extended` deployment.
   *
   * Run: sbt "runMain graft.StreamBench tfbattery 25 50000 30"
+  * (a [[Bench.session]] with 8 shuffle partitions and RocksDB state).
   */
 object StreamBench {
 
@@ -156,14 +157,10 @@ object StreamBench {
     require(mode == "tfbattery" || mode == "combined",
       "usage: StreamBench tfbattery [nRules] [rps] [deadlineSec] | " +
         "combined [nStateless] [nTf] [rps] [deadlineSec]")
-    val spark = graft.engine.SessionDefaults(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
+    val spark = Bench.session(conf = Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     spark.sparkContext.setLogLevel("WARN")
     def arg(i: Int, default: String): String = args.lift(i).getOrElse(default)
     try println(

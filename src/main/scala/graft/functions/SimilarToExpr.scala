@@ -83,16 +83,19 @@ case class SimilarToExpr(left: Expression, right: Expression)
   * `spark.sql.extensions=graft.functions.GraftExtensions`) and a direct
   * registry helper for sessions that already exist. */
 object GraftFunctions {
+  /** The analysis error for a call with the wrong argument count. */
+  private def wrongArgs(name: String, expected: String, children: Seq[Expression]): Nothing =
+    throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+      messageParameters = Map("functionName" -> name, "expectedNum" -> expected,
+        "actualNum" -> children.length.toString, "docroot" -> "-"))
+
   /** Builder with an arity gate: a wrong argument count surfaces as a clear
     * analysis-time error, not an opaque NoSuchElementException. */
   private def binary(name: String, mk: (Expression, Expression) => Expression)
       : Seq[Expression] => Expression = {
     case Seq(l, r) => mk(l, r)
-    case children => throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      messageParameters = Map(
-        "functionName" -> name, "expectedNum" -> "2",
-        "actualNum" -> children.length.toString, "docroot" -> "-"))
+    case children => wrongArgs(name, "2", children)
   }
 
   val similarTo: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -113,11 +116,7 @@ object GraftFunctions {
   private def unary(name: String, mk: Expression => Expression)
       : Seq[Expression] => Expression = {
     case Seq(c) => mk(c)
-    case children => throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      messageParameters = Map(
-        "functionName" -> name, "expectedNum" -> "1",
-        "actualNum" -> children.length.toString, "docroot" -> "-"))
+    case children => wrongArgs(name, "1", children)
   }
 
   val simHash: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -163,11 +162,7 @@ object GraftFunctions {
       ShingleIdsExpr(arr,
         foldableArg(name, "width", "INT", w).asInstanceOf[Number].intValue(),
         mode)
-    case children => throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      messageParameters = Map(
-        "functionName" -> name, "expectedNum" -> "2 (array, literal width)",
-        "actualNum" -> children.length.toString, "docroot" -> "-"))
+    case children => wrongArgs(name, "2 (array, literal width)", children)
   }
 
   val shingleMd5: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -189,11 +184,7 @@ object GraftFunctions {
       case Seq(arr, w) =>
         NgramsExpr(arr,
           foldableArg("ngrams_ws", "width", "INT", w).asInstanceOf[Number].intValue())
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "ngrams_ws", "expectedNum" -> "2 (array, literal width)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("ngrams_ws", "2 (array, literal width)", children)
     })
 
   /** md5_grams(words, width) — fused positional binary-md5 gram array;
@@ -205,11 +196,7 @@ object GraftFunctions {
       case Seq(arr, w) =>
         Md5GramsExpr(arr,
           foldableArg("md5_grams", "width", "INT", w).asInstanceOf[Number].intValue())
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "md5_grams", "expectedNum" -> "2 (array, literal width)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("md5_grams", "2 (array, literal width)", children)
     })
 
   /** bloom_might_contain(key, bytes) — the filter bytes must be a literal
@@ -223,12 +210,7 @@ object GraftFunctions {
         BloomProbeExpr(v,
           foldableArg("bloom_might_contain", "bloomBytes", "BINARY", b)
             .asInstanceOf[Array[Byte]])
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "bloom_might_contain",
-          "expectedNum" -> "2 (key, literal filter bytes)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("bloom_might_contain", "2 (key, literal filter bytes)", children)
     })
 
   /** bpe_apply(text, pairs) — the merge list must be a literal array (it
@@ -242,12 +224,7 @@ object GraftFunctions {
           .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
         BpeApplyExpr(t, arr.toObjectArray(org.apache.spark.sql.types.StringType)
           .map(_.toString).toSeq)
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "bpe_apply",
-          "expectedNum" -> "2 (text, literal pair array)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("bpe_apply", "2 (text, literal pair array)", children)
     })
 
   /** winnow_fps(words) — fused winnowing fingerprint set. */
@@ -256,12 +233,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[WinnowFpsExpr].getName, "winnow_fps"),
     {
       case Seq(arr) => WinnowFpsExpr(arr)
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "winnow_fps",
-          "expectedNum" -> "1 (array)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("winnow_fps", "1 (array)", children)
     })
 
   /** min_k_collect(v, k) — bounded-state sorted collect (provenance
@@ -272,12 +244,7 @@ object GraftFunctions {
     {
       case Seq(c, kExpr) if kExpr.foldable && kExpr.eval() != null =>
         MinKCollectExpr(c, kExpr.eval().asInstanceOf[Number].intValue())
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "min_k_collect",
-          "expectedNum" -> "2 (value, literal k)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("min_k_collect", "2 (value, literal k)", children)
     })
 
   /** min_k_distinct(v, k) — the k smallest DISTINCT values, bounded state
@@ -290,12 +257,7 @@ object GraftFunctions {
       case Seq(c, kExpr) if kExpr.foldable && kExpr.eval() != null =>
         MinKCollectExpr(c, kExpr.eval().asInstanceOf[Number].intValue(),
           distinct = true)
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "min_k_distinct",
-          "expectedNum" -> "2 (value, literal k)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("min_k_distinct", "2 (value, literal k)", children)
     })
 
   /** quality_score_md5(words) — the fused linear-classifier score. */
@@ -304,12 +266,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[QualityScoreExpr].getName, "quality_score_md5"),
     {
       case Seq(arr) => QualityScoreExpr(arr)
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "quality_score_md5",
-          "expectedNum" -> "1 (array)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("quality_score_md5", "1 (array)", children)
     })
 
   /** word_ids_md5(words, 'p31'|'lo32'|'hi32') — mode must be a literal. */
@@ -320,13 +277,34 @@ object GraftFunctions {
       case Seq(arr, m) =>
         WordIdsExpr(arr,
           foldableArg("word_ids_md5", "mode", "STRING", m).toString)
-      case children => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "word_ids_md5",
-          "expectedNum" -> "2 (array, literal mode)",
-          "actualNum" -> children.length.toString, "docroot" -> "-"))
+      case children => wrongArgs("word_ids_md5", "2 (array, literal mode)", children)
     })
+
+  /** bounded-state distributed top-k: topkN_ids(score, id) → struct(ids).
+    * k=3 is the ANN result size; k=8 is the quantized-scan candidate pool
+    * reranked exactly by sim_q8_rerank. Native TypedImperativeAggregate
+    * (TopKIdsExpr) since r18 — the udaf Aggregator wrapper paid a
+    * Catalyst→Scala conversion plus an immutable-Seq rebuild per
+    * candidate row (the MinKCollectExpr lesson); TopKIdsExprSpec pins the
+    * exact top-k under any split, serialise and merge. */
+  private def topk(name: String, k: Int, withScores: Boolean)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(classOf[TopKIdsExpr].getName, name),
+    binary(name, TopKIdsExpr(_, _, k, withScores)))
+
+  /** Every native function graft adds, as registry builder triples: what
+    * [[register]] registers on a built session and [[GraftExtensions]]
+    * injects into one built with `spark.sql.extensions`, so SQL that a
+    * session of either kind accepts (RuleCompiler's rendered timeframe
+    * SQL calls min_k_collect and min_k_distinct) runs on both. */
+  val builders: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    similarTo, vecDot, vecSqDist, simHash, intersectCount, minHash16, shingleMd5,
+    shingleFnv, ngramsWs, md5Grams, wordIds, qualityScore, winnowFps, minKCollect,
+    minKDistinct, bloomProbe, bpeApply,
+    topk("topk3_ids", 3, withScores = false),
+    topk("topk8_ids", 8, withScores = false),
+    topk("topk3_scored", 3, withScores = true))
 
   // Registration is idempotent in effect but the registry logs a WARN per
   // re-registered name — 3 UDAFs × every query invocation floods stderr
@@ -340,65 +318,14 @@ object GraftFunctions {
 
   def register(spark: SparkSession): Unit = synchronized {
     if (!registered.add(spark)) return
-    spark.sessionState.functionRegistry.registerFunction(
-      similarTo._1, similarTo._2, similarTo._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      vecDot._1, vecDot._2, vecDot._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      vecSqDist._1, vecSqDist._2, vecSqDist._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      simHash._1, simHash._2, simHash._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      intersectCount._1, intersectCount._2, intersectCount._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      minHash16._1, minHash16._2, minHash16._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      shingleMd5._1, shingleMd5._2, shingleMd5._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      shingleFnv._1, shingleFnv._2, shingleFnv._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      ngramsWs._1, ngramsWs._2, ngramsWs._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      md5Grams._1, md5Grams._2, md5Grams._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      wordIds._1, wordIds._2, wordIds._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      qualityScore._1, qualityScore._2, qualityScore._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      winnowFps._1, winnowFps._2, winnowFps._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      minKCollect._1, minKCollect._2, minKCollect._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      minKDistinct._1, minKDistinct._2, minKDistinct._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      bloomProbe._1, bloomProbe._2, bloomProbe._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      bpeApply._1, bpeApply._2, bpeApply._3)
-    // bounded-state distributed top-k: topkN_ids(score, id) → struct(ids).
-    // k=3 is the ANN result size; k=8 is the quantized-scan candidate pool
-    // reranked exactly by sim_q8_rerank. Native TypedImperativeAggregate
-    // (TopKIdsExpr) since r18 — the udaf Aggregator wrapper paid a
-    // Catalyst→Scala conversion plus an immutable-Seq rebuild per
-    // candidate row (the MinKCollectExpr lesson); TopKIdsExprSpec pins the
-    // exact top-k under any split, serialise and merge.
-    def topk(name: String, k: Int, withScores: Boolean): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[TopKIdsExpr].getName, name),
-        {
-          case Seq(s, i) => TopKIdsExpr(s, i, k, withScores)
-          case children => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> name, "expectedNum" -> "2",
-              "actualNum" -> children.length.toString, "docroot" -> "-"))
-        })
-    topk("topk3_ids", 3, withScores = false)
-    topk("topk8_ids", 8, withScores = false)
-    topk("topk3_scored", 3, withScores = true)
+    builders.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
     // KMV distinct-count sketch over 52-bit md5-derived hashes: bounded
     // mergeable state (≤64 longs per group), replayable bit-for-bit by the
-    // DuckDB oracle — see KmvSketchAgg for the full rationale.
+    // DuckDB oracle — see KmvSketchAgg for the full rationale. A udaf
+    // wrapper has no builder triple, so the extensions path lacks it; no
+    // SQL that graft renders calls it.
     spark.udf.register("kmv64",
       org.apache.spark.sql.functions.udaf(new KmvSketchAgg(64),
         org.apache.spark.sql.Encoders.scalaLong))
@@ -419,15 +346,7 @@ object GraftFunctions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.similarTo)
-    ext.injectFunction(GraftFunctions.vecDot)
-    ext.injectFunction(GraftFunctions.vecSqDist)
-    ext.injectFunction(GraftFunctions.simHash)
-    ext.injectFunction(GraftFunctions.intersectCount)
-    ext.injectFunction(GraftFunctions.minHash16)
-    ext.injectFunction(GraftFunctions.shingleMd5)
-    ext.injectFunction(GraftFunctions.shingleFnv)
-    ext.injectFunction(GraftFunctions.wordIds)
+    GraftFunctions.builders.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => IntersectCountRule)
   }
 }

@@ -335,6 +335,34 @@ class BenchSpec extends AnyFunSuite {
     assert(psf.nonEmpty)
   }
 
+  test("a query that throws is not timed: out of value and queries, listed as failed") {
+    val spark = SparkSpec.session
+    val dir = "/root/testdata/sf0.001"
+    val queries = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "agg_q1_pricing" -> SparkEntry.queries("agg_q1_pricing"),
+      "planted_throw" -> ((_, _) => sys.error("planted fault")))
+    val passes = IndexedSeq.fill(2)(Bench.runPass(queries.size,
+      qi => Bench.run(spark, queries(qi)._1, dir, queries(qi)._2)))
+    val (results, rows, failed) = Bench.summarise(queries.map(_._1), passes)
+    assert(results.map(_._1) == Seq("agg_q1_pricing"))
+    assert(failed.map { case (n, e) => n -> e.getMessage } == Seq("planted_throw" -> "planted fault"))
+    val line = Bench.compactLine(results, reps = 2, sf = "0.001")
+    assert(!line.contains("planted_throw"))
+    assert(line.contains(f""""value":${results.head._2}%.3f,"""))
+    // the min pass's layer row counts its own run's jobs and tasks
+    val l = rows.head
+    assert(l.totalS == results.head._2)
+    assert(l.rows == SparkEntry.queries("agg_q1_pricing")(spark, dir).count())
+    assert(l.jobs >= 1 && l.stages >= 1 && l.tasks >= l.stages && l.cpuNs > 0)
+    val detail = Bench.detailJson(results, 2, "0.001",
+      Bench.layersJson(results, rows, Map("agg_q1_pricing" -> 1.5), failed))
+    assert(detail.contains(""""layers":{"agg_q1_pricing":{"build_s":"""))
+    assert(detail.contains(s""""tasks":${l.tasks},"warmup_s":1.500}"""))
+    assert(detail.contains(
+      """"failed":{"planted_throw":"java.lang.RuntimeException: planted fault"}"""))
+  }
+
   test("detail json carries min/med/max maps for every query") {
     val detail = Bench.detailJson(syntheticResults(35), reps = 3, sf = "0.1")
     Seq("\"queries\":", "\"qmed\":", "\"qmax\":", "\"value_med\":").foreach(k =>

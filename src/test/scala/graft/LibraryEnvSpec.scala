@@ -10,8 +10,8 @@ import scala.jdk.CollectionConverters._
   * (the measurement mains and `jobs` sit outside them) and graft's shims
   * under `org.apache.spark.sql` for env and system-property reads, and
   * allows only the deployment lookups below.
-  * StreamBench, the one streaming measurement main, is held to its
-  * core-count read the same way, so a retired A/B switch cannot return. */
+  * The measurement mains are held to the env names each one reads today,
+  * so a retired A/B switch cannot return. */
 class LibraryEnvSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src/main/scala")
   private val libraryDirs =
@@ -26,6 +26,18 @@ class LibraryEnvSpec extends AnyFunSuite {
     "graft/engine/AlertPipeline.scala" -> "sys.env.getOrElse(m.group(1),",
     // the durable-index root is deployment config with no Spark conf home
     "graft/engine/Tables.scala" -> """indexDirOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))""")
+
+  /** measurement main → the env names it may read. `SPARK_GRAFT_CPUS` is
+    * read once, by the shared session builder in Bench. The retired
+    * triage switches (GRAFT_JOBLOG, GRAFT_PHASES, GRAFT_FORCE) are on no
+    * list: `Bench time` prints what they added on every rep. */
+  private val mainEnv = Map(
+    "graft/Bench.scala" -> Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "GRAFT_BENCH_HEALTH_MAX", "GRAFT_BENCH_MAX_EXTRA", "GRAFT_BENCH_DETAIL"),
+    "graft/ScaleProbe.scala" -> Set("GRAFT_SCALE_JSON"),
+    "graft/PlanAudit.scala" -> Set("GRAFT_AUDIT_JSON"),
+    "graft/Verify.scala" -> Set.empty[String],
+    "graft/StreamBench.scala" -> Set.empty[String])
 
   /** (file relative to the source root, trimmed line) of every env read. */
   private def envReads(files: Seq[java.nio.file.Path]): Seq[(String, String)] =
@@ -46,10 +58,24 @@ class LibraryEnvSpec extends AnyFunSuite {
     assert(hits.toSet == allowed.toSet, hits.mkString("\n"))
   }
 
-  test("StreamBench reads no environment beyond SPARK_GRAFT_CPUS") {
-    val hits = envReads(Seq(root.resolve("graft/StreamBench.scala")))
-    assert(hits == Seq("graft/StreamBench.scala" ->
-      """.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")"""),
-      hits.mkString("\n"))
+  test("measurement mains read only their own env names, each by a literal name") {
+    // every file directly under graft/: a main not in the map reads nothing
+    val files = {
+      val s = java.nio.file.Files.list(root.resolve("graft"))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    assert(mainEnv.keySet.subsetOf(files.map(root.relativize(_).toString).toSet))
+    val named = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\("([A-Za-z0-9_]+)"""".r
+    val hits = envReads(files)
+    // a read that names no literal (a computed name, a property) could
+    // read anything, so none is allowed here
+    val unnamed = hits.filter { case (_, l) => named.findFirstIn(l).isEmpty }
+    assert(unnamed.isEmpty, unnamed.mkString("\n"))
+    val names = hits.groupMap(_._1)(h => named.findAllMatchIn(h._2).map(_.group(1)).toSeq)
+      .map { case (f, ns) => f -> ns.flatten.toSet }
+    files.map(root.relativize(_).toString).foreach { f =>
+      assert(names.getOrElse(f, Set.empty) == mainEnv.getOrElse(f, Set.empty), f)
+    }
+    assert(hits.count(_._2.contains("\"SPARK_GRAFT_CPUS\"")) == 1)
   }
 }

@@ -294,5 +294,25 @@ class RuleDispatchExprSpec extends SparkSpec {
       df.select(RuleDispatch.column(Seq(Eq("A", "x")),
         col("rid"), col("event_id"))).collect()
     }
+    val intId = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(RuleDispatch.column(Seq(Eq("A", "x")),
+        col("event_data"), col("event_id").cast("int"))).collect()
+    }
+    assert(intId.getMessage.contains("expects a BIGINT event_id, got int"), intId.getMessage)
+  }
+
+  test("analysis errors: top-level rid, non-string event_data field") {
+    val df = structFrame(Seq((0L, Some(1L), Some(fields.map(_ -> "x").toMap))))
+    val top = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(RuleDispatch.column(Seq(And(TopEq("rid", 0L), Eq("A", "x"))),
+        col("event_data"), col("event_id"))).collect()
+    }
+    assert(top.getMessage.contains("top-level predicates support only event_id, got rid"),
+      top.getMessage)
+    val nonString = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(RuleDispatch.column(Seq(Or(Eq("A", "x"), Eq("N", "1"))),
+        struct(col("event_data.A").as("A"), col("rid").as("N")), col("event_id"))).collect()
+    }
+    assert(nonString.getMessage.contains("non-string event_data fields: N"), nonString.getMessage)
   }
 }

@@ -53,12 +53,30 @@ class SimilarToExprSpec extends SparkSpec {
     assert(df.count() > 0) // and the generated code actually runs
   }
 
-  test("extensions class registers the function on a fresh session") {
-    val ext = new GraftExtensions
-    // simulate what spark.sql.extensions does
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    ext.apply(e) // must not throw; function injection is exercised via
-    // the registry path in the other tests (same builder triple)
-    assert(GraftFunctions.similarTo._1.funcName == "similar_to")
+  test("an extensions-only session resolves every function register adds") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    // the names register adds: a fresh session's registry minus builtins
+    val plain = spark.newSession()
+    GraftFunctions.register(plain)
+    val builtin = FunctionRegistry.builtin.listFunction().toSet
+    val added = plain.sessionState.functionRegistry.listFunction().toSet -- builtin
+    assert(added.map(_.funcName).contains("min_k_collect"))
+    // a new session on the same context whose functions come only from
+    // spark.sql.extensions; register is never called on it
+    val ext = org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new GraftExtensions).create()
+    try {
+      val missing = added.filterNot(ext.sessionState.functionRegistry.functionExists)
+      // kmv64 is a udaf wrapper with no builder triple; no rendered SQL uses it
+      assert(missing == Set(FunctionIdentifier("kmv64")), missing.mkString(", "))
+      // the timeframe SQL's distinct-count aggregate runs there
+      val r = ext.sql("SELECT size(min_k_distinct(s, 3)) FROM VALUES ('a'), ('b'), ('a') AS t(s)")
+        .head().getInt(0)
+      assert(r == 2)
+    } finally {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    }
   }
 }
