@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   *     full dedup pipeline (dedup_keep_canonical: banded candidates →
   *     large-star/small-star CC → corpus join → summary) at <mult>× with
   *     execution memory squeezed (spark.memory.fraction=0.05) so the
-  *     shuffles MUST spill, asserting completion and reporting spilled
-  *     bytes + slowdown vs the unconstrained run — the cheapest available
+  *     shuffles MUST spill, asserting completion with a nonzero spill
+  *     and reporting seconds and spilled bytes — the cheapest available
   *     evidence that the pipeline degrades to disk instead of OOMing when
   *     a 100 TB input blows past executor memory.
   *
@@ -114,8 +114,9 @@ object ScaleProbe {
     // 100 TB run lives in. Pair with a small driver heap
     // (SPARK_DRIVER_MEM=1500m) for real pressure: 8g × 0.05 across 10×
     // sf0.1 never fills.
+    val memFraction = "0.05"
     val spark = Bench.session(threads,
-      if (spillMode) Map("spark.memory.fraction" -> "0.05") else Map.empty)
+      if (spillMode) Map("spark.memory.fraction" -> memFraction) else Map.empty)
     spark.sparkContext.setLogLevel("ERROR")
 
     def makeReplicas(m: Int, dest: String): Unit = {
@@ -173,8 +174,9 @@ object ScaleProbe {
     SparkEntry.entry(spark).count() // warm session machinery
 
     if (spillMode) {
-      // completion under memory pressure is the assertion: a wrong-shaped
-      // pipeline OOMs or dies in the sorter here instead of spilling.
+      // completion BY SPILLING under memory pressure is the assertion: a
+      // wrong-shaped pipeline OOMs or dies in the sorter here instead of
+      // spilling, and a run that spilled nothing proved nothing.
       // Default is the end-to-end dedup pipeline; `spill <mult> <query>`
       // probes any other registered query (e.g. the window-sort path of
       // curate_pipeline_e2e).
@@ -188,6 +190,9 @@ object ScaleProbe {
         f""""sec":${r.totalS}%.2f,"rows":${r.rows},""" +
         f""""spilled_mem_mb":${r.spillMemBytes / (1024 * 1024)},""" +
         f""""spilled_disk_mb":${r.spillDiskBytes / (1024 * 1024)}}""")
+      require(r.spillMemBytes + r.spillDiskBytes > 0,
+        s"$pipeline spilled nothing at ${mult}x with spark.memory.fraction=$memFraction" +
+          ": no memory pressure was reached; raise the multiplier or lower SPARK_DRIVER_MEM")
     } else {
       val multCols = mults.flatMap(m => Seq(f"t_${m}%dx", "ratio"))
         .map(h => f"$h%9s").mkString

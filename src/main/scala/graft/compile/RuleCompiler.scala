@@ -597,8 +597,8 @@ object RuleCompiler {
     * `temporal` / `temporal_ordered` types (any ref count ≥ 2) compile to
     * a [[graft.streaming.SequenceRules.SequenceRule]] — all referenced
     * rules on the same key within `timespan`; document order enforced
-    * only by the `_ordered` variant (2 refs run the pair correlator, ≥3
-    * the ordered chain or — round 18 — the any-order slot correlator).
+    * only by the `_ordered` variant (the ordered chain correlator; plain
+    * `temporal` runs the any-order slot correlator).
     * The group key resolves through [[resolveField]]; a MULTI-field
     * `group-by` becomes one composite escaped `concat_ws('|', …)` key
     * ([[groupByKey]]) carried through the alert's computer_name, with the
@@ -613,8 +613,10 @@ object RuleCompiler {
     * unreferenced siblings). Documented limits, rejected as None:
     * correlation types beyond the four above, non-numeric thresholds,
     * timespans without a fixed length, single-ref temporal correlations,
-    * and refs that don't resolve within the same file ([[compileDirAll]]
-    * logs each rejection with the file path). */
+    * temporal correlations that reference one rule more than once (an
+    * event takes the FIRST step it matches, so a repeated ref's later
+    * step could never fire), and refs that don't resolve within the same
+    * file ([[compileDirAll]] logs each rejection with the file path). */
   def compileCorrelationFile(yamlText: String): Option[CompiledRepo] =
     compileCorrelationDocs(loadAllDocs(yamlText))
 
@@ -685,10 +687,9 @@ object RuleCompiler {
         case "temporal" | "temporal_ordered" =>
           for {
             gapUs <- timeframeMicros(timespan)
-            // any ref count ≥ 2: pairs run the pair correlator; ≥3 refs
-            // route to correlateChain (ordered) or correlateAnyOrder
-            // (unordered — round 18, the r17 verdict's named grammar gap)
-            if refs.size >= 2
+            // any ref count ≥ 2 of DISTINCT refs: ordered routes to
+            // correlateChain, unordered to correlateAnyOrder
+            if refs.size >= 2 && refs.distinct.size == refs.size
           } yield CompiledCorr(refs, generate, None,
             Some(SequenceRules.SequenceRule(
               corrMeta(cdoc, bases.map(_.where).reduce[Pred](Or(_, _))),

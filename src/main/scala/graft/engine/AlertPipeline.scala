@@ -463,7 +463,7 @@ object AlertPipeline {
 
   /** [[start]] for ONE compiled temporal correlation
     * ([[graft.streaming.SequenceRules.SequenceRule]] — the modern Sigma
-    * `temporal`/`temporal_ordered` types). A pair correlator is a
+    * `temporal`/`temporal_ordered` types). A sequence correlator is a
     * flatMapGroupsWithState operator, a different stateful class than the
     * battery's windowed aggregation, so each sequence rule runs as its own
     * append-mode query rather than a union sibling inside the combined

@@ -75,7 +75,7 @@ object Tables {
     * across-session lifecycle: one session builds and persists, later
     * sessions (or JVMs) probe the stored parquet with zero rebuild jobs. */
   @volatile private[graft] var indexDirOverride: Option[String] = None
-  private def indexDir: Option[String] =
+  private[graft] def indexDir: Option[String] =
     indexDirOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))
 
   /** Store path for (dir, key): human-readable dataset basename plus a

@@ -58,8 +58,8 @@ object IndexBuild {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val master = args.drop(1).headOption.getOrElse("local[32]")
-    require(sys.env.contains("GRAFT_INDEX_DIR") || Tables.indexDirOverride.nonEmpty,
-      "IndexBuild: set GRAFT_INDEX_DIR — without a store root there is nothing durable to build")
+    val root = Tables.indexDir.getOrElse(sys.error(
+      "IndexBuild: set GRAFT_INDEX_DIR — without a store root there is nothing durable to build"))
     val spark = graft.engine.SessionDefaults(SparkSession.builder())
       .master(master)
       .config("spark.sql.shuffle.partitions", 32)
@@ -81,17 +81,13 @@ object IndexBuild {
     }
     // record each artifact's input fingerprint so IndexRefresh can later
     // PROVE freshness (unchanged source files ⇒ serve with zero jobs).
-    // Override-first, matching Tables.cachedFrame's resolution — the
-    // stamps must land next to the artifacts the build loop just wrote,
-    // not under a different root
-    Tables.indexDirOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))
-      .foreach { root =>
-        IndexRefresh.stampFingerprints(spark, sfDir, root, fps)
-        // anchor each k-means centroid table's own-space canary (see
-        // IndexRefresh.writeCanaryBaseline) next to its stamp
-        IndexRefresh.artifacts.filter(_.centroidGated)
-          .foreach(a => IndexRefresh.writeCanaryBaseline(spark, sfDir, root, a.key))
-      }
+    // `root` is the store the build loop just wrote under, so the stamps
+    // land next to those artifacts
+    IndexRefresh.stampFingerprints(spark, sfDir, root, fps)
+    // anchor each k-means centroid table's own-space canary (see
+    // IndexRefresh.writeCanaryBaseline) next to its stamp
+    IndexRefresh.artifacts.filter(_.centroidGated)
+      .foreach(a => IndexRefresh.writeCanaryBaseline(spark, sfDir, root, a.key))
     val built = IndexStore.buildCounts.snapshot().keys.toSeq.sorted
     println(f"index-build complete: ${built.size} artifacts built this run " +
       f"in ${(System.nanoTime() - t0) / 1e9}%.1f s")

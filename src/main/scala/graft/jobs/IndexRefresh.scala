@@ -325,8 +325,8 @@ object IndexRefresh {
     * from before the refresh would keep serving the pre-refresh frame.
     */
   def refresh(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val root = Tables.indexDirOverride.orElse(sys.env.get("GRAFT_INDEX_DIR"))
-      .getOrElse(sys.error("IndexRefresh: set GRAFT_INDEX_DIR — nothing durable to refresh"))
+    val root = Tables.indexDir.getOrElse(
+      sys.error("IndexRefresh: set GRAFT_INDEX_DIR — nothing durable to refresh"))
     val fps = captureFingerprints(spark, dir)
     // each family's canary is evaluated at most once per pass, and only
     // if some artifact it gates has an actually-changed input

@@ -78,7 +78,7 @@ object Main {
       }
       .getOrCreate()
     // the stateless + windowed classes share ONE combined query; each
-    // compiled temporal correlation is its own pair-correlator query
+    // compiled temporal correlation is its own sequence-correlator query
     // (AlertPipeline.startSequence — a different stateful operator class),
     // all writing the same 5-column alert schema
     val queries = Seq(

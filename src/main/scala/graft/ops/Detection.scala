@@ -317,24 +317,31 @@ object Detection {
       // Sequence correlation (beyond-reference stateful operator, the
       // class main.py:194-195 rejects): cmdkey credential recon (creation)
       // followed within 72h by an lsass handle access on the same host —
-      // through streaming/SequenceRules.flatMapGroupsWithState, which runs
-      // this SAME code path incrementally in streaming (StreamingSpec
-      // proves cross-micro-batch state); here batch mode gives the DuckDB
-      // window oracle a full hash check of the correlation semantics.
+      // a 2-ref ORDERED SequenceRule through SequenceRules.alertsFor
+      // (correlateChain at n=2: each access pairs with the latest recon at
+      // or before it), the same code path that runs incrementally in
+      // streaming (StreamingSpec proves cross-micro-batch state); here
+      // batch mode gives the DuckDB window oracle a full hash check of the
+      // ordered pair semantics. The eids come back out of origin_ids
+      // (synth uuids are `uuid-<eid>`), the gap out of the span.
       "sig_sequence_corr" -> ((s: SparkSession, dir: String) => {
-        import s.implicits._
+        import graft.compile.{And, Eq, Like, Or, TopEq}
         import graft.streaming.SequenceRules
-        import graft.streaming.SequenceRules.SeqEvent
-        val evs = synth(s, dir)
-          .filter((col("event_id") === 1 && col("CommandLine") === "cmdkey /list")
-            || (col("event_id") === 10 && col("TargetImage").like("%lsass.exe")))
-          .select(col("computer_name").as("key"), col("eid"),
-            unix_micros(col("ts")).as("ts_us"),
-            when(col("event_id") === 1, 0).otherwise(1).as("kind"))
-          .as[SeqEvent]
-        SequenceRules.alerts(evs, 72L * 3600 * 1000000)
-          .select(col("key").as("computer_name"), col("b_eid").as("access_eid"),
-            col("a_eid").as("creation_eid"), col("gap_us"))
+        def ref(name: String, where: Pred) =
+          RuleDef(name, "graft", 0, "", Nil, Nil, Nil, Nil, None, where)
+        val recon = ref("Cmdkey Recon",
+          And(TopEq("event_id", 1), Eq("CommandLine", "cmdkey /list")))
+        val access = ref("Lsass Access",
+          And(TopEq("event_id", 10), Like("TargetImage", "%lsass.exe")))
+        val rule = SequenceRules.SequenceRule(
+          ref("Recon Then Lsass Access", Or(recon.where, access.where)),
+          Seq(recon, access), 72L * 3600 * 1000000, "computer_name", ordered = true)
+        def eid(step: Int): Column = regexp_extract(
+          element_at(col("event.origin_ids"), step), "^uuid-(\\d+)$", 1).cast("long")
+        SequenceRules.alertsFor(nested(s, dir), rule)
+          .select(col("computer_name"), eid(2).as("access_eid"),
+            eid(1).as("creation_eid"),
+            (unix_micros(col("event.end")) - unix_micros(col("event.start"))).as("gap_us"))
           .orderBy("access_eid")
       }),
       // Mutant control for the dead winrmShells rule (r12 verdict #5):
@@ -472,9 +479,9 @@ object Detection {
           .orderBy("start_us", "computer_name")
       }),
       // TEMPORAL correlation (round 17, r16 verdict #3): the modern Sigma
-      // `temporal` type compiled into a SequenceRules pair correlator —
-      // recon event and lsass access on the same host within 12h, either
-      // order; each match is ONE alert with count=2 and both uuids as
+      // `temporal` type compiled into SequenceRules' any-order correlator
+      // (correlateAnyOrder at n=2) — recon event and lsass access on the
+      // same host within 12h, either order; each match is ONE alert with count=2 and both uuids as
       // provenance. The oracle replays the compiled artifact (both base
       // predicates, gap, key) as a carry-forward window, so the full
       // event-pairing semantics hash-check — the same oracle technique
@@ -792,7 +799,7 @@ object Detection {
   /** TEMPORAL correlation file (tf_correlation_temporal, r17): the modern
     * Sigma `temporal` type — a cmdkey-recon event (process_creation) and
     * an lsass handle access (process_access) on the same host within 12h,
-    * either order — compiled into a SequenceRules pair correlator
+    * either order — compiled into SequenceRules' any-order correlator
     * (the wire the r16 verdict named: SequenceRules RAN this class while
     * the compile loop rejected the document type). */
   private[graft] val compiledTemporalYaml: String =
@@ -1248,13 +1255,13 @@ object Detection {
           ORDER BY start_us, computer_name"""
     }
 
-    // r17: the temporal correlation — replay the compiled pair-correlator
+    // r17: the temporal correlation — replay the compiled any-order pair
     // as a carry-forward window (the sig_sequence_corr technique): at each
     // event, the latest event of each kind at-or-before it (itself
     // included for its own kind); a row emits when the OPPOSITE kind is
-    // within the gap, pairing exactly like correlatePair's
-    // latest-opposite-slot state. Order inside the window is (ts, kind,
-    // uuid) — the same triple the Scala sort uses, so ties pair
+    // within the gap, pairing exactly like correlateAnyOrder's
+    // latest-slot-per-kind state at n=2. Order inside the window is (ts,
+    // kind, uuid) — the same triple the Scala sort uses, so ties pair
     // identically on both engines.
     val tfCorrelationTemporalSql = {
       val r = compiledTemporalRule

@@ -6,57 +6,50 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.rules.RuleDef
 
-/** Sequence-correlation rules: "event B on the same key within `gap` AFTER
-  * event A" — the Sigma correlation class the reference's transpiler
+/** Sequence-correlation rules: "the referenced rules on the same key
+  * within `gap`" — the Sigma correlation class the reference's transpiler
   * explicitly rejects (`/root/reference/sigma-transf/main.py:194-195`
   * returns '' for any rule with `timeframe`; correlation rules are the
   * stateful superset of those). This is the custom-state tier of the
   * streaming surface: `KeyValueGroupedDataset.flatMapGroupsWithState`,
-  * keyed by the correlation key, state = the latest qualifying A-event.
+  * keyed by the correlation key. Two correlators cover every ref count
+  * n ≥ 2: [[correlateChain]] (ordered; state = the latest valid chain per
+  * prefix length) and [[correlateAnyOrder]] (any order; state = the
+  * latest event of each kind). [[alertsFor]] runs either one.
   *
   * THE SAME function runs batch and streaming (the repo-wide design rule —
   * identical logical semantics both modes):
   *  - streaming: state persists in the state store across micro-batches;
-  *    an A in batch n correlates with a B in batch n+k. Rows inside one
-  *    micro-batch are sorted by event time before applying state (Spark
-  *    hands the group iterator unordered); ACROSS batches, ordering is by
-  *    arrival — bounded-disorder sources should pre-sort per trigger
+  *    an event in batch n correlates with one in batch n+k. Rows inside
+  *    one micro-batch are sorted by event time before applying state
+  *    (Spark hands the group iterator unordered); ACROSS batches, ordering
+  *    is by arrival — bounded-disorder sources should pre-sort per trigger
   *    (watermark semantics, SURVEY §2.9 T3).
   *  - batch: each key's full history arrives as one group; state starts
   *    empty, the in-group sort makes processing exactly time-ordered, so
   *    batch output == streaming output for in-order sources (the
-  *    equivalence the DuckDB window oracle checks).
+  *    equivalence the DuckDB window oracles check).
   *
-  * Scale: one hash shuffle on the key; state per key is O(1) — ONLY the
-  * latest A (ts, id), not a buffer of events; the in-group sort is
+  * Scale: one hash shuffle on the key; state per key is O(n) slots for n
+  * referenced rules, never a buffer of events; the in-group sort is
   * per-key-per-batch (micro-batch sized in streaming, bounded by key
   * cardinality × event rate, never global).
   *
-  * STATE LIFETIME (round 18, r17 verdict #1): per-key state is O(1)/O(n)
+  * STATE LIFETIME (round 18, r17 verdict #1): per-key state is O(n)
   * SLOTS, but keys themselves would otherwise accumulate forever — a
   * year-long stream keyed on a composite like `host|SourceImage` grows the
   * state store with key cardinality. A slot older than `gapUs` can never
-  * participate in another match, so every correlator takes an `expire`
-  * flag: in streaming with a watermark, the runners pass
+  * participate in another match, so both correlators take an `expire`
+  * flag: in streaming with a watermark, the runner passes
   * `GroupStateTimeout.EventTimeTimeout` and each invocation re-arms the
   * key's timeout at (last relevant slot + gap); once the watermark passes
   * it, Spark calls back with `hasTimedOut` and the state is dropped. Batch
-  * keeps `NoTimeout` (state dies with the job). An in-gap pair still
-  * matches across the timeout boundary — the timeout only fires after the
-  * watermark (not wall time) passes the last instant a stored slot could
-  * matter.
+  * keeps `NoTimeout` (state dies with the job). An in-gap match still
+  * completes across the timeout boundary — the timeout only fires after
+  * the watermark (not wall time) passes the last instant a stored slot
+  * could matter.
   */
 object SequenceRules {
-
-  /** One event entering the correlator. kind: 0 = A (antecedent),
-    * 1 = B (consequent). ts_us = event-time micros. */
-  final case class SeqEvent(key: String, eid: Long, ts_us: Long, kind: Int)
-
-  /** Correlated match: the B event plus the latest A within the gap. */
-  final case class SeqAlert(key: String, b_eid: Long, a_eid: Long, gap_us: Long)
-
-  /** Latest qualifying A event seen for this key. */
-  final case class SeqState(a_eid: Long, a_ts_us: Long)
 
   /** Arm the event-time timeout for a live state: fire once the watermark
     * passes the last instant the stored slots could still participate in a
@@ -68,81 +61,24 @@ object SequenceRules {
     state.setTimeoutTimestamp(math.max(fireMs, state.getCurrentWatermarkMs() + 1L))
   }
 
-  /** A→B within gapUs, per key. In-batch rows are processed in
-    * (ts, kind) order: an A and a B at the same timestamp correlate
-    * (A sorts first) — mirrored by the oracle's window ORDER BY.
-    * `expire` (streaming runners only): re-arm the key's event-time
-    * timeout at a_ts + gap and drop state when it fires. */
-  def correlate(gapUs: Long, expire: Boolean = false)(
-      key: String, rows: Iterator[SeqEvent], state: GroupState[SeqState])
-      : Iterator[SeqAlert] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var last = state.getOption
-    val out = Vector.newBuilder[SeqAlert]
-    rows.toVector.sortBy(e => (e.ts_us, e.kind)).foreach { e =>
-      if (e.kind == 0) last = Some(SeqState(e.eid, e.ts_us))
-      else last.foreach { a =>
-        val gap = e.ts_us - a.a_ts_us
-        if (gap >= 0 && gap <= gapUs) out += SeqAlert(key, e.eid, a.a_eid, gap)
-      }
-    }
-    last match {
-      case Some(s) =>
-        state.update(s)
-        if (expire) armTimeout(state, s.a_ts_us, gapUs)
-      case None => ()
-    }
-    out.result().iterator
-  }
-
-  /** Batch AND streaming entry: correlated alerts from a SeqEvent stream.
-    * Streaming input gets a derived event-time column + `watermarkDelay`
-    * watermark and runs with event-time state expiry (see STATE LIFETIME
-    * above); rows later than the watermark are dropped — the same T3
-    * late-data semantics every windowed operator here applies. Batch input
-    * is unchanged (full history per key, state dies with the job). */
-  def alerts(events: Dataset[SeqEvent], gapUs: Long,
-      watermarkDelay: String = "10 seconds"): Dataset[SeqAlert] = {
-    val s: SparkSession = events.sparkSession
-    import s.implicits._
-    if (events.isStreaming)
-      events
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .withWatermark("ts", watermarkDelay)
-        .as[SeqEvent]
-        .groupByKey(_.key)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          correlate(gapUs, expire = true))
-    else
-      events
-        .groupByKey(_.key)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-          correlate(gapUs))
-  }
-
   // ------------------------------------------------------------------
   // Compiled temporal-correlation deployments (round 17): the modern
   // Sigma correlation format's `temporal` / `temporal_ordered` types
   // (the meta-rule spec compileCorrelationFile implements) compile to a
-  // [[SequenceRule]] and run here — the missing wire the r16 verdict
-  // named: the engine RAN sequence correlation (above) while the compile
-  // loop rejected the document type.
+  // [[SequenceRule]] and run here.
   // ------------------------------------------------------------------
 
-  /** A COMPILED temporal correlation: N referenced base rules, a time
+  /** A COMPILED temporal correlation: N ≥ 2 referenced base rules, a time
     * gap, a group key. `ordered = false` (Sigma `temporal`): the rules
-    * match in ANY order within the gap — two refs run the pair
-    * correlator, three or more the any-order slot correlator
-    * ([[correlateAnyOrder]], round 18 — the n-ref carve-out the r17
-    * verdict named); `ordered = true` (`temporal_ordered`): the rules
-    * must match in document order, the whole chain inside the gap — any
-    * length ≥ 2 (the [[correlateChain]] operator; 2-rule ordered runs the
-    * same pair correlator as unordered, the two are equivalent at n=2).
-    * `keyCol` is any Spark SQL expression over the sysmon frame (single
-    * column or the composite escaped `concat_ws` key multi-field
-    * `group-by` compiles to); `keyParts` carries the resolved field list
-    * whenever the key is composite, so oracles/render paths can rebuild
-    * the key without re-parsing the expression text (advisor r17). */
+    * match in ANY order within the gap — the any-order slot correlator
+    * ([[correlateAnyOrder]]); `ordered = true` (`temporal_ordered`): the
+    * rules must match in document order, the whole chain inside the gap
+    * (the [[correlateChain]] operator). `keyCol` is any Spark SQL
+    * expression over the sysmon frame (single column or the composite
+    * escaped `concat_ws` key multi-field `group-by` compiles to);
+    * `keyParts` carries the resolved field list whenever the key is
+    * composite, so oracles/render paths can rebuild the key without
+    * re-parsing the expression text (advisor r17). */
   final case class SequenceRule(
       meta: RuleDef, rules: Seq[RuleDef],
       gapUs: Long, keyCol: String, ordered: Boolean,
@@ -158,63 +94,6 @@ object SequenceRules {
   final case class PairEvent(key: String, ts_us: Long, kind: Int,
       uuid: String, host: String)
 
-  /** Latest event of each kind for this key. O(1) per key — two slots,
-    * never a buffer; `*_set` flags are the encoder-friendly Option. */
-  final case class PairState(
-      a_set: Boolean, a_ts_us: Long, a_uuid: String, a_host: String,
-      b_set: Boolean, b_ts_us: Long, b_uuid: String, b_host: String)
-
-  /** A correlated pair: both sides' uuids and event times, plus the
-    * emitting (later) event's host for the alert row. */
-  final case class PairMatch(key: String, host: String,
-      a_ts_us: Long, b_ts_us: Long, a_uuid: String, b_uuid: String)
-
-  /** Pair correlation, ordered or not. Every event pairs with the LATEST
-    * opposite-kind event within the gap (at most one emission per event,
-    * so output is linear in matched events; state is two slots per key).
-    * Ordered mode only emits on kind-1 arrivals — exactly [[correlate]]'s
-    * A→B semantics. In-batch rows process in (ts, kind, uuid) order: ties
-    * at one timestamp put the FIRST rule's event before the second's (it
-    * can be paired), and the uuid tiebreak makes same-kind ties
-    * deterministic on both engines (the DuckDB oracle windows ORDER BY the
-    * same triple). Cross-batch, slots persist in the state store; an event
-    * older than a stored slot (out-of-order across triggers) fails the
-    * `gap >= 0` guard, the same drop [[correlate]] applies. `expire`:
-    * event-time timeout at (latest slot + gap), see STATE LIFETIME. */
-  def correlatePair(gapUs: Long, ordered: Boolean, expire: Boolean = false)(
-      key: String, rows: Iterator[PairEvent], state: GroupState[PairState])
-      : Iterator[PairMatch] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var st = state.getOption.getOrElse(
-      PairState(a_set = false, 0L, "", "", b_set = false, 0L, "", ""))
-    val out = Vector.newBuilder[PairMatch]
-    rows.toVector.sortBy(e => (e.ts_us, e.kind, e.uuid)).foreach { e =>
-      if (e.kind == 0) {
-        if (!ordered && st.b_set) {
-          val gap = e.ts_us - st.b_ts_us
-          if (gap >= 0 && gap <= gapUs)
-            out += PairMatch(key, e.host, e.ts_us, st.b_ts_us, e.uuid, st.b_uuid)
-        }
-        st = st.copy(a_set = true, a_ts_us = e.ts_us, a_uuid = e.uuid, a_host = e.host)
-      } else {
-        if (st.a_set) {
-          val gap = e.ts_us - st.a_ts_us
-          if (gap >= 0 && gap <= gapUs)
-            out += PairMatch(key, e.host, st.a_ts_us, e.ts_us, st.a_uuid, e.uuid)
-        }
-        st = st.copy(b_set = true, b_ts_us = e.ts_us, b_uuid = e.uuid, b_host = e.host)
-      }
-    }
-    state.update(st)
-    if (expire) {
-      val lastTs = math.max(
-        if (st.a_set) st.a_ts_us else Long.MinValue,
-        if (st.b_set) st.b_ts_us else Long.MinValue)
-      if (lastTs != Long.MinValue) armTimeout(state, lastTs, gapUs)
-    }
-    out.result().iterator
-  }
-
   /** The best (latest-headed) chain covering rule steps 0..i for a key:
     * the first event's time (span anchor), the step-i event's time (order
     * anchor for step i+1), and every chain event's uuid (provenance). */
@@ -225,28 +104,27 @@ object SequenceRules {
     * buffer of events. */
   final case class ChainState(links: Map[Int, ChainLink])
 
-  /** A completed correlation over ≥3 refs (ordered chain or any-order
-    * set): the emitting (last) event's host, the span bounds, and all N
-    * uuids in rule order. */
+  /** A completed correlation (ordered chain or any-order set): the
+    * emitting (last) event's host, the span bounds, and all N uuids in
+    * rule order. */
   final case class ChainMatch(key: String, host: String,
       start_ts_us: Long, end_ts_us: Long, uuids: Seq[String])
 
-  /** Ordered N-step chain correlation (Sigma `temporal_ordered`, ≥3 refs
-    * — the r16 verdict's named carve-out): rules[0] → rules[1] → … →
-    * rules[n-1] on one key, in order, the WHOLE chain within `gapUs` of
-    * its first event. Greedy latest-prefix semantics, the chain analog of
-    * [[correlatePair]]'s latest-opposite-slot: an event of step i extends
-    * the LATEST valid chain covering steps 0..i-1 (valid = this event is
-    * at-or-after that chain's last event AND within the gap of its
-    * head); a completed step n-1 emits ONE match. Deterministic: in-batch
-    * rows process in (ts, kind, uuid) order — a full chain at one
-    * timestamp completes (step order breaks the tie), mirrored by the
-    * oracle's layered carry-forward windows over the same triple. State
-    * is one slot per prefix length; an out-of-order event across
-    * micro-batches fails the at-or-after guard, the same drop the pair
-    * correlator applies. `expire`: event-time timeout at (latest chain
-    * head + gap) — once the watermark passes it no stored prefix can
-    * extend, see STATE LIFETIME. */
+  /** Ordered N-step chain correlation (Sigma `temporal_ordered`, any
+    * n ≥ 2): rules[0] → rules[1] → … → rules[n-1] on one key, in order,
+    * the WHOLE chain within `gapUs` of its first event. Greedy
+    * latest-prefix semantics: an event of step i extends the LATEST valid
+    * chain covering steps 0..i-1 (valid = this event is at-or-after that
+    * chain's last event AND within the gap of its head); a completed step
+    * n-1 emits ONE match. At n=2 this is "B pairs with the latest A at or
+    * before it, within the gap". Deterministic: in-batch rows process in
+    * (ts, kind, uuid) order — a full chain at one timestamp completes
+    * (step order breaks the tie), mirrored by the oracles' carry-forward
+    * windows over the same order. State is one slot per prefix length; an
+    * out-of-order event across micro-batches fails the at-or-after guard
+    * and is dropped. `expire`: event-time timeout at (latest chain head +
+    * gap) — once the watermark passes it no stored prefix can extend, see
+    * STATE LIFETIME. */
   def correlateChain(gapUs: Long, n: Int, expire: Boolean = false)(
       key: String, rows: Iterator[PairEvent], state: GroupState[ChainState])
       : Iterator[ChainMatch] = {
@@ -280,22 +158,21 @@ object SequenceRules {
     * the chain state minus the order guard, O(n) slots, never a buffer. */
   final case class AnyOrderState(slots: Map[Int, AnySlot])
 
-  /** ANY-ORDER N-ref temporal correlation (Sigma `temporal` with ≥3 refs
-    * — round 18, the r17 verdict's named grammar gap): all N referenced
-    * rules observed on one key, in any order, within `gapUs` of the
-    * OLDEST participating slot. One latest-slot per kind; an arriving
-    * event updates its kind's slot, then emits ONE [[ChainMatch]] iff
-    * every kind's slot is set, none is newer than this event (the same
-    * out-of-order cross-batch drop the pair correlator's `gap >= 0`
-    * applies), and this event sits within the gap of the oldest slot —
-    * the n-ary generalization of [[correlatePair]]'s latest-opposite-slot
-    * pairing (at n=2 the two are emission-for-emission identical). At
-    * most one emission per event → linear output; uuids in rule order;
-    * span = oldest slot .. this event. Deterministic in-batch order
-    * (ts, kind, uuid), mirrored by the oracle's per-kind carry-forward
-    * windows over the same triple. `expire`: event-time timeout at
-    * (latest slot + gap) — when the watermark passes it, every slot is
-    * individually dead, see STATE LIFETIME. */
+  /** ANY-ORDER N-ref temporal correlation (Sigma `temporal`, any n ≥ 2):
+    * all N referenced rules observed on one key, in any order, within
+    * `gapUs` of the OLDEST participating slot. One latest-slot per kind;
+    * an arriving event updates its kind's slot, then emits ONE
+    * [[ChainMatch]] iff every kind's slot is set, none is newer than this
+    * event (an out-of-order event across micro-batches is dropped, the
+    * same guard [[correlateChain]] applies), and this event sits within
+    * the gap of the oldest slot. At n=2 this is "every event pairs with
+    * the latest opposite-kind event within the gap". At most one emission
+    * per event → linear output; uuids in rule order; span = oldest slot ..
+    * this event. Deterministic in-batch order (ts, kind, uuid), mirrored
+    * by the oracles' per-kind carry-forward windows over the same triple.
+    * `expire`: event-time timeout at (latest slot + gap) — when the
+    * watermark passes it, every slot is individually dead, see STATE
+    * LIFETIME. */
   def correlateAnyOrder(gapUs: Long, n: Int, expire: Boolean = false)(
       key: String, rows: Iterator[PairEvent], state: GroupState[AnyOrderState])
       : Iterator[ChainMatch] = {
@@ -323,16 +200,15 @@ object SequenceRules {
     * nested sysmon frame (`event_data` struct + `timestamp`/`uuid`/`host`,
     * the same input [[graft.engine.AlertPipeline.ruleAlerts]] takes).
     * Emits the reference's full alert row plus the battery's leading
-    * `rule_name` convenience column: a correlated pair/chain/set is ONE
-    * alert whose event struct carries count=N, origin_ids=[each step's
-    * uuid in rule order], start/end = the correlation's time bounds — the
+    * `rule_name` convenience column: a correlated chain/set is ONE alert
+    * whose event struct carries count=N, origin_ids=[each step's uuid in
+    * rule order], start/end = the correlation's time bounds — the
     * sequence analog of the timeframe battery's windowed alert. Streaming
     * callers drop `rule_name` at the sink exactly like the combined job,
     * so the sink schema stays the invariant 5-column row.
     *
-    * Correlator routing: 2 refs → [[correlatePair]] (ordered flag applies
-    * there); ≥3 refs ordered → [[correlateChain]]; ≥3 refs unordered →
-    * [[correlateAnyOrder]].
+    * Correlator routing, for every n ≥ 2: ordered → [[correlateChain]];
+    * unordered → [[correlateAnyOrder]].
     *
     * An event matching several of the rule predicates takes the FIRST
     * matching step (document order, deterministic — the oracle's CASE
@@ -373,26 +249,14 @@ object SequenceRules {
       .select(cols: _*)
       .as[PairEvent]
     val grouped = evs.groupByKey(_.key)
-    // (key, host, start_us, end_us, origin uuids) for any correlator
-    val matched: DataFrame =
-      if (rule.rules.size > 2) {
-        val ds: Dataset[ChainMatch] =
-          if (rule.ordered)
-            grouped.flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-              correlateChain(rule.gapUs, rule.rules.size, expire))
-          else
-            grouped.flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-              correlateAnyOrder(rule.gapUs, rule.rules.size, expire))
-        ds.toDF().select(col("key"), col("host"),
-          col("start_ts_us").as("start_us"), col("end_ts_us").as("end_us"),
-          col("uuids").as("origin_ids"))
-      } else
+    val n = rule.rules.size
+    val matched: Dataset[ChainMatch] =
+      if (rule.ordered)
         grouped.flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-          correlatePair(rule.gapUs, rule.ordered, expire))
-          .toDF().select(col("key"), col("host"),
-            least(col("a_ts_us"), col("b_ts_us")).as("start_us"),
-            greatest(col("a_ts_us"), col("b_ts_us")).as("end_us"),
-            array(col("a_uuid"), col("b_uuid")).as("origin_ids"))
+          correlateChain(rule.gapUs, n, expire))
+      else
+        grouped.flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+          correlateAnyOrder(rule.gapUs, n, expire))
     val m = element_at(AlertPipeline.metaLiteral(Seq(rule.meta)), lit(1))
     matched.select(
       lit(rule.meta.name).as("rule_name"),
@@ -401,11 +265,11 @@ object SequenceRules {
       struct(
         lit("signal").as("kind"),
         m.getField("module").as("module"),
-        col("origin_ids"),
-        lit(rule.rules.size.toLong).as("count"),
-        timestamp_micros(col("start_us")).as("start"),
-        timestamp_micros(col("end_us")).as("end"),
-        timestamp_micros(col("end_us")).as("time")).as("event"),
+        col("uuids").as("origin_ids"),
+        lit(n.toLong).as("count"),
+        timestamp_micros(col("start_ts_us")).as("start"),
+        timestamp_micros(col("end_ts_us")).as("end"),
+        timestamp_micros(col("end_ts_us")).as("time")).as("event"),
       AlertPipeline.threatStruct(m),
       AlertPipeline.ruleStruct(m))
   }

@@ -186,7 +186,21 @@ class RuleCompilerSpec extends AnyFunSuite {
   }
 
   test("modern correlation documents compile: event_count, value_count, generate, rejections (r16)") {
-    def corrFile(correlation: String): String =
+    // a third base rule for the 3-ref correlations (its own doc, so the
+    // 1- and 2-ref files keep no unreferenced co-resident rule)
+    val baseC =
+      """title: Base C
+        |name: base_c
+        |level: medium
+        |logsource:
+        |  category: process_access
+        |detection:
+        |  selection:
+        |    CallTrace|contains: 'dbghelp'
+        |  condition: selection
+        |---
+        |""".stripMargin
+    def corrFile(correlation: String, extraBases: String = ""): String =
       s"""title: Base A
          |name: base_a
          |level: high
@@ -207,7 +221,7 @@ class RuleCompilerSpec extends AnyFunSuite {
          |    GrantedAccess: '0x1FFFFF'
          |  condition: selection
          |---
-         |title: Corr Rule
+         |${extraBases}title: Corr Rule
          |level: critical
          |tags:
          |  - attack.credential_access
@@ -277,7 +291,7 @@ class RuleCompilerSpec extends AnyFunSuite {
       "concat_ws('|', replace(replace(host, '\\\\', '\\\\\\\\'), '|', '\\\\|'), " +
         "replace(replace(event_data.`TargetUser`, '\\\\', '\\\\\\\\'), '|', '\\\\|'))")
     assert(mk.keyParts == Seq("host", "event_data.TargetUser"))
-    // temporal compiles to a SequenceRules pair correlator (r17; rejected
+    // temporal compiles to a SequenceRules correlation (r17; rejected
     // through r16): refs in order, timespan as micros, unordered
     val tc = compileCorrelationFile(corrFile(
       """  type: temporal
@@ -298,25 +312,37 @@ class RuleCompilerSpec extends AnyFunSuite {
     // 3-step chain compiles with the refs in document order
     val ch = compileCorrelationFile(corrFile(
       """  type: temporal_ordered
-        |  rules: [base_a, base_b, base_a]
-        |  timespan: 2h""".stripMargin)).get.sequence.head
-    assert(ch.ordered && ch.rules.map(_.name) == Seq("Base A", "Base B", "Base A"))
+        |  rules: [base_a, base_b, base_c]
+        |  timespan: 2h""".stripMargin, baseC)).get.sequence.head
+    assert(ch.ordered && ch.rules.map(_.name) == Seq("Base A", "Base B", "Base C"))
     assert(ch.gapUs == 7200000000L)
     // 3-ref UNORDERED temporal compiles to the any-order correlator
     // (r18 — rejected through r17, the r17 verdict's named grammar gap)
     val ao = compileCorrelationFile(corrFile(
       """  type: temporal
-        |  rules: [base_a, base_b, base_a]
-        |  timespan: 1h""".stripMargin)).get.sequence.head
-    assert(!ao.ordered && ao.rules.map(_.name) == Seq("Base A", "Base B", "Base A"))
+        |  rules: [base_c, base_a, base_b]
+        |  timespan: 1h""".stripMargin, baseC)).get.sequence.head
+    assert(!ao.ordered && ao.rules.map(_.name) == Seq("Base C", "Base A", "Base B"))
     assert(ao.gapUs == 3600000000L)
-    // rejections: single-ref temporal, unresolved ref, non-numeric
-    // threshold (advisor r16: must reject as None, not crash the
-    // directory walk), unknown type
+    // rejections: single-ref temporal, a temporal correlation that repeats
+    // a ref (every event takes the FIRST step it matches, so the repeat
+    // could never fire while the key kept state), unresolved ref,
+    // non-numeric threshold (advisor r16: must reject as None, not crash
+    // the directory walk), unknown type
     assert(compileCorrelationFile(corrFile(
       """  type: temporal
         |  rules: [base_a]
         |  timespan: 1h""".stripMargin)).isEmpty)
+    Seq("temporal", "temporal_ordered").foreach { typ =>
+      assert(compileCorrelationFile(corrFile(
+        s"""  type: $typ
+           |  rules: [base_a, base_b, base_a]
+           |  timespan: 1h""".stripMargin)).isEmpty, typ)
+      assert(compileCorrelationFile(corrFile(
+        s"""  type: $typ
+           |  rules: [base_a, base_a]
+           |  timespan: 1h""".stripMargin)).isEmpty, typ)
+    }
     assert(compileCorrelationFile(corrFile(
       """  type: event_count
         |  rules: [no_such_rule]

@@ -100,6 +100,38 @@ class AlertPipelineSpec extends SparkSpec {
     }
   }
 
+  test("a 2-ref temporal rule honours `ordered`: B then A pairs only unordered, A then B under both") {
+    import graft.streaming.SequenceRules
+    // the compiled `temporal` artifact: A = cmdkey recon (event_id 1),
+    // B = lsass access (event_id 10), key computer_name, gap 12h
+    val unordered = graft.ops.Detection.compiledTemporalRule
+    assert(!unordered.ordered && unordered.rules.size == 2)
+    val ordered = unordered.copy(ordered = true)
+    val t0 = 1700000000000000L
+    val t1 = t0 + 3600000000L // one hour later, inside the gap
+    def recon(ts: Long) = ev("uuid" -> "uA", "event_id" -> 1L,
+      "CommandLine" -> "cmdkey /list", "ts_us" -> ts)
+    def access(ts: Long) = ev("uuid" -> "uB",
+      "TargetImage" -> """C:\Windows\System32\lsass.exe""", "ts_us" -> ts)
+    // (origin_ids, start_us, end_us) of every alert, one key (pc1)
+    def run(rule: SequenceRules.SequenceRule, rows: Map[String, Any]*)
+        : Seq[(Seq[String], Long, Long)] =
+      SequenceRules.alertsFor(AlertPipeline.sysmonFrame(spark, rows), rule)
+        .select(col("event.origin_ids"), unix_micros(col("event.start")),
+          unix_micros(col("event.end")))
+        .collect().toSeq
+        .map(r => (r.getSeq[String](0).toSeq, r.getLong(1), r.getLong(2)))
+    // B then A: the any-order correlator pairs them, the ordered chain
+    // must not (A has to come first)
+    assert(run(unordered, access(t0), recon(t1)) == Seq((Seq("uA", "uB"), t0, t1)))
+    assert(run(ordered, access(t0), recon(t1)).isEmpty)
+    // A then B: one alert under both, origin_ids in RULE order, start/end
+    // at the pair's bounds
+    for (rule <- Seq(unordered, ordered))
+      assert(run(rule, recon(t0), access(t1)) == Seq((Seq("uA", "uB"), t0, t1)),
+        s"ordered=${rule.ordered}")
+  }
+
   test("C6 extended: timeframe SQL render ≡ windowed Column path (plain, by-key, distinct) (r16)") {
     // the SQL-gateway deployment path for COMPILED correlation rules:
     // renderTimeframeSql's windowed GROUP BY SELECT must produce the

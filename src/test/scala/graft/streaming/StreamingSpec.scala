@@ -593,26 +593,46 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** A 2-step ordered chain (A → B) over a watermarked PairEvent stream
+    * under event-time state expiry: the correlator a 2-ref
+    * `temporal_ordered` rule deploys, without alertsFor's sysmon
+    * projection. */
+  private def orderedPair(mem: MemoryStream[SequenceRules.PairEvent], gapUs: Long,
+      watermarkDelay: String) = {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    mem.toDS()
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+      .withWatermark("ts", watermarkDelay)
+      .as[SequenceRules.PairEvent]
+      .groupByKey(_.key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        SequenceRules.correlateChain(gapUs, n = 2, expire = true))
+  }
+
   test("sequence correlation: A-state persists across micro-batches (flatMapGroupsWithState)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import SequenceRules.{SeqAlert, SeqEvent}
-    val mem = MemoryStream[SeqEvent]
-    val alerts = SequenceRules.alerts(mem.toDS(), gapUs = 60000000L)
+    import SequenceRules.{ChainMatch, PairEvent}
+    val mem = MemoryStream[PairEvent]
+    val alerts = orderedPair(mem, gapUs = 60000000L, watermarkDelay = "10 seconds")
     val q = alerts.writeStream.format("memory").queryName("seq_t1")
       .outputMode("append").start()
     try {
       // batch 1: an A on pc1 (stored in state), a B on pc2 with no prior A
-      mem.addData(SeqEvent("pc1", 1L, 1000000L, 0), SeqEvent("pc2", 2L, 1000000L, 1))
+      mem.addData(PairEvent("pc1", 1000000L, 0, "e1", "h1"),
+        PairEvent("pc2", 1000000L, 1, "e2", "h2"))
       q.processAllAvailable()
       assert(spark.table("seq_t1").count() == 0)
       // batch 2: B on pc1 29s after the batch-1 A → correlates FROM STATE
-      mem.addData(SeqEvent("pc1", 3L, 30000000L, 1))
+      mem.addData(PairEvent("pc1", 30000000L, 1, "e3", "h1"))
       q.processAllAvailable()
-      val out = spark.table("seq_t1").as[SeqAlert].collect()
-      assert(out.toSeq == Seq(SeqAlert("pc1", 3L, 1L, 29000000L)))
+      val out = spark.table("seq_t1").as[ChainMatch].collect()
+      assert(out.toSeq == Seq(
+        ChainMatch("pc1", "h1", 1000000L, 30000000L, Seq("e1", "e3"))))
+      assert(out.head.end_ts_us - out.head.start_ts_us == 29000000L)
       // batch 3: B beyond the gap → no new alert
-      mem.addData(SeqEvent("pc1", 4L, 120000000L, 1))
+      mem.addData(PairEvent("pc1", 120000000L, 1, "e4", "h1"))
       q.processAllAvailable()
       assert(spark.table("seq_t1").count() == 1)
     } finally q.stop()
@@ -659,36 +679,35 @@ class StreamingSpec extends SparkSpec {
   test("sequence-correlator state expires once the watermark passes the gap; in-gap pairs still match across the boundary (r18)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import SequenceRules.{SeqAlert, SeqEvent}
-    val mem = MemoryStream[SeqEvent]
-    // gap 20s, zero-delay watermark: streaming input routes through the
-    // EventTimeTimeout expiry path inside SequenceRules.alerts (r18)
-    val alerts = SequenceRules.alerts(mem.toDS(), gapUs = 20000000L,
-      watermarkDelay = "0 seconds")
+    import SequenceRules.{ChainMatch, PairEvent}
+    val mem = MemoryStream[PairEvent]
+    // gap 20s, zero-delay watermark: the 2-step chain runs under
+    // EventTimeTimeout, its key's timeout armed at (latest A + gap)
+    val alerts = orderedPair(mem, gapUs = 20000000L, watermarkDelay = "0 seconds")
     val q = alerts.writeStream.format("memory").queryName("seq_exp")
       .outputMode("append").start()
     try {
       // batch 1: an A on k-stale at t=10s → one state row; wm := 10s
-      mem.addData(SeqEvent("k-stale", 1L, 10000000L, 0))
+      mem.addData(PairEvent("k-stale", 10000000L, 0, "e1", "hs"))
       q.processAllAvailable()
       // batch 2: a B on k-stale at t=25s pairs FROM STATE across the
       // boundary (gap 15s ≤ 20s — the timeout, armed for t=30s, has not
       // fired yet); an A on k-live at t=100s; wm := 100s afterwards
-      mem.addData(SeqEvent("k-stale", 2L, 25000000L, 1),
-        SeqEvent("k-live", 3L, 100000000L, 0))
+      mem.addData(PairEvent("k-stale", 25000000L, 1, "e2", "hs"),
+        PairEvent("k-live", 100000000L, 0, "e3", "hl"))
       q.processAllAvailable()
-      assert(spark.table("seq_exp").as[SeqAlert].collect().toSeq ==
-        Seq(SeqAlert("k-stale", 2L, 1L, 15000000L)))
+      assert(spark.table("seq_exp").as[ChainMatch].collect().toSeq ==
+        Seq(ChainMatch("k-stale", "hs", 10000000L, 25000000L, Seq("e1", "e2"))))
       // batch 3 runs with wm=100s, past k-stale's timeout (A@10s + gap
       // 20s): the stale key's state DROPS; k-live still pairs its own B
-      mem.addData(SeqEvent("k-live", 4L, 110000000L, 1))
+      mem.addData(PairEvent("k-live", 110000000L, 1, "e4", "hl"))
       q.processAllAvailable()
       assert(spark.table("seq_exp").count() == 2)
       val st = q.lastProgress.stateOperators
       assert(st.length == 1 && st(0).numRowsTotal == 1) // only k-live survives
       // batch 4: a LATE B on k-stale inside what was the gap window — the
       // state is gone (and the row is behind the watermark): no alert
-      mem.addData(SeqEvent("k-stale", 5L, 28000000L, 1))
+      mem.addData(PairEvent("k-stale", 28000000L, 1, "e5", "hs"))
       q.processAllAvailable()
       assert(spark.table("seq_exp").count() == 2)
     } finally q.stop()
