@@ -11,7 +11,8 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's core capability: the full 25-rule detection fan-out
-    * (shared scan → N×(filter→project) → UNION ALL) with per-rule counts. */
+    * (one scan → `rule_dispatch` over every rule → one alert row per fired
+    * rule, bag-equal to the reference's UNION ALL) with per-rule counts. */
   def entry(spark: SparkSession): DataFrame =
     queries("sig_fanout_counts")(spark, "/root/testdata/sf0.001")
 

@@ -414,8 +414,9 @@ object RuleCompiler {
 
   /** C6 `gen_flink_sql` analog: render one rule as a complete alert-shaped
     * Spark SQL SELECT over a registered sysmon view (main.py:146-176's
-    * INSERT template, minus the INSERT — the engine unions the SELECTs).
-    * Proven equivalent to the Column path in RuleCompilerSpec. */
+    * INSERT template, minus the INSERT). UNION ALL of these SELECTs is the
+    * reference's statement set; AlertPipelineSpec checks
+    * [[graft.engine.AlertPipeline.alertsMerged]] against it. */
   def renderSql(r: RuleDef, from: String): String = {
     val module = r.module.map(Pred.ssq).getOrElse("CAST(NULL AS STRING)")
     val where = r.where.toSparkSql(f => s"event_data.`$f`")
@@ -450,12 +451,13 @@ object RuleCompiler {
     * one complete alert-shaped Spark SQL SELECT — the windowed GROUP BY
     * form of [[renderSql]]'s per-event SELECT, so a correlation rule can
     * deploy through a SQL gateway exactly like the reference deploys its
-    * stateless rules. Semantics are [[graft.streaming.TimeframeRules.alerts]]
-    * verbatim: tumbling `window(timestamp, len)` per key, `count(1)` (or
+    * stateless rules. Semantics are a one-rule
+    * [[graft.streaming.TimeframeRules.alertsBattery]] verbatim: tumbling
+    * `window(timestamp, len)` per key, `count(1)` (or
     * the bounded-exact `min_k_distinct` cardinality for distinct rules)
     * thresholded at >= N, `min_k_collect`-capped provenance, the full
-    * threat/rule structs — RuleCompilerSpec pins `spark.sql(rendered)` ≡
-    * the Column path row-for-row. The `min_k_*` aggregates resolve
+    * threat/rule structs — AlertPipelineSpec pins `spark.sql(rendered)` ≡
+    * the battery row-for-row. The `min_k_*` aggregates resolve
     * through the function registry: call
     * [[graft.functions.GraftFunctions.register]] on the session first
     * (every engine entry point already does). */

@@ -19,11 +19,14 @@ import graft.schema.Schemas
   *     → rule_dispatch (all N predicates) → explode fired ids
   *     → metadata-literal lookup → to_json → sink
   *
-  * ([[alertsMerged]]). The reference statement set's own shape — N×
-  * (filter→project) → UNION ALL ([[alerts]]) — is kept as the
-  * bag-equal reference spelling for `sig_fanout_counts` and the
-  * equivalence specs; it is not deployed, because every union branch
-  * re-scans and re-parses the source.
+  * ([[alertsMerged]]). Every alert path evaluates its rule predicates
+  * through `rule_dispatch` — the stateless fan-out here, the timeframe
+  * battery ([[graft.streaming.TimeframeRules.alertsBattery]]) and the
+  * sequence step tagging ([[graft.streaming.SequenceRules.alertsFor]]) —
+  * and shapes its row through one builder, [[alertRow]]. The reference's
+  * per-rule statement set is rendered as SQL text by
+  * [[graft.compile.RuleCompiler.renderSql]]; the specs use it as the
+  * independent reference the dispatch is checked against.
   *
   * The middle section is a pure DataFrame => DataFrame, so the identical
   * logical plan runs in batch (tests, oracle harness) and streaming
@@ -36,9 +39,6 @@ import graft.schema.Schemas
   * SURVEY.md §4 "shared source scan").
   */
 object AlertPipeline {
-
-  /** Resolve a rule's event_data field on the nested sysmon schema. */
-  val nestedField: String => Column = f => col("event_data").getField(f)
 
   /** JSON bytes/string → typed sysmon rows; unparseable records dropped
     * (the `json.ignore-parse-errors=true` semantics of the reference,
@@ -62,85 +62,23 @@ object AlertPipeline {
         col("r.uuid").as("uuid"), col("timestamp"))
   }
 
-  /** Pre-folded constant shapes for [[ruleAlerts]]'s per-rule threat/rule
-    * structs (field names = the reference sink schema). One Literal node
-    * each instead of ~15 foldable children per struct per union branch —
-    * the metaLiteral lesson applied to the statement-set fan-out, where
-    * the optimizer re-folds every branch's projection on every plan
-    * build. */
-  private case class ThreatLit(tactic: Seq[String], technique: Seq[String],
-      subtechnique: Seq[String])
-  private case class RuleLit(name: String, author: String, category: String,
-      severity: Int, description: String, reference: Seq[String],
-      version: String, source: String)
+  /** The stateless fan-out, spelled as [[alertsMerged]]. Kept only because
+    * the benchmark's `replay-builtin` set-up (graftbench Replay.deployed)
+    * calls it by this name; new code calls [[alertsMerged]]. */
+  def alerts(sysmon: DataFrame, rules: Seq[RuleDef]): DataFrame = alertsMerged(sysmon, rules)
 
-  /** One rule's alert projection (the outer SELECT of each reference INSERT,
-    * windows-process-access.sql:77-89): constant threat/rule structs +
-    * per-event `event` struct with kind='signal', origin_ids=[uuid],
-    * count=1, start=end=time=event timestamp. */
-  def ruleAlerts(sysmon: DataFrame, rule: RuleDef): DataFrame =
-    sysmon.filter(rule.where.toColumn(nestedField)).select(
-      col("computer_name"),
-      col("host"),
-      struct(
-        lit("signal").as("kind"),
-        rule.module.map(m => lit(m)).getOrElse(lit(null).cast("string")).as("module"),
-        array(col("uuid")).as("origin_ids"),
-        lit(1L).as("count"),
-        col("timestamp").as("start"),
-        col("timestamp").as("end"),
-        col("timestamp").as("time")).as("event"),
-      typedlit(ThreatLit(rule.tactic, rule.technique, rule.subtechnique))
-        .as("threat"),
-      typedlit(RuleLit(rule.name, rule.author, rule.category, rule.severity,
-        rule.description, rule.references, rule.version, rule.source))
-        .as("rule"))
-
-  /** The reference statement-set shape: UNION ALL of every rule's
-    * filter→project. Bag semantics — an event matching k rules emits k
-    * alerts, exactly like the reference's k INSERTs / UNION ALL branches.
-    * Not the deployed path ([[start]] runs [[alertsMerged]], bag-equal by
-    * spec and sharing its DuckDB oracle): each branch carries its own
-    * copy of the source, so a streaming union scans and parses the input
-    * once per rule. Kept for `sig_fanout_counts` and the equivalence
-    * specs.
-    *
-    * The union is reduced as a BALANCED tree, not a left fold (round 19):
-    * every `unionAll` call creates a Dataset and eagerly re-analyzes its
-    * whole subtree, so a left-deep chain re-walks a growing prefix per
-    * step — O(N²) analyzer tree scans, dominated by DeduplicateRelations
-    * and ResolveReferences re-visiting the shared source N times (the
-    * GRAFT_PHASES profile of sig_fanout_counts: ~0.5 s/invocation of
-    * driver analysis at 25 branches, ~45-56 ms in DeduplicateRelations
-    * alone). Pairwise halving analyzes O(N log N) tree nodes instead; the
-    * optimizer's CombineUnions flattens either shape to the identical
-    * N-child Union, so the physical plan is byte-identical. */
-  def alerts(sysmon: DataFrame, rules: Seq[RuleDef]): DataFrame = {
-    require(rules.nonEmpty, "alerts needs at least one rule")
-    balancedUnion(rules.map(ruleAlerts(sysmon, _)))
-  }
-
-  /** unionAll over a balanced pair tree — same bag semantics and final
-    * physical plan as `reduce(_ unionAll _)`, O(N log N) analyzer work
-    * instead of O(N²). */
-  private[graft] def balancedUnion(branches: Seq[DataFrame]): DataFrame =
-    if (branches.sizeIs <= 1) branches.head
-    else balancedUnion(branches.grouped(2).map {
-      case Seq(a, b) => a.unionAll(b)
-      case Seq(a) => a
-    }.toSeq)
-
-  /** Merged-dispatch fan-out — the deployed path and the 1000-rule scale
-    * path (SURVEY §4 "plan size"): instead of N union branches (N
-    * operators in the plan, N codegen'd filters), ONE `rule_dispatch`
-    * expression (functions/RuleDispatchExpr.scala) evaluates every rule
-    * predicate into the fired rule ids, which explode into one row per
-    * alert, and alerts are shaped by indexing a LITERAL array-of-structs
-    * of rule metadata with the fired `rid` — `element_at(<one pre-folded
+  /** The stateless fan-out — the deployed path and the 1000-rule scale
+    * path (SURVEY §4 "plan size"): ONE `rule_dispatch` expression
+    * (functions/RuleDispatchExpr.scala) evaluates every rule predicate
+    * into the fired rule ids, which explode into one row per alert, and
+    * alerts are shaped by indexing a LITERAL array-of-structs of rule
+    * metadata with the fired `rid` — `element_at(<one pre-folded
     * Literal>, rid+1)` (see [[metaLiteral]]). Plan size is O(1) in rule
     * count: the analyzer and optimizer walk the same nodes per micro-batch
-    * at 25 or 1000 rules. Semantics identical to [[alerts]] (bag
-    * multiplicity included) — asserted by AlertPipelineSpec.
+    * at 25 or 1000 rules. Bag semantics: an event matching k rules emits
+    * k alerts, exactly like the reference's k INSERTs / UNION ALL
+    * branches — AlertPipelineSpec checks it against the statement set
+    * [[graft.compile.RuleCompiler.renderSql]] renders.
     *
     * Why a literal, not a broadcast join: rule metadata is static for the
     * lifetime of a job, but Structured Streaming re-plans every
@@ -155,23 +93,23 @@ object AlertPipeline {
     * not grow with the rule count and stays under HotSpot's 8000-byte
     * JIT ceiling (PlanAuditSpec pins 25 and 1000 rules).
     *
-    * Also the BATCH-mode winner at any rule count: a batch union fan-out
-    * re-executes the source scan per branch (Spark reuses the scan across
-    * union branches only in streaming MicroBatchScan), so at 25 rules the
-    * union plan costs ~25 scans. Measured at sf0.1/local[32]: 7.9s union
-    * vs 1.5s merged for the same 25-rule fan-out counts. */
+    * One scan in batch too: a union of per-rule branches re-executes the
+    * source scan per branch (Spark reuses the scan across union branches
+    * only in streaming MicroBatchScan). Measured at sf0.1/local[32]: 7.9 s
+    * for a 25-branch union vs 1.5 s here for the same fan-out counts. */
   def alertsMerged(sysmon: DataFrame, rules: Seq[RuleDef]): DataFrame = {
     require(rules.nonEmpty, "alertsMerged needs at least one rule")
-    shapeMerged(
-      sysmon.withColumn("rid", explode(graft.functions.RuleDispatch.column(
-        rules.map(_.where), col("event_data"), col("event_id")))),
-      element_at(metaLiteral(rules), col("rid") + 1))
+    val m = element_at(metaLiteral(rules), col("rid") + 1)
+    sysmon.withColumn("rid", explode(graft.functions.RuleDispatch.column(
+        rules.map(_.where), col("event_data"), col("event_id"))))
+      .select(alertRow(m, col("computer_name"), col("host"), array(col("uuid")),
+        lit(1L), col("timestamp"), col("timestamp")): _*)
   }
 
   /** The rule-metadata struct as a Scala value, so the metadata array can
     * be built with `typedlit`, the public way to turn a whole Scala value
-    * into one pre-folded Literal. [[shapeMerged]] and the timeframe
-    * battery extract its fields by name. */
+    * into one pre-folded Literal. [[alertRow]] extracts its fields by
+    * name. */
   private case class RuleMeta(name: String, author: String, category: String,
       severity: Int, description: String, references: Seq[String],
       tactic: Seq[String], technique: Seq[String], subtechnique: Seq[String],
@@ -191,11 +129,31 @@ object AlertPipeline {
         r.module, r.version, r.source)
     })
 
+  /** The reference sink's 5-column alert row — `computer_name, host,
+    * event, threat, rule` (windows-process-access.sql:41-64) — for the
+    * rule whose metadata struct is `m` (a [[metaLiteral]] element). Every
+    * alert path builds its row here: the stateless fan-out (one event,
+    * count 1), the timeframe battery (a window's count and bounds) and the
+    * sequence correlator (a chain's steps and span). `event.time` is `end`. */
+  private[graft] def alertRow(m: Column, key: Column, host: Column,
+      originIds: Column, count: Column, start: Column, end: Column): Seq[Column] =
+    Seq(
+      key.as("computer_name"),
+      host.as("host"),
+      struct(
+        lit("signal").as("kind"),
+        m.getField("module").as("module"),
+        originIds.as("origin_ids"),
+        count.as("count"),
+        start.as("start"),
+        end.as("end"),
+        end.as("time")).as("event"),
+      threatStruct(m),
+      ruleStruct(m))
+
   /** The reference sink schema's `threat` struct from a rule-metadata
-    * struct `m` (windows-process-access.sql:50-55) — shared between the
-    * stateless shaping here and the timeframe battery's rid-indexed
-    * shaping ([[graft.streaming.TimeframeRules]]). */
-  private[graft] def threatStruct(m: Column): Column =
+    * struct `m` (windows-process-access.sql:50-55). */
+  private def threatStruct(m: Column): Column =
     struct(
       m.getField("tactic").as("tactic"),
       m.getField("technique").as("technique"),
@@ -203,7 +161,7 @@ object AlertPipeline {
 
   /** The reference sink schema's 8-field `rule` struct from a
     * rule-metadata struct `m` (windows-process-access.sql:56-64). */
-  private[graft] def ruleStruct(m: Column): Column =
+  private def ruleStruct(m: Column): Column =
     struct(
       m.getField("name").as("name"),
       m.getField("author").as("author"),
@@ -213,23 +171,6 @@ object AlertPipeline {
       m.getField("references").as("reference"),
       m.getField("version").as("version"),
       m.getField("source").as("source")).as("rule")
-
-  /** Alert shaping over the merged dispatch: `m` is the fired rule's
-    * metadata struct (the literal-array lookup). */
-  private def shapeMerged(withFired: DataFrame, m: Column): DataFrame =
-    withFired.select(
-      col("computer_name"),
-      col("host"),
-      struct(
-        lit("signal").as("kind"),
-        m.getField("module").as("module"),
-        array(col("uuid")).as("origin_ids"),
-        lit(1L).as("count"),
-        col("timestamp").as("start"),
-        col("timestamp").as("end"),
-        col("timestamp").as("time")).as("event"),
-      threatStruct(m),
-      ruleStruct(m))
 
   /** Build an in-memory sysmon DataFrame from (field → value) maps —
     * fixture entry point for tests and the oracle harness. */
@@ -296,9 +237,7 @@ object AlertPipeline {
     * plan literals. One source scan feeds both classes; the plan is O(1)
     * in BOTH rule counts (rule_dispatch on each side). */
   def alertsCombined(sysmon: DataFrame, stateless: Seq[RuleDef],
-      timeframed: Seq[graft.streaming.TimeframeRules.TimeframeRule],
-      originIdsCap: Int = graft.streaming.TimeframeRules.DefaultOriginIdsCap)
-      : DataFrame = {
+      timeframed: Seq[graft.streaming.TimeframeRules.TimeframeRule]): DataFrame = {
     // An empty class contributes NO branch (advisor r15: a timeframe-only
     // repo must not route through a zero-rule dispatch — an untested
     // empty-literal codegen edge — and a stateless-only repo must not pay
@@ -311,7 +250,7 @@ object AlertPipeline {
           col("rule.name").as("rule_name"), col("computer_name"),
           col("host"), col("event"), col("threat"), col("rule"))),
       Option.when(timeframed.nonEmpty)(
-        graft.streaming.TimeframeRules.alertsBattery(sysmon, timeframed, originIdsCap))
+        graft.streaming.TimeframeRules.alertsBattery(sysmon, timeframed))
     ).flatten
     branches.reduce(_ unionAll _)
   }
@@ -389,8 +328,7 @@ object AlertPipeline {
   /** S7 statement-set alternative: the reference's 17-INSERT statement set
     * shares one source and one job (windows-process-access.sql:72-601).
     * [[start]] maps it to ONE sink fed by the merged dispatch
-    * ([[alertsMerged]]); the UNION ALL plan ([[alerts]]) is its reference
-    * shape, kept for `sig_fanout_counts` and the equivalence specs. When
+    * ([[alertsMerged]]). When
     * rules must reach DIFFERENT sinks, this fans one streaming query out
     * to N writers per micro-batch — the batch is computed once
     * (persisted), still one source scan, one checkpoint, exactly like the
@@ -418,13 +356,12 @@ object AlertPipeline {
     * [[Sources]] source → watermark → merged rule dispatch
     * ([[alertsMerged]]) → any [[Sources]] sink, as ONE streaming query with
     * one source scan and one JSON parse per trigger. The sink row is the
-    * reference's 5-column alert schema, the same as [[alerts]] writes
-    * (AlertPipelineSpec pins the parity). Trigger per [[trigger]]. */
+    * reference's 5-column alert schema, the schema of the statement set
+    * [[graft.compile.RuleCompiler.renderSql]] renders (AlertPipelineSpec
+    * pins the parity). Trigger per [[trigger]]. */
   def start(spark: SparkSession, rules: Seq[RuleDef], conf: Map[String, String]): StreamingQuery = {
     require(rules.nonEmpty, "start needs at least one rule")
-    val src = Sources.source(spark, conf)
-    val watermarked = src.withWatermark("timestamp", conf.getOrElse("watermark", "5 seconds"))
-    Sources.sink(alertsMerged(watermarked, rules), conf)
+    Sources.sink(alertsMerged(watermarkedSource(spark, conf), rules), conf)
       .trigger(trigger(conf))
       .start()
   }
@@ -451,9 +388,7 @@ object AlertPipeline {
   def startCombined(spark: SparkSession, stateless: Seq[RuleDef],
       timeframed: Seq[graft.streaming.TimeframeRules.TimeframeRule],
       conf: Map[String, String]): StreamingQuery = {
-    val src = Sources.source(spark, conf)
-    val watermarked = src.withWatermark("timestamp", conf.getOrElse("watermark", "5 seconds"))
-    val combined = alertsCombined(watermarked, stateless, timeframed)
+    val combined = alertsCombined(watermarkedSource(spark, conf), stateless, timeframed)
       .drop("rule_name")
     Sources.sink(combined, conf)
       .outputMode(conf.getOrElse("outputMode", "update"))
@@ -481,15 +416,19 @@ object AlertPipeline {
       rule: graft.streaming.SequenceRules.SequenceRule,
       conf: Map[String, String], idx: Int = 0): StreamingQuery = {
     val c2 = sequenceConf(conf, idx)
-    val src = Sources.source(spark, c2)
-      .withWatermark("timestamp", c2.getOrElse("watermark", "5 seconds"))
-    val alerts = graft.streaming.SequenceRules.alertsFor(src, rule)
+    val alerts = graft.streaming.SequenceRules.alertsFor(watermarkedSource(spark, c2), rule)
       .drop("rule_name")
     Sources.sink(alerts, c2)
       .outputMode("append")
       .trigger(trigger(c2))
       .start()
   }
+
+  /** The configured [[Sources]] source with the `watermark` conf (default
+    * 5 seconds) on its `timestamp` — the input of every `start*` query. */
+  private def watermarkedSource(spark: SparkSession, conf: Map[String, String]): DataFrame =
+    Sources.source(spark, conf)
+      .withWatermark("timestamp", conf.getOrElse("watermark", "5 seconds"))
 
   /** The conf of the `idx`-th sequence query co-deployed with the main
     * query of `conf`. Its checkpoint is `<main checkpoint>/seq-idx`, where

@@ -93,9 +93,12 @@ object TimeframeRules {
     * alert says which rule fired without opening the struct). The
     * threat/rule metadata rides the SAME rid-indexed pre-folded literal
     * the stateless dispatch uses ([[graft.engine.AlertPipeline]]
-    * metaLiteral), so the plan stays O(1) in rule count; semantics per
-    * rule are identical to [[alerts]] — pinned by spec and by the
-    * tf_battery_counts / sig_tf_combined_shape oracles. */
+    * metaLiteral), so the plan stays O(1) in rule count. It is the one
+    * timeframe evaluator: a single rule is a one-rule battery. Semantics
+    * per rule are those of the windowed GROUP BY that
+    * [[graft.compile.RuleCompiler.renderTimeframeSql]] renders — pinned by
+    * spec and by the tf_windowed_count / tf_battery_counts /
+    * sig_tf_combined_shape oracles. */
   def alertsBattery(sysmon: DataFrame, rules: Seq[TimeframeRule],
       originIdsCap: Int = DefaultOriginIdsCap): DataFrame = {
     require(rules.nonEmpty, "empty timeframe battery")
@@ -138,63 +141,9 @@ object TimeframeRules {
             originIds(originIdsCap).as("origin_ids"),
             min(col("host")).as("host"))
           .filter(col("n") >= element_at(thresholds, col("rid") + 1))
-          .select(
-            m.getField("name").as("rule_name"),
-            col("__tf_key").as("computer_name"),
-            col("host"),
-            struct(
-              lit("signal").as("kind"),
-              m.getField("module").as("module"),
-              col("origin_ids"),
-              col("n").as("count"),
-              col("window.start").as("start"),
-              col("window.end").as("end"),
-              col("window.end").as("time")).as("event"),
-            AlertPipeline.threatStruct(m),
-            AlertPipeline.ruleStruct(m))
+          .select(m.getField("name").as("rule_name") +:
+            AlertPipeline.alertRow(m, col("__tf_key"), col("host"), col("origin_ids"),
+              col("n"), col("window.start"), col("window.end")): _*)
       }.reduce(_ unionAll _)
-  }
-
-  /** Windowed-count alerts over a sysmon frame (batch or pre-watermarked
-    * streaming — identical logical plan, SURVEY §7 module 4). Emits the
-    * same `computer_name, host, event, threat, rule` shape as the
-    * per-event [[graft.engine.AlertPipeline.ruleAlerts]], so a timeframe
-    * rule's alerts land in the reference sink unchanged. */
-  def alerts(sysmon: DataFrame, rule: TimeframeRule,
-      field: String => Column = f => col("event_data").getField(f),
-      originIdsCap: Int = DefaultOriginIdsCap): DataFrame = {
-    graft.functions.GraftFunctions.register(sysmon.sparkSession)
-    import graft.engine.AlertPipeline
-    val matched = sysmon.filter(rule.base.where.toColumn(field))
-    val m = element_at(AlertPipeline.metaLiteral(Seq(rule.base)), lit(1))
-    // same n semantics as the battery: event count, or bounded-exact
-    // distinct count of the rule's field (see alertsBattery)
-    val nCol = rule.distinctField match {
-      case None => count(lit(1))
-      case Some(f) =>
-        val cap = math.max(originIdsCap.toLong, rule.threshold).toInt
-        size(call_function("min_k_distinct", col(f), lit(cap))).cast("long")
-    }
-    matched
-      .groupBy(window(col("timestamp"), rule.windowLength),
-        expr(rule.keyCol).as("__tf_key"))
-      .agg(
-        nCol.as("n"),
-        originIds(originIdsCap).as("origin_ids"),
-        min(col("host")).as("host"))
-      .filter(col("n") >= rule.threshold)
-      .select(
-        col("__tf_key").as("computer_name"),
-        col("host"),
-        struct(
-          lit("signal").as("kind"),
-          rule.base.module.map(lit(_)).getOrElse(lit(null).cast("string")).as("module"),
-          col("origin_ids"),
-          col("n").as("count"),
-          col("window.start").as("start"),
-          col("window.end").as("end"),
-          col("window.end").as("time")).as("event"),
-        AlertPipeline.threatStruct(m),
-        AlertPipeline.ruleStruct(m))
   }
 }

@@ -24,7 +24,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val nested = ops.Detection.nested(spark, "/root/testdata/sf0.001")
     val fired = array(rules.ReferenceCorpus.active.zipWithIndex.map { case (r, i) =>
-      when(r.where.toColumn(engine.AlertPipeline.nestedField), i).otherwise(-1)
+      when(r.where.toColumn(col("event_data").getField), i).otherwise(-1)
     }: _*)
     val tree = nested.withColumn("rid", explode(array_remove(fired, -1)))
       .queryExecution.executedPlan

@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
 class PlanSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
+  /** The operator name heading each line of a plan string. Matched on
+    * these tokens, not raw substrings, because the rule corpus itself
+    * contains strings like "Microsoft.Exchange.…". */
+  private def operators(plan: String): Seq[String] =
+    plan.linesIterator
+      .map(_.replaceAll("^[\\s|:+*()\\d-]*", "").takeWhile(c => !c.isWhitespace))
+      .toSeq
+
   private def physical(name: String): String = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.executedPlan.toString
@@ -32,14 +40,18 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  test("rule fan-out plan has no exchange before the union (sig fan-out)") {
+  test("rule fan-out plan: one scan, no union, no exchange before the aggregation (sig fan-out)") {
     val df = ops.Detection.queries("sig_fanout_counts")(spark, dir)
     val plan = df.queryExecution.optimizedPlan.toString
-    // the N filter→project branches must be shuffle-free; the only
-    // aggregation shuffle is the final groupBy(rule.name)
-    val exchanges = df.queryExecution.executedPlan.toString
-      .linesIterator.count(_.trim.startsWith("+- Exchange"))
+    // the dispatch is shuffle-free; the only aggregation shuffle is the
+    // final groupBy(rule.name)
+    val executed = df.queryExecution.executedPlan.toString
+    val exchanges = executed.linesIterator.count(_.trim.startsWith("+- Exchange"))
     assert(exchanges <= 3, s"unexpected exchanges:\n$plan")
+    // one pass over the source: the events are read once, not once per
+    // rule branch or through a materialised copy
+    assert(executed.linesIterator.count(_.contains("Scan parquet")) == 1, executed)
+    assert(!operators(executed).contains("Union"), executed)
   }
 
   test("merged dispatch: one scan, no exchange, no join — metadata is a plan literal") {
@@ -52,11 +64,7 @@ class PlanSpec extends SparkSpec {
     // STREAMBENCH_r11.json); the metadata is static per job, so it now
     // rides the plan as a constant-folded literal array: zero exchanges,
     // zero joins, the whole dispatch is one codegen'd projection chain.
-    // Matched on the plan's OPERATOR tokens, not raw substrings — the rule
-    // corpus itself contains strings like "Microsoft.Exchange.…"
-    val opTokens = p.linesIterator
-      .map(_.replaceAll("^[\\s|:+*()\\d-]*", "").takeWhile(c => !c.isWhitespace))
-      .toSeq
+    val opTokens = operators(p)
     assert(!opTokens.exists(t => t.contains("Exchange") || t.contains("Join")),
       opTokens.mkString(", "))
     // the metadata must reach the plan as ONE pre-folded Literal (an
@@ -128,9 +136,9 @@ class PlanSpec extends SparkSpec {
     // shapes — the r17 fleet sweep predates them, so their scale-critical
     // properties are pinned here: exactly one hash shuffle (the groupByKey
     // exchange; the trailing orderBy adds a range exchange, not counted),
-    // a single parquet scan feeding a codegen'd filter+projection (the
-    // predicate OR-filter and the 5-column event projection run BELOW the
-    // shuffle, so only matched, narrowed rows move), and no joins.
+    // a single parquet scan feeding narrow codegen'd operators (the
+    // rule_dispatch step tagging and the 5-column event projection run
+    // BELOW the shuffle, so only matched, narrowed rows move), and no joins.
     Seq("tf_correlation_temporal", "tf_correlation_chain",
         "tf_correlation_anyorder").foreach { name =>
       val df = ops.Detection.queries(name)(spark, dir)

@@ -22,7 +22,7 @@ class AlertPipelineSpec extends SparkSpec {
         """|_ctypes.pyd+3|python27.dll+4"""))
     val nearMiss = matching + ("GrantedAccess" -> "0x1410")
     val df = AlertPipeline.sysmonFrame(spark, Seq(matching, nearMiss))
-    val alerts = AlertPipeline.ruleAlerts(df, ReferenceCorpus.lazagne).collect()
+    val alerts = AlertPipeline.alertsMerged(df, Seq(ReferenceCorpus.lazagne)).collect()
     assert(alerts.length == 1)
     val event = alerts(0).getAs[Row]("event")
     assert(event.getAs[String]("kind") == "signal")
@@ -40,7 +40,7 @@ class AlertPipelineSpec extends SparkSpec {
     val e = ev("TargetImage" -> """C:\x\lsass.exe""",
       "SourceImage" -> """C:\Windows\system32\wsmprovhost.exe""")
     val df = AlertPipeline.sysmonFrame(spark, Seq(e, e + ("event_id" -> 1L)))
-    assert(AlertPipeline.ruleAlerts(df, ReferenceCorpus.mimikatzWinrm).count() == 1)
+    assert(AlertPipeline.alertsMerged(df, Seq(ReferenceCorpus.mimikatzWinrm)).count() == 1)
   }
 
   test("fan-out multiplicity: one event matching k rules emits k alerts") {
@@ -52,31 +52,12 @@ class AlertPipelineSpec extends SparkSpec {
       "SourceImage" -> """C:\evil\dump.exe""",
       "CallTrace" -> "UNKNOWN(1)|UNKNOWN(2)")
     val df = AlertPipeline.sysmonFrame(spark, Seq(e))
-    val alerts = AlertPipeline.alerts(df, ReferenceCorpus.active)
+    val alerts = AlertPipeline.alertsMerged(df, ReferenceCorpus.active)
     val names = alerts.select("rule.name").collect().map(_.getString(0)).sorted
     assert(names.contains("Direct Syscall of NtOpenProcess"))
     assert(names.contains("Credentials Dumping Tools Accessing LSASS Memory"))
     assert(names.length >= 2)
     assert(alerts.count() == names.length) // bag semantics, one alert per rule
-  }
-
-  test("balancedUnion ≡ left-fold unionAll at every branch count (r19)") {
-    // the balanced pair tree exists for O(N log N) analyzer work (the
-    // left-deep fold re-analyzed a growing prefix per unionAll); the
-    // optimizer flattens both to one N-child Union, so rows AND bag
-    // multiplicity must be identical — checked across odd/even/1-branch
-    // shapes, including the power-of-two boundary
-    import org.apache.spark.sql.functions.lit
-    for (n <- Seq(1, 2, 3, 5, 8, 25)) {
-      val branches = (0 until n).map(i => spark.range(3).toDF("v")
-        .withColumn("branch", lit(i)))
-      val bal = AlertPipeline.balancedUnion(branches)
-      val fold = branches.reduce(_ unionAll _)
-      assert(bal.schema == fold.schema, s"n=$n schema")
-      val a = bal.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-      val b = fold.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-      assert(a == b, s"n=$n bag contents")
-    }
   }
 
   test("C6 SQL-text render path produces identical alerts to the Column path") {
@@ -95,7 +76,7 @@ class AlertPipelineSpec extends SparkSpec {
         ReferenceCorpus.directSyscall)) {
       val viaSql = canon(spark.sql(
         graft.compile.RuleCompiler.renderSql(rule, "sysmon_fixture")))
-      val viaColumn = canon(AlertPipeline.ruleAlerts(df, rule))
+      val viaColumn = canon(AlertPipeline.alertsMerged(df, Seq(rule)))
       assert(viaSql == viaColumn, s"${rule.name}:\n$viaSql\nvs\n$viaColumn")
     }
   }
@@ -135,7 +116,7 @@ class AlertPipelineSpec extends SparkSpec {
   test("C6 extended: timeframe SQL render ≡ windowed Column path (plain, by-key, distinct) (r16)") {
     // the SQL-gateway deployment path for COMPILED correlation rules:
     // renderTimeframeSql's windowed GROUP BY SELECT must produce the
-    // same alert rows as TimeframeRules.alerts for every pipe form
+    // same alert rows as a one-rule battery for every pipe form
     import graft.ops.Detection
     val lsass = """C:\Windows\System32\lsass.exe"""
     def at(h: Long) = 1700000000000000L / 86400000000L * 86400000000L + h * 3600000000L
@@ -166,12 +147,18 @@ class AlertPipelineSpec extends SparkSpec {
     for (rule <- rules) {
       val viaSql = canon(spark.sql(
         graft.compile.RuleCompiler.renderTimeframeSql(rule, "tf_sql_fixture")))
-      val viaColumn = canon(graft.streaming.TimeframeRules.alerts(df, rule,
-        f => col("event_data").getField(f)))
+      val viaColumn = canon(graft.streaming.TimeframeRules.alertsBattery(df, Seq(rule)))
       assert(viaSql.nonEmpty, s"${rule.base.name}: fixture must fire")
       assert(viaSql == viaColumn, s"${rule.base.name}:\n$viaSql\nvs\n$viaColumn")
     }
   }
+
+  /** The reference's statement set over `view`: one rendered alert SELECT
+    * per rule (RuleCompiler.renderSql), combined with UNION ALL in SQL text
+    * and evaluated by Catalyst's built-in operators. */
+  private def statementSet(rules: Seq[graft.rules.RuleDef], view: String) =
+    spark.sql(rules.map(graft.compile.RuleCompiler.renderSql(_, view))
+      .mkString("\nUNION ALL\n"))
 
   test("merged dispatch emits exactly the same alerts as the union fan-out") {
     val events = Seq(
@@ -189,17 +176,25 @@ class AlertPipelineSpec extends SparkSpec {
     def canon(d: org.apache.spark.sql.DataFrame): Seq[String] =
       d.select(to_json(struct(col("computer_name"), col("host"), col("event"),
         col("threat"), col("rule")))).collect().map(_.getString(0)).sorted.toSeq
-    val union = canon(AlertPipeline.alerts(df, ReferenceCorpus.active))
+    df.createOrReplaceTempView("fanout_fixture")
+    val union = canon(statementSet(ReferenceCorpus.active, "fanout_fixture"))
     val merged = canon(AlertPipeline.alertsMerged(df, ReferenceCorpus.active))
     assert(union.nonEmpty && union == merged)
+    // and over the synthetic corpus, where most of the 25 rules fire
+    val corpus = graft.ops.Detection.nested(spark, "/root/testdata/sf0.001")
+    corpus.createOrReplaceTempView("fanout_corpus")
+    val corpusUnion = canon(statementSet(ReferenceCorpus.active, "fanout_corpus"))
+    assert(corpusUnion.nonEmpty &&
+      corpusUnion == canon(AlertPipeline.alertsMerged(corpus, ReferenceCorpus.active)))
   }
 
   test("merged dispatch writes the union fan-out's 5-column sink schema") {
     // start() deploys alertsMerged; an existing files/parquet sink path or
-    // Kafka consumer must keep seeing the row alerts() used to write
+    // Kafka consumer must keep seeing the reference statement set's row
     import org.apache.spark.sql.types.DataType
     val df = AlertPipeline.sysmonFrame(spark, Seq(ev()))
-    val union = AlertPipeline.alerts(df, ReferenceCorpus.active).schema
+    df.createOrReplaceTempView("schema_fixture")
+    val union = statementSet(ReferenceCorpus.active, "schema_fixture").schema
     val merged = AlertPipeline.alertsMerged(df, ReferenceCorpus.active).schema
     assert(merged.fieldNames.toSeq == Seq("computer_name", "host", "event", "threat", "rule"))
     assert(merged.fieldNames.toSeq == union.fieldNames.toSeq)
@@ -209,15 +204,28 @@ class AlertPipelineSpec extends SparkSpec {
   }
 
   test("an empty rule list fails at construction, not inside Spark") {
+    import graft.streaming.TimeframeRules
     val df = AlertPipeline.sysmonFrame(spark, Seq(ev()))
-    val union = intercept[IllegalArgumentException](AlertPipeline.alerts(df, Nil))
-    assert(union.getMessage.contains("alerts needs at least one rule"))
+    val forwarded = intercept[IllegalArgumentException](AlertPipeline.alerts(df, Nil))
+    assert(forwarded.getMessage.contains("alertsMerged needs at least one rule"))
     val merged = intercept[IllegalArgumentException](AlertPipeline.alertsMerged(df, Nil))
     assert(merged.getMessage.contains("alertsMerged needs at least one rule"))
     val started = intercept[IllegalArgumentException](AlertPipeline.start(spark, Nil,
       Map("source.type" -> "files", "source.path" -> "unused",
         "sink.type" -> "files", "sink.path" -> "unused")))
     assert(started.getMessage.contains("start needs at least one rule"))
+    val battery = intercept[IllegalArgumentException](TimeframeRules.alertsBattery(df, Nil))
+    assert(battery.getMessage.contains("empty timeframe battery"))
+    // a distinct-count threshold past 2^20 would need an oversized state
+    // cell: refused by the battery and by the SQL render alike
+    val huge = TimeframeRules.TimeframeRule(ReferenceCorpus.directSyscall, "1 hour",
+      (1L << 20) + 1, "computer_name", distinctField = Some("event_data.SourceImage"))
+    df.createOrReplaceTempView("guard_fixture")
+    for (build <- Seq[() => Any](
+        () => TimeframeRules.alertsBattery(df, Seq(huge)),
+        () => graft.compile.RuleCompiler.renderTimeframeSql(huge, "guard_fixture")))
+      assert(intercept[IllegalArgumentException](build()).getMessage
+        .contains(s"distinct-count threshold ${(1L << 20) + 1} would need >1M state per cell"))
   }
 
   test("merged dispatch scales to a 500-rule fan-out (SURVEY §4 plan size)") {

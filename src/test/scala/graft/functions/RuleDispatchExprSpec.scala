@@ -190,7 +190,7 @@ class RuleDispatchExprSpec extends SparkSpec {
       .withColumn("rid", col("eid"))
     val fired = firedVia(df, rules.map(_.where))
     rules.zipWithIndex.foreach { case (r, i) =>
-      val direct = df.filter(r.where.toColumn(graft.engine.AlertPipeline.nestedField))
+      val direct = df.filter(r.where.toColumn(col("event_data").getField))
         .select("rid").collect().map(_.getLong(0)).toSet
       val viaDispatch = fired.collect { case (rid, ids) if ids.contains(i) => rid }.toSet
       assert(viaDispatch == direct, s"rule ${r.name}: $viaDispatch != $direct")

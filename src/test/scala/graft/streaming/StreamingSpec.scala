@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, java.sql.Timestamp)]
     val raw = mem.toDF().toDF("value", "timestamp")
-    val alerts = AlertPipeline.alerts(
+    val alerts = AlertPipeline.alertsMerged(
       AlertPipeline.parseJson(raw), Seq(ReferenceCorpus.mimikatzWinrm))
     val q = alerts.writeStream.format("memory").queryName("alerts_t1")
       .outputMode("append").start()
@@ -48,9 +48,10 @@ class StreamingSpec extends SparkSpec {
       .withColumn("event_data", struct(lit("UNKNOWN(1)").as("CallTrace")))
     val rule = TimeframeRules.TimeframeRule(
       ReferenceCorpus.directSyscall, "10 minutes", 3L, "computer_name")
-    val alerts = TimeframeRules.alerts(
-      src.withWatermark("timestamp", "5 seconds"), rule,
-      f => if (f == "CallTrace") col("event_data.CallTrace") else lit(null))
+    // directSyscall reads only event_id and CallTrace, so a one-field
+    // event_data struct is enough for rule_dispatch
+    val alerts = TimeframeRules.alertsBattery(
+      src.withWatermark("timestamp", "5 seconds"), Seq(rule))
     val q = alerts.writeStream.format("memory").queryName("tf_t1")
       .outputMode("update").start()
     try {
@@ -77,7 +78,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, java.sql.Timestamp)]
     val raw = mem.toDF().toDF("value", "timestamp")
-    val alerts = AlertPipeline.alerts(
+    val alerts = AlertPipeline.alertsMerged(
       AlertPipeline.parseJson(raw), Seq(ReferenceCorpus.mimikatzWinrm))
     val out1 = java.nio.file.Files.createTempDirectory("graft-sink1").toString
     val out2 = java.nio.file.Files.createTempDirectory("graft-sink2").toString
@@ -95,12 +96,13 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("S7 both shapes, same YAML dir + file source: union plan and multi-sink fan-out emit identical alert multisets") {
-    // the reference's statement set has two Spark mappings: ONE query with
-    // a UNION ALL plan (alerts) and ONE query fanned out to N sinks per
-    // micro-batch (foreachBatchFanOut). Same compiled YAML rules, same
-    // replayed file-source input => the alert MULTISETS must be identical
-    // (bag semantics: an event matching k rules appears k times).
+  test("S7 one sink ≡ foreachBatchFanOut: same YAML dir + file source emit identical alert multisets") {
+    // the reference's statement set has two Spark mappings: ONE query into
+    // one sink, and ONE query fanned out to N sinks per micro-batch
+    // (foreachBatchFanOut). Same compiled YAML rules, same replayed
+    // file-source input => the alert MULTISETS must be identical (bag
+    // semantics: an event matching k rules appears k times), and equal to
+    // the alerts the planted events are written to fire.
     val rules = graft.compile.RuleCompiler.compileDir("src/test/resources/sigma")
     assert(rules.nonEmpty)
     val in = java.nio.file.Files.createTempDirectory("graft-s7-in").toString
@@ -108,8 +110,8 @@ class StreamingSpec extends SparkSpec {
       Seq(
         // fires cmdkey (event_id 1 + Image + CommandLine)
         """{"computer_name":"pc1","event_id":1,"host":"h1","uuid":"e-1","event_data":{"Image":"C:\\Windows\\System32\\cmdkey.exe","CommandLine":"cmdkey /list"}}""",
-        // fires lazagne
-        """{"computer_name":"pc2","event_id":1,"host":"h2","uuid":"e-2","event_data":{"Image":"C:\\tools\\lazagne.exe","CommandLine":"lazagne.exe all"}}""",
+        // fires lazagne (lsass access with every CallTrace part)
+        """{"computer_name":"pc2","event_id":10,"host":"h2","uuid":"e-2","event_data":{"TargetImage":"C:\\Windows\\System32\\lsass.exe","GrantedAccess":"0x1FFFFF","CallTrace":"C:\\\\Windows\\\\SYSTEM32\\\\ntdll.dll+1|C:\\\\Windows\\\\System32\\\\KERNELBASE.dll+2|_ctypes.pyd+3|python27.dll+4"}}""",
         // benign
         """{"computer_name":"pc3","event_id":1,"host":"h3","uuid":"e-3","event_data":{"Image":"C:\\Windows\\System32\\notepad.exe","CommandLine":"notepad"}}""")
         .mkString("\n").getBytes("UTF-8"))
@@ -120,9 +122,9 @@ class StreamingSpec extends SparkSpec {
         r.getAs[Row]("event").getAs[scala.collection.Seq[String]]("origin_ids").mkString(","),
         r.getAs[String]("computer_name"))
 
-    // shape 1: union plan into one sink
-    val q1 = AlertPipeline.alerts(fileSource, rules)
-      .writeStream.format("memory").queryName("s7_union")
+    // shape 1: one sink
+    val q1 = AlertPipeline.alertsMerged(fileSource, rules)
+      .writeStream.format("memory").queryName("s7_one_sink")
       .outputMode("append").trigger(
         org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     // shape 2: merged dispatch fanned out to two sinks per micro-batch
@@ -136,11 +138,13 @@ class StreamingSpec extends SparkSpec {
     try {
       q1.awaitTermination(60000)
       q2.awaitTermination(60000)
-      val unionAlerts = spark.table("s7_union").collect().map(key).toSeq.sorted
+      val oneSinkAlerts = spark.table("s7_one_sink").collect().map(key).toSeq.sorted
       val fanoutAlerts = collected.toArray(Array.empty[Row]).map(key).toSeq.sorted
-      assert(unionAlerts.nonEmpty, "planted events must fire")
-      assert(unionAlerts == fanoutAlerts,
-        s"shapes diverged: union=$unionAlerts fanout=$fanoutAlerts")
+      assert(oneSinkAlerts == Seq(
+        ("Cmdkey Cached Credentials Recon", "e-1", "pc1"),
+        ("Credential Dumping by LaZagne", "e-2", "pc2")), oneSinkAlerts.toString)
+      assert(oneSinkAlerts == fanoutAlerts,
+        s"shapes diverged: one sink=$oneSinkAlerts fanout=$fanoutAlerts")
       // the second sink of the fan-out saw the same batch
       assert(spark.read.parquet(sink1).count() == fanoutAlerts.size)
     } finally { q1.stop(); q2.stop() }
@@ -465,16 +469,20 @@ class StreamingSpec extends SparkSpec {
       plan.treeString)
     assert(plan.collectLeaves().count(_.isStreaming) == 1, plan.treeString)
 
-    // the same lines through the reference union shape, in batch. Event
-    // times on the files source are processing time, so they are checked
-    // for shape (start = end = time, non-null), not value.
+    // the same lines through the reference statement set (one rendered
+    // SELECT per rule, UNION ALL in SQL text), in batch. Event times on
+    // the files source are processing time, so they are checked for
+    // shape (start = end = time, non-null), not value.
     def canon(d: org.apache.spark.sql.DataFrame): Seq[String] =
       d.select(to_json(struct(col("computer_name"), col("host"),
         col("event").dropFields("start", "end", "time"), col("threat"), col("rule"))))
         .collect().map(_.getString(0)).sorted.toSeq
     val sink = spark.read.parquet(outDir)
-    val batch = AlertPipeline.alerts(AlertPipeline.parseJson(
-      spark.read.text(inDir.toString).withColumn("timestamp", current_timestamp())), rules)
+    AlertPipeline.parseJson(
+      spark.read.text(inDir.toString).withColumn("timestamp", current_timestamp()))
+      .createOrReplaceTempView("deployed_lines")
+    val batch = spark.sql(rules.map(graft.compile.RuleCompiler.renderSql(_, "deployed_lines"))
+      .mkString("\nUNION ALL\n"))
     val deployed = canon(sink)
     assert(deployed == canon(batch), s"deployed=$deployed")
     val multiAlerts = deployed.count(_.contains("\"m-1\""))
@@ -928,9 +936,10 @@ class StreamingSpec extends SparkSpec {
       .withColumn("event_data", struct(lit("UNKNOWN(1)").as("CallTrace")))
     val rule = TimeframeRules.TimeframeRule(
       ReferenceCorpus.directSyscall, "10 minutes", 1L, "computer_name")
-    val alerts = TimeframeRules.alerts(
-      src.withWatermark("timestamp", "5 seconds"), rule,
-      f => if (f == "CallTrace") col("event_data.CallTrace") else lit(null))
+    // directSyscall reads only event_id and CallTrace, so a one-field
+    // event_data struct is enough for rule_dispatch
+    val alerts = TimeframeRules.alertsBattery(
+      src.withWatermark("timestamp", "5 seconds"), Seq(rule))
     val q = alerts.writeStream.format("memory").queryName("tf_t2")
       .outputMode("append").start()
     try {

@@ -10,23 +10,27 @@ import graft.schema.Schemas
 
 /** The timeframe-rule battery (round 13): N windowed-count rules in ONE
   * stateful aggregation via rule_dispatch. Batch semantics are pinned
-  * equal to the per-rule [[TimeframeRules.alerts]] path (and the
-  * tf_battery_counts DuckDB oracle); streaming runs the battery as one
-  * query with ONE state operator — the scale story vs N queries. */
+  * equal to the union of the per-rule windowed GROUP BYs
+  * `RuleCompiler.renderTimeframeSql` renders (and the tf_battery_counts
+  * DuckDB oracle); streaming runs the battery as one query with ONE state
+  * operator — the scale story vs N queries. */
 class TimeframeBatterySpec extends SparkSpec {
 
   test("battery == union of per-rule timeframe alerts (batch, synth corpus)") {
     val src = Detection.nested(spark, "/root/testdata/sf0.001")
+    src.createOrReplaceTempView("tf_battery_corpus")
+    graft.functions.GraftFunctions.register(spark)
     val battery = Detection.tfBattery
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(to_json(struct(col("rule_name"), col("computer_name"),
-        col("host"), col("event")))).collect().map(_.getString(0)).toSet
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(to_json(struct(col("computer_name"), col("host"), col("event"),
+        col("threat"), col("rule")))).collect().map(_.getString(0)).sorted.toSeq
+    // the reference: each rule's rendered windowed GROUP BY, combined with
+    // UNION ALL in SQL text
+    val viaRendered = canon(spark.sql(battery
+      .map(graft.compile.RuleCompiler.renderTimeframeSql(_, "tf_battery_corpus"))
+      .mkString("\nUNION ALL\n")))
     val viaBattery = canon(TimeframeRules.alertsBattery(src, battery))
-    val viaPerRule = battery.map { r =>
-      canon(TimeframeRules.alerts(src, r)
-        .withColumn("rule_name", lit(r.base.name)))
-    }.reduce(_ union _)
-    assert(viaBattery.nonEmpty && viaBattery == viaPerRule)
+    assert(viaBattery.nonEmpty && viaBattery == viaRendered)
   }
 
   test("streaming battery: one query, ONE state operator, per-rid thresholds") {
@@ -263,8 +267,8 @@ class TimeframeBatterySpec extends SparkSpec {
     assert(out.schema("rule").dataType.asInstanceOf[StructType].fieldNames.toSeq
       == Seq("name", "author", "category", "severity", "description",
         "reference", "version", "source"))
-    // a battery alert's metadata structs are byte-equal to the stateless
-    // projection's for the same rule (both ride the same RuleDef fields);
+    // a battery alert's metadata structs are byte-equal to the ones the
+    // rule's rendered per-event SELECT builds from the same RuleDef fields;
     // use a rule that actually crossed its threshold at this SF
     val fired = out.select("rule_name").distinct().collect()
       .map(_.getString(0)).toSet
@@ -273,12 +277,15 @@ class TimeframeBatterySpec extends SparkSpec {
     val viaBattery = out.filter(col("rule_name") === r0.name)
       .select(to_json(col("threat")), to_json(col("rule")))
       .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    val viaStateless = AlertPipeline.ruleAlerts(src, r0)
+    src.createOrReplaceTempView("tf_shape_corpus")
+    def rendered(r: graft.rules.RuleDef) =
+      spark.sql(graft.compile.RuleCompiler.renderSql(r, "tf_shape_corpus"))
+    val viaRendered = rendered(r0)
       .select(to_json(col("threat")), to_json(col("rule")))
       .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(viaBattery.length == 1 && viaBattery == viaStateless)
-    // combined: the per-event side is the COMPLETE ruleAlerts row (plus the
-    // leading rule_name), no longer projected down to the event struct
+    assert(viaBattery.length == 1 && viaBattery == viaRendered)
+    // combined: the per-event side is the COMPLETE stateless alert row (plus
+    // the leading rule_name), no longer projected down to the event struct
     val laz = ReferenceCorpus.lazagne
     val combined = AlertPipeline.alertsCombined(src, Seq(laz), battery)
     assert(combined.columns.toSeq ==
@@ -288,10 +295,10 @@ class TimeframeBatterySpec extends SparkSpec {
         col("event"), col("threat"), col("rule"))))
         .collect().map(_.getString(0)).toSet
     val perEvent = canon(combined.filter(col("rule_name") === laz.name))
-    assert(perEvent.nonEmpty && perEvent == canon(AlertPipeline.ruleAlerts(src, laz)))
+    assert(perEvent.nonEmpty && perEvent == canon(rendered(laz)))
   }
 
-  test("hot key: origin_ids capped, count exact (batch, both paths)") {
+  test("hot key: origin_ids capped, count exact (batch battery)") {
     import graft.engine.AlertPipeline
     val n = 10
     val rows = (0 until n).map { i =>
@@ -303,16 +310,13 @@ class TimeframeBatterySpec extends SparkSpec {
     val rule = TimeframeRules.TimeframeRule(
       graft.rules.ReferenceCorpus.directSyscall, "24 hours", 2L, "computer_name")
     val cap = 4
-    for (df <- Seq(
-        TimeframeRules.alerts(src, rule, originIdsCap = cap),
-        TimeframeRules.alertsBattery(src, Seq(rule), originIdsCap = cap))) {
-      val r = df.select(col("event.count"), col("event.origin_ids")).collect()
-      assert(r.length == 1)
-      assert(r(0).getLong(0) == n.toLong) // count stays exact past the cap
-      assert(r(0).getSeq[String](1) == (0 until cap).map(i => f"u$i%02d"))
-    }
+    val r = TimeframeRules.alertsBattery(src, Seq(rule), originIdsCap = cap)
+      .select(col("event.count"), col("event.origin_ids")).collect()
+    assert(r.length == 1)
+    assert(r(0).getLong(0) == n.toLong) // count stays exact past the cap
+    assert(r(0).getSeq[String](1) == (0 until cap).map(i => f"u$i%02d"))
     // below the cap the array is the FULL sorted list (oracle compatibility)
-    val full = TimeframeRules.alerts(src, rule).select(col("event.origin_ids"))
+    val full = TimeframeRules.alertsBattery(src, Seq(rule)).select(col("event.origin_ids"))
       .collect()(0).getSeq[String](0)
     assert(full == (0 until n).map(i => f"u$i%02d"))
   }
